@@ -8,6 +8,7 @@ import org.apache.spark.sql.functions._
 
 import graft.ingest.{SarTextParser, XzIngest}
 import graft.meta.HeaderMeta
+import graft.model.SarLine
 import graft.ops.SarOps
 import graft.stats.DescribeStats
 
@@ -32,15 +33,6 @@ class SarService(spark: SparkSession, storageDir: String) {
   Files.createDirectories(Paths.get(storageDir))
   // concurrent: this layer backs a REST surface (parallel load/upload)
   private val cache = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-  // per-file row counts: known for free at upload, computed at most once
-  // for pre-existing files; keeps statistics() from re-running its whole
-  // pivot pipeline just to pick a describe engine
-  private val rowCounts = new java.util.concurrent.ConcurrentHashMap[String, Long]()
-
-  /** The stored file's row count, cached: upload knows it from the parse,
-    * anything else pays one count() on the (cached) parquet frame. */
-  private def fileRows(name: String): Long =
-    rowCounts.computeIfAbsent(validated(name), n => load(n).count())
 
   /** Storage-name guard mirroring the reference's _validate_file_name
     * (api/services.py:39,73-77): ^[A-Za-z0-9._-]+$, no leading dot.
@@ -55,17 +47,21 @@ class SarService(spark: SparkSession, storageDir: String) {
 
   /** Upload lifecycle (api/services.py:94-156): preprocess (xz → sadf-JSON
     * → text), eager parse, parquet materialization. */
-  def upload(path: String, name: String): FileInfo = {
-    val text = XzIngest.readSarFile(path)
-    val rows = SarTextParser.parseContent(text)
-    val ds = spark.createDataset(rows)
+  def upload(path: String, name: String): FileInfo =
+    store(parse(path), name)
+
+  private def parse(path: String): Seq[SarLine] =
+    SarTextParser.parseContent(XzIngest.readSarFile(path))
+
+  /** The store step both upload paths share: parquet write, then cache
+    * invalidation. */
+  private def store(rows: Seq[SarLine], name: String): FileInfo = {
     val target = s"$storageDir/${validated(name)}.parquet"
-    ds.write.mode("overwrite").parquet(target)
+    spark.createDataset(rows).write.mode("overwrite").parquet(target)
     // drop BOTH cache layers or a re-upload serves stale rows: our map
     // AND Spark's plan cache (InMemoryFileIndex matches by root path)
     Option(cache.remove(name)).foreach(_.unpersist())
     spark.catalog.refreshByPath(target)
-    rowCounts.put(name, rows.length.toLong)
     FileInfo(name, rows.length, rows.map(_.header).distinct)
   }
 
@@ -94,13 +90,20 @@ class SarService(spark: SparkSession, storageDir: String) {
     * header, not one Spark job per header in the file). */
   def headerDetail(name: String, aliasOrHeader: String): HeaderDetail = {
     val df = load(name)
+    mkDetail(df, resolveHeader(df, name, aliasOrHeader))
+  }
+
+  /** Alias-or-header resolution (J1/J2): an exact header of the file
+    * wins, otherwise the alias must map to one. */
+  private def resolveHeader(df: DataFrame, name: String,
+      aliasOrHeader: String): String = {
     val fileHeaders = SarOps.headers(df)
     val header =
       if (fileHeaders.contains(aliasOrHeader)) aliasOrHeader
       else HeaderMeta.aliasToHeader(aliasOrHeader, fileHeaders)
     require(fileHeaders.contains(header),
       s"header or alias '$aliasOrHeader' not found in $name")
-    mkDetail(df, header)
+    header
   }
 
   private def mkDetail(df: DataFrame, h: String): HeaderDetail = {
@@ -120,8 +123,7 @@ class SarService(spark: SparkSession, storageDir: String) {
       device: Option[String] = None,
       start: Option[Timestamp] = None, end: Option[Timestamp] = None,
       metrics: Seq[String] = Nil): DataFrame =
-    getTableUnordered(name, aliasOrHeader, device, start, end, metrics)
-      .orderBy("date")
+    getTableWithMeta(name, aliasOrHeader, device, start, end, metrics)._1
 
   /** getTable plus the resolved meta block (header, alias, effective
     * device) — what an HTTP data response reports back alongside the rows
@@ -135,28 +137,14 @@ class SarService(spark: SparkSession, storageDir: String) {
     (t.orderBy("date"), meta)
   }
 
-  /** getTable without the trailing date sort — for aggregation consumers
-    * (statistics) and bounded row probes, where a limit on top of the
-    * sorted frame would otherwise plan a full top-K sort instead of a
-    * bounded scan. */
-  private def getTableUnordered(name: String, aliasOrHeader: String,
-      device: Option[String] = None,
-      start: Option[Timestamp] = None, end: Option[Timestamp] = None,
-      metrics: Seq[String] = Nil): DataFrame =
-    getTableUnorderedWithMeta(name, aliasOrHeader, device, start, end,
-      metrics)._1
-
+  /** getTableWithMeta without the trailing date sort — for aggregation
+    * consumers (statistics), which discard row order anyway. */
   private def getTableUnorderedWithMeta(name: String, aliasOrHeader: String,
       device: Option[String] = None,
       start: Option[Timestamp] = None, end: Option[Timestamp] = None,
       metrics: Seq[String] = Nil): (DataFrame, TableMeta) = {
     val df = load(name)
-    val fileHeaders = SarOps.headers(df)
-    val header =
-      if (fileHeaders.contains(aliasOrHeader)) aliasOrHeader
-      else HeaderMeta.aliasToHeader(aliasOrHeader, fileHeaders)
-    require(fileHeaders.contains(header),
-      s"header or alias '$aliasOrHeader' not found in $name")
+    val header = resolveHeader(df, name, aliasOrHeader)
     val alias = HeaderMeta.alias(header)
     val scoped = HeaderMeta.isDeviceScoped(header)
 
@@ -225,7 +213,6 @@ class SarService(spark: SparkSession, storageDir: String) {
     } finally {
       // the cache entry dies even on a failed/partial delete — a stale
       // frame would keep serving a file that is partially gone on disk
-      rowCounts.remove(name)
       Option(cache.remove(name)).foreach(_.unpersist())
       if (existed) spark.catalog.refreshByPath(target.toString)
     }
@@ -293,18 +280,10 @@ class SarService(spark: SparkSession, storageDir: String) {
   def uploadWithConvention(path: String,
       uploadDate: java.time.LocalDate = java.time.LocalDate.now())
       : FileInfo = {
-    val text = XzIngest.readSarFile(path)
-    val rows = SarTextParser.parseContent(text)
+    val rows = parse(path)
     require(rows.nonEmpty, s"$path parsed to zero SAR rows")
-    val name = SarNaming.uploadName(rows.head.os_details,
-      uploadDate.toString)
-    val ds = spark.createDataset(rows)
-    val target = s"$storageDir/${validated(name)}.parquet"
-    ds.write.mode("overwrite").parquet(target)
-    Option(cache.remove(name)).foreach(_.unpersist())
-    spark.catalog.refreshByPath(target)
-    rowCounts.put(name, rows.length.toLong)
-    FileInfo(name, rows.length, rows.map(_.header).distinct)
+    store(rows, SarNaming.uploadName(rows.head.os_details,
+      uploadDate.toString))
   }
 
   /** J7: per-file restart markers for a multi-file view, gated by the
@@ -340,17 +319,9 @@ class SarService(spark: SparkSession, storageDir: String) {
     SarOps.insertRestartZeros(
       getTable(name, aliasOrHeader, device), "date", restarts(name))
 
-  /** Row-count threshold above which statistics() switches from the
-    * exact single-pass describe (percentile buffer = all distinct values
-    * on one reducer) to the fixed-size t-digest sketch. SAR tables are
-    * minutes-resolution — far below this — so the service stays exact
-    * for them; the switch exists for the 100 TB pooled/compare paths. */
-  val exactDescribeRowLimit: Long = 10_000_000L
-
   /** GET /files/{name}/statistics (api/main.py:303-331): describe() of the
-    * table — one aggregation pass. Engine picked by cardinality: exact
-    * quantiles below [[exactDescribeRowLimit]] rows, t-digest sketch
-    * (documented tolerance, fixed memory) above it. */
+    * table with exact pandas-style quantiles at any row count, like the
+    * reference's Polars describe() (see [[DescribeStats.describe]]). */
   def statistics(name: String, aliasOrHeader: String,
       device: Option[String] = None,
       start: Option[Timestamp] = None, end: Option[Timestamp] = None,
@@ -363,24 +334,10 @@ class SarService(spark: SparkSession, storageDir: String) {
       device: Option[String] = None,
       start: Option[Timestamp] = None, end: Option[Timestamp] = None,
       metrics: Seq[String] = Nil): (DataFrame, TableMeta) = {
-    // the UNORDERED table: aggregation discards order anyway, and the
-    // bounded probe below must not plan a top-K-by-date sort (limit over
-    // orderBy cannot drop the sort — only a bare limit is a cheap scan)
     val (table, meta) = getTableUnorderedWithMeta(name, aliasOrHeader,
       device, start, end, metrics)
     val cols = table.columns.filterNot(_ == "date").toSeq
-    // dispatch on the FILE's cached row count — an upper bound on the
-    // filtered/pivoted table (header slice, device filter and pivot only
-    // ever drop rows), so the common case decides with zero extra work.
-    // Only a file that is itself over the limit pays the bounded probe
-    // (≤ limit+1 rows scanned), since its filtered slice may still be
-    // small enough for the exact engine.
-    val small = fileRows(name) <= exactDescribeRowLimit ||
-      table.limit(exactDescribeRowLimit.toInt + 1).count() <=
-        exactDescribeRowLimit
-    val stats = if (small) DescribeStats.describe(table, cols)
-      else DescribeStats.describeTDigest(table, cols)
-    (stats, meta)
+    (DescribeStats.describe(table, cols), meta)
   }
 
   /** Metric documentation from the sar.1-derived dimension (S12). */

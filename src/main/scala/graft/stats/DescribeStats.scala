@@ -1,6 +1,6 @@
 package graft.stats
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** describe()-style summary statistics (reference G1: dia_compute_pl.py:
@@ -8,19 +8,19 @@ import org.apache.spark.sql.functions._
   *
   * Pandas semantics pinned (SURVEY §7.4.2): count, mean, sample std
   * (ddof=1), min, exact linearly-interpolated 25/50/75% quantiles, max —
-  * plus Polars' null_count. Three quantile engines share one output
-  * contract (metric, count, null_count, mean, std, min, p25, p50, p75,
-  * max; absent stats are SQL null):
-  *  - `describe` — built-in exact `percentile` in the SAME single
-  *    aggregation pass as the moments (one scan, map-side combine). Its
-  *    quantile buffer holds every distinct value on one reducer: ideal
-  *    for low-cardinality metrics, unusable on a 100 TB high-cardinality
-  *    column.
-  *  - `describeSorted` — exact quantiles via distributed spillable sort
-  *    + boundary-row selection (O(1) driver memory) at the cost of one
-  *    extra job per column.
-  *  - `describeApprox` — percentile_approx sketch (mergeable, bounded
-  *    memory, rank error ≤ 1/accuracy) when exactness is not required.
+  * plus Polars' null_count. Every engine shares one output contract
+  * (metric, count, null_count, mean, std, min, p25, p50, p75, max;
+  * absent stats are SQL null):
+  *  - `describe` — THE exact engine, and the only one the service calls:
+  *    moments in one aggregation, quantiles by distributed weighted-rank
+  *    selection over (value, count) pairs, bit-identical to Spark's
+  *    `percentile`. No task ever holds a column's full distinct-value
+  *    set, so it serves high-cardinality columns too.
+  *  - `describeBy` — the grouped exact form (one row per group key) on
+  *    Spark's own `percentile`.
+  *  - `describeApprox` / `describeTDigest` — single-pass sketch
+  *    quantiles (percentile_approx / t-digest) with bounded memory and a
+  *    published rank error, for callers that do not need exactness.
   */
 object DescribeStats {
 
@@ -41,18 +41,11 @@ object DescribeStats {
   }
 
   /** Single-pass describe where `quantileOf` supplies the per-column
-    * 25/50/75% aggregate expression.
+    * 25/50/75% aggregate expression — the sketch engines' shared body.
     *
-    * Deliberately NOT input-spread (r13, measured): the exact
-    * `percentile`'s cost is its value→count map, and a single-group
-    * aggregate merges every partial map in ONE final task — spreading a
-    * single-split scan just adds a corpus shuffle ahead of the same
-    * serial merge (measured 2.5 s → 3.2 s on the 600k-row column at
-    * sf0.1). High-cardinality columns belong to `describeSorted` /
-    * `describeApprox` by this object's own dispatch note; the sketch
-    * engines additionally must keep the input's own layout because
-    * their mergeable states shift estimates under a different merge
-    * order by more than the output rounding absorbs. */
+    * Deliberately NOT input-spread: the sketch engines' mergeable states
+    * shift estimates under a different merge order by more than the
+    * output rounding absorbs, so they keep the input's own layout. */
   private def aggDescribe(df: DataFrame, cols: Seq[String],
       quantileOf: Column => Column): DataFrame = {
     require(cols.nonEmpty, "describe needs at least one column")
@@ -186,17 +179,23 @@ object DescribeStats {
     * boundary-key selection), with no |distinct|-sized task anywhere.
     * The moments aggregate and the quantile selection run as
     * concurrent driver actions (guide §2.6 — each is a deterministic
-    * function of its own subplan), and the result assembles locally
-    * exactly like [[describeSorted]], which shares the same oracle. */
+    * function of its own subplan).
+    *
+    * Eager: both jobs run at call time, and the returned frame is a
+    * local one built on the driver from their |cols|-row results. */
   def describe(df: DataFrame, cols: Seq[String]): DataFrame = {
     require(cols.nonEmpty, "describe needs at least one column")
     val spark = df.sparkSession
     import spark.implicits._
-    import scala.concurrent.{Await, Future}
+    // blocking {}: both bodies park a pool thread for a whole Spark job;
+    // the marker lets the cores-sized global pool add threads, so
+    // concurrent service requests cannot starve it
+    import scala.concurrent.{Await, Future, blocking}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
     val aggs = cols.flatMap(c => momentAggs(c, None))
-    val mF = Future(df.agg(aggs.head, aggs.tail: _*).collect().head)
+    val mF = Future(blocking(
+      df.agg(aggs.head, aggs.tail: _*).collect().head))
     // (metric, value) → count for all columns in ONE scan; nulls are
     // dropped exactly as the percentile aggregate drops them. NOT
     // spread (measured): the explode feeds a map-side partial
@@ -211,7 +210,8 @@ object DescribeStats {
       .select(col("p.metric").as("metric"), col("p.v").as("v"))
       .filter(col("v").isNotNull)
       .groupBy("metric", "v").agg(count(lit(1)).as("cnt"))
-    val qF = Future(weightedQuantiles(pairs, Seq(0.25, 0.5, 0.75)))
+    val qF = Future(blocking(
+      weightedQuantiles(pairs, Seq(0.25, 0.5, 0.75))))
     val m = Await.result(mF, Duration.Inf)
     val quantiles = Await.result(qF, Duration.Inf)
     def opt(field: String): Option[Double] =
@@ -237,10 +237,9 @@ object DescribeStats {
   /** Per-group describe of one column — the grouped form of
     * [[describe]]: one row per group key, same moments and exact
     * percentiles. One hash aggregate keyed on the group column
-    * (map-side combined, shuffles only per-group partial states); the
-    * exact-percentile gather is per group, so the object doc's
-    * low-cardinality dispatch consideration applies to
-    * groups × distinct values, not the global column. */
+    * (map-side combined, shuffles only per-group partial states); Spark's
+    * exact `percentile` gathers each group's distinct values in one
+    * task, so its cost scales with the largest group's cardinality. */
   def describeBy(df: DataFrame, groupCol: String,
       valueCol: String): DataFrame = {
     val v = col(valueCol).cast("double")
@@ -272,10 +271,8 @@ object DescribeStats {
   /** t-digest describe: single-pass mergeable quantile sketch
     * (graft.expressions.TDigestQuantiles) in the same aggregation as the
     * moments. The buffer is ≈`compression` centroids regardless of
-    * cardinality — the safe default for 100 TB high-cardinality columns,
-    * where `describe`'s exact percentile would gather every distinct
-    * value on one reducer. Rank error O(1/compression) mid-stream,
-    * tighter near the tails. */
+    * cardinality, and the whole describe is one scan. Rank error
+    * O(1/compression) mid-stream, tighter near the tails. */
   def describeTDigest(df: DataFrame, cols: Seq[String],
       compression: Int = 200): DataFrame =
     aggDescribe(df, cols,
@@ -343,73 +340,4 @@ object DescribeStats {
     * (reference layout_helper_pl.py:236-267 display_averages). */
   def pooledStats(dfs: Seq[DataFrame], cols: Seq[String]): DataFrame =
     describe(dfs.reduce(_ unionByName _), cols)
-
-  /** Exact linear-interpolated quantiles via distributed sort +
-    * zipWithIndex row selection; None on empty input. Only the ≤2·|ps|
-    * boundary rows are collected. */
-  def exactQuantilesSorted(df: DataFrame, c: String,
-      ps: Seq[Double]): Seq[Option[Double]] = {
-    val sorted = df.select(col(c).cast("double").as("v"))
-      .na.drop().sort(col("v"))
-    val indexed = sorted.rdd.map(_.getDouble(0)).zipWithIndex()
-      .map { case (v, i) => (i, v) }
-    indexed.cache()
-    try {
-      val n = indexed.count()
-      if (n == 0) return ps.map(_ => None)
-      val targets = ps.flatMap { p =>
-        val k = (n - 1) * p
-        Seq(math.floor(k).toLong, math.ceil(k).toLong)
-      }.toSet
-      val picked = indexed.filter { case (i, _) => targets.contains(i) }
-        .collect().toMap
-      ps.map { p =>
-        val k = (n - 1) * p
-        val lo = math.floor(k).toLong
-        val hi = math.ceil(k).toLong
-        Some(picked(lo) + (k - lo) * (picked(hi) - picked(lo)))
-      }
-    } finally indexed.unpersist(blocking = false)
-  }
-
-  /** describe() with sort-based exact quantiles (see object doc). Output
-    * contract identical to `describe`, including SQL nulls for stats
-    * that do not exist (std of a single row, quantiles of no rows). */
-  def describeSorted(df: DataFrame, cols: Seq[String]): DataFrame = {
-    require(cols.nonEmpty, "describe needs at least one column")
-    val spark = df.sparkSession
-    import spark.implicits._
-    // the moment pass and each column's sort+select chain are
-    // INDEPENDENT actions — submit them concurrently so the later
-    // jobs' tasks back-fill the earlier jobs' straggler tails
-    // (optimization guide §2.6); each column's quantile values are a
-    // pure function of its own sorted data, so results are unchanged
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val aggs = cols.flatMap(c => momentAggs(c, None))
-    val mF = Future(df.agg(aggs.head, aggs.tail: _*).collect().head)
-    val qFs = cols.map(c =>
-      c -> Future(exactQuantilesSorted(df, c, Seq(0.25, 0.5, 0.75))))
-    val m = Await.result(mF, Duration.Inf)
-    val quantiles = qFs.map { case (c, f) =>
-      c -> Await.result(f, Duration.Inf) }.toMap
-    def opt(r: Row, field: String): Option[Double] =
-      if (r.isNullAt(r.fieldIndex(field))) None
-      else Some(r.get(r.fieldIndex(field)) match {
-        case l: java.lang.Long => l.toDouble
-        case d: java.lang.Double => d
-        case x => x.toString.toDouble
-      })
-    val rows = cols.map { c =>
-      val q = quantiles(c)
-      (c,
-        opt(m, s"${c}__count").getOrElse(0.0),
-        opt(m, s"${c}__null_count").getOrElse(0.0),
-        opt(m, s"${c}__mean"), opt(m, s"${c}__std"), opt(m, s"${c}__min"),
-        q(0), q(1), q(2), opt(m, s"${c}__max"))
-    }
-    rows.toDF("metric", "count", "null_count", "mean", "std", "min",
-      "p25", "p50", "p75", "max")
-  }
 }

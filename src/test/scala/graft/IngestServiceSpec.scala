@@ -3,7 +3,7 @@ package graft
 import java.nio.file.{Files, Paths}
 import scala.io.Source
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions.{col, date_format}
+import org.apache.spark.sql.functions.{array, col, date_format, lit, percentile}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ingest.{SadfJson, SarTextParser, XzIngest}
 import graft.service.SarService
@@ -348,6 +348,20 @@ class IngestServiceSpec extends AnyFunSuite {
     val stats = svc.statistics("sa_24h", "CPU")
     val usr = stats.collect().find(_.getString(0) == "%usr").get
     assert(usr.getDouble(1) == 2.0)
+    // the service is exact: every metric's quartiles equal Spark's
+    // exact `percentile` over the same section, to the last bit
+    val cpuTable = svc.getTable("sa_24h", "CPU")
+    val byMetric = stats.collect().map(r => r.getString(0) -> r).toMap
+    val metricCols = cpuTable.columns.filterNot(_ == "date")
+    assert(byMetric.keySet == metricCols.toSet)
+    for (m <- metricCols) {
+      val expect = cpuTable
+        .agg(percentile(col(s"`$m`").cast("double"),
+          array(lit(0.25), lit(0.5), lit(0.75))))
+        .collect().head.getSeq[Double](0)
+      for ((q, i) <- Seq("p25", "p50", "p75").zipWithIndex)
+        assert(byMetric(m).getAs[Double](q) == expect(i), s"$m $q")
+    }
 
     val csv = svc.statisticsCsv(Seq("CPU" -> stats))
     assert(csv.startsWith("CPU\nstatistic,"))

@@ -127,12 +127,9 @@ class SarOpsSpec extends AnyFunSuite {
   test("describe on an empty slice: count 0, null_count 0, null stats") {
     val li = graft.queries.Tables.load(spark, "/root/testdata/sf0.001", "lineitem")
       .filter("l_quantity < 0")
-    for (st <- Seq(DescribeStats.describe(li, Seq("l_quantity")),
-        DescribeStats.describeSorted(li, Seq("l_quantity")))) {
-      val r = st.collect().head
-      assert(r.getDouble(1) == 0.0 && r.getDouble(2) == 0.0)
-      assert(r.isNullAt(3) && r.isNullAt(6)) // mean, p25 are SQL null
-    }
+    val r = DescribeStats.describe(li, Seq("l_quantity")).collect().head
+    assert(r.getDouble(1) == 0.0 && r.getDouble(2) == 0.0)
+    assert(r.isNullAt(3) && r.isNullAt(6)) // mean, p25 are SQL null
   }
 
   test("describe quantiles are bit-identical to Spark's exact percentile") {
@@ -167,18 +164,6 @@ class SarOpsSpec extends AnyFunSuite {
     val eq = Seq.fill(50)(3.25).toDF("x")
     val r = DescribeStats.describe(eq, Seq("x")).collect().head
     assert((6 to 8).forall(r.getDouble(_) == 3.25))
-  }
-
-  test("describeSorted matches percentile-agg describe") {
-    val li = graft.queries.Tables.load(spark, "/root/testdata/sf0.001", "lineitem")
-    val cols = Seq("l_quantity", "l_extendedprice", "l_discount")
-    def asMap(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => r.getString(0) -> (1 to 9).map(r.getDouble).toSeq).toMap
-    val a = asMap(graft.stats.DescribeStats.describe(li, cols))
-    val b = asMap(graft.stats.DescribeStats.describeSorted(li, cols))
-    for (c <- cols; (x, y) <- a(c).zip(b(c)))
-      assert(math.abs(x - y) <= 1e-9 * math.max(1.0, math.abs(x)),
-        s"$c: $x vs $y")
   }
 
   test("dedup keep-first + argExtrema + minMaxMarkers") {

@@ -1,6 +1,11 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
+import org.apache.spark.GraftBusBridge
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
+  SparkListenerJobStart, SparkListenerStageCompleted}
 
 /** Benchmark main (driver contract): runs every registered query on
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line with per-query seconds.
@@ -18,8 +23,91 @@ package graft
   * query; and `queries_min` (best-of-runs) is reported alongside the
   * median so a spike that does slip through two passes is still visible
   * as median≫min rather than branding the query a code regression.
+  *
+  * Per-query profile (`"profile"`): every timed run is split into BUILD
+  * (the QueryDef closure — includes any eager driver-side actions the
+  * query performs while assembling its frame: counts, codebook
+  * collects, calibration reads) and EXEC (the noop-sink write), and a
+  * listener counts that run's jobs, stages, summed task seconds and
+  * shuffle read/write bytes. The row reported is the median-wall run's
+  * (a query that failed in any run has no row).
+  * `task_s ≪ wall` points at driver-side overhead (planning, codegen,
+  * job scheduling) rather than data-path work; the counts are
+  * host-independent, so a plan-shape regression shows through host
+  * drift.
+  *
+  * Environment: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS,
+  * SPARK_GRAFT_BENCH_RUNS (passes, default 3), SPARK_GRAFT_BENCH_ONLY
+  * (comma-separated query names), SPARK_GRAFT_BENCH_OUT (full-line
+  * file, default BENCH_FULL.json), SPARK_GRAFT_QPROF_JOBS=1 (one
+  * `[qprof-job]` line per Spark job of every timed run: callsite, wall,
+  * summed task time, task count — locates WHICH action inside a
+  * multi-job query burns the time its profile row reports).
   */
 object Bench {
+
+  /** One timed run: seconds (wall = build + exec; wall -1 marks a
+    * failure) plus the listener's counts over exactly that run. */
+  private final case class Run(wall: Double, build: Double, exec: Double,
+      jobs: Int, stages: Int, taskSec: Double, shufRead: Long,
+      shufWrite: Long)
+
+  /** Job/stage/task/shuffle counters, reset and read around each timed
+    * run; with `perJob` it also prints one `[qprof-job]` line per job. */
+  private final class Profiler(perJob: Boolean) extends SparkListener {
+    @volatile var query = ""
+    private val jobs = new AtomicInteger(0)
+    private val stages = new AtomicInteger(0)
+    private val taskTimeMs = new AtomicLong(0)
+    private val shufRead = new AtomicLong(0)
+    private val shufWrite = new AtomicLong(0)
+    private val jobStart = new ConcurrentHashMap[Int, (Long, String)]()
+    private val jobTask = new ConcurrentHashMap[Int, (Long, Long)]()
+    private val stageJob = new ConcurrentHashMap[Int, Int]()
+
+    def reset(): Unit = {
+      jobs.set(0); stages.set(0); taskTimeMs.set(0)
+      shufRead.set(0); shufWrite.set(0)
+    }
+    def snapshot(wall: Double, build: Double, exec: Double): Run =
+      Run(wall, build, exec, jobs.get, stages.get, taskTimeMs.get / 1e3,
+        shufRead.get, shufWrite.get)
+
+    override def onJobStart(j: SparkListenerJobStart): Unit = {
+      jobs.incrementAndGet()
+      if (perJob) {
+        val site = j.stageInfos.lastOption.map(_.name).getOrElse("?")
+        jobStart.put(j.jobId, (System.nanoTime(), site))
+        j.stageIds.foreach(s => stageJob.put(s, j.jobId))
+      }
+    }
+    override def onJobEnd(j: SparkListenerJobEnd): Unit =
+      if (perJob) {
+        val (t0, site) = jobStart.getOrDefault(j.jobId, (0L, "?"))
+        val (tt, nt) = jobTask.getOrDefault(j.jobId, (0L, 0L))
+        if (t0 > 0)
+          println(f"[qprof-job] $query%-32s #${j.jobId}%-4d " +
+            f"${(System.nanoTime() - t0) / 1e9}%7.2f s " +
+            f"task ${tt / 1e3}%7.2f s  n=$nt%-5d $site%s")
+      }
+    override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
+      stages.incrementAndGet()
+      val m = sc.stageInfo.taskMetrics
+      if (m != null) {
+        taskTimeMs.addAndGet(m.executorRunTime)
+        shufRead.addAndGet(m.shuffleReadMetrics.totalBytesRead)
+        shufWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
+        if (perJob) {
+          val jid = stageJob.getOrDefault(sc.stageInfo.stageId, -1)
+          if (jid >= 0)
+            jobTask.merge(jid,
+              (m.executorRunTime, sc.stageInfo.numTasks.toLong),
+              (a, b) => (a._1 + b._1, a._2 + b._2))
+        }
+      }
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -27,16 +115,31 @@ object Bench {
     // the canonical GraftSession config (AQE + scale-out initial
     // partition count) so the benched plans are the shipped plans
     val spark = GraftSession.get(cpus.toInt)
+    val sc = spark.sparkContext
+    val profiler = new Profiler(
+      sys.env.get("SPARK_GRAFT_QPROF_JOBS").contains("1"))
+    sc.addSparkListener(profiler)
 
-    def exec(name: String): Double = {
+    def exec(name: String): Run = {
       val fn = SparkEntry.queries(name) // lookup outside the timed region
+      // deterministic drain before resetting and before reading the
+      // counters: block until every already-posted event is delivered,
+      // so no late event of the previous run lands in this one (a
+      // fixed sleep raced late events under load)
+      GraftBusBridge.waitUntilListenerBusEmpty(sc)
+      profiler.query = name
+      profiler.reset()
       val t0 = System.nanoTime()
-      try {
-        fn(spark, sfDir).write.mode("overwrite").format("noop").save()
-        (System.nanoTime() - t0) / 1e9
+      val (wall, build, ex) = try {
+        val df = fn(spark, sfDir)
+        val t1 = System.nanoTime()
+        df.write.mode("overwrite").format("noop").save()
+        val t2 = System.nanoTime()
+        ((t2 - t0) / 1e9, (t1 - t0) / 1e9, (t2 - t1) / 1e9)
       } catch { case e: Throwable =>
         System.err.println(s"[bench] $name failed: ${e.getMessage}")
-        -1.0 // failure marker: never report a broken query as a timing
+        // failure marker: never report a broken query as a timing
+        (-1.0, -1.0, -1.0)
       } finally {
         // cold-run discipline (r9 ADVICE medium): chains persist
         // intermediates deliberately (e.g. the spans trio's shared
@@ -50,6 +153,8 @@ object Bench {
         // (*_indexed / *_amortized).
         spark.catalog.clearCache()
       }
+      GraftBusBridge.waitUntilListenerBusEmpty(sc)
+      profiler.snapshot(wall, build, ex)
     }
 
     exec("q1_agg") // warmup, not reported
@@ -63,24 +168,32 @@ object Bench {
       .map(_.name)
 
     // suite passes, alternating direction (see scaladoc)
-    val byPass: Seq[Map[String, Double]] = (0 until runs).map { p =>
+    val byPass: Seq[Map[String, Run]] = (0 until runs).map { p =>
       val order = if (p % 2 == 0) names else names.reverse
       order.map(n => n -> exec(n)).toMap
     }
-    val timings: Seq[(String, Seq[Double])] =
+    val timings: Seq[(String, Seq[Run])] =
       names.map(n => n -> byPass.map(_(n)))
 
     // any failed run marks the query -1 (a query that fails even once
     // is not a timing)
-    def stat(ts: Seq[Double], pick: Seq[Double] => Double): Double =
-      if (ts.exists(_ < 0)) -1.0 else pick(ts)
-    val medians = timings.map { case (n, ts) =>
-      n -> stat(ts, s => s.sorted.apply(s.length / 2)) }
-    val mins = timings.map { case (n, ts) => n -> stat(ts, _.min) }
+    def stat(rs: Seq[Run], pick: Seq[Double] => Double): Double =
+      if (rs.exists(_.wall < 0)) -1.0 else pick(rs.map(_.wall))
+    val medianRuns = timings.collect { case (n, rs) if !rs.exists(_.wall < 0) =>
+      n -> rs.sortBy(_.wall).apply(rs.length / 2) }
+    val medians = timings.map { case (n, rs) =>
+      n -> stat(rs, s => s.sorted.apply(s.length / 2)) }
+    val mins = timings.map { case (n, rs) => n -> stat(rs, _.min) }
 
     def toJson(kvs: Seq[(String, Double)]) =
       kvs.map { case (k, v) => "\"" + k + "\":" + v }
         .mkString("{", ",", "}")
+    def round3(s: Double): Double = math.round(s * 1000) / 1000.0
+    val profileJson = medianRuns.map { case (n, r) =>
+      s""""$n":{"build_s":${round3(r.build)},"exec_s":${round3(r.exec)},""" +
+        s""""jobs":${r.jobs},"stages":${r.stages},"task_s":${round3(r.taskSec)},""" +
+        s""""shuffle_read_bytes":${r.shufRead},"shuffle_write_bytes":${r.shufWrite}}"""
+    }.mkString("{", ",", "}")
     // failures stay visible per-query as -1 but must not subtract from
     // the headline total
     val total = medians.map(_._2).filter(_ >= 0).sum
@@ -89,12 +202,12 @@ object Bench {
     // build, was only visible by min/median forensics; with the raw
     // passes in the artifact the outlier is machine-readable)
     val passTotals = byPass
-      .map(m => m.values.filter(_ >= 0).sum)
+      .map(m => m.values.map(_.wall).filter(_ >= 0).sum)
       .mkString("[", ",", "]")
     val passesJson = byPass
-      .map(m => toJson(names.map(n => n -> m(n))))
+      .map(m => toJson(names.map(n => n -> m(n).wall)))
       .mkString("[", ",", "]")
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","n":$runs,${BenchUtil.commitJsonFields(compact = true)},"queries":${toJson(medians)},"queries_min":${toJson(mins)},"pass_totals":$passTotals,"passes":$passesJson,"sf":"$sfDir"}"""
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","n":$runs,${BenchUtil.commitJsonFields(compact = true)},"queries":${toJson(medians)},"queries_min":${toJson(mins)},"pass_totals":$passTotals,"passes":$passesJson,"profile":$profileJson,"sf":"$sfDir"}"""
     println(line)
     // the single-line contract output is also written to a file: with
     // 120+ queries the line runs past typical log-capture tail windows
@@ -108,7 +221,7 @@ object Bench {
     // shipped `parsed: null` (a headless JSON fragment). This second
     // line is ≤300 chars — it survives any tail window — and repeats
     // the headline fields (total seconds, pass/query counts, commit,
-    // sf); per-query medians/mins/passes stay in the full line above
+    // sf); per-query medians/mins/passes/profile stay in the full line above
     // and in the `queries_file` artifact. Nothing was removed from the
     // full line, so existing consumers are unchanged.
     println(s"""{"metric":"total","value":$total,"unit":"sec","n":$runs,"n_queries":${names.length},${BenchUtil.commitJsonFields(compact = true)},"pass_totals":$passTotals,"queries_file":"$outPath","sf":"$sfDir"}""")

@@ -89,8 +89,7 @@ object KneeBench {
       d -> spark.read.parquet(s"$d/embeddings.parquet").count()
     }.toMap
 
-    // stage-aggregated shuffle write bytes (the ShardBatchProfile
-    // machinery): wall time on a single host folds page-cache and
+    // stage-aggregated shuffle write bytes: wall time on a single host folds page-cache and
     // spill-I/O CONSTANTS into the exponent — the first r11 campaign
     // measured the same code at 4M in 910 s where r10's campaign took
     // 1133 s (the 8 M tier agreed to ±0.1%), a ±20% small-tier swing

@@ -8,9 +8,8 @@ object Verify {
   /** Quoted JSON string: backslash, quote, and ALL control chars (<0x20)
     * escaped — a tab or CR in builder-authored SQL would otherwise make
     * the driver's json.load fail and silently zero the round's
-    * correctness. Shared with [[VerifyOne]] so the two dumps can never
-    * disagree on escaping. */
-  private[graft] def jsonQuote(s: String): String = "\"" + s.flatMap {
+    * correctness. */
+  private def jsonQuote(s: String): String = "\"" + s.flatMap {
     case '"'  => "\\\""
     case '\\' => "\\\\"
     case '\n' => "\\n"
@@ -21,8 +20,9 @@ object Verify {
   } + "\""
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
-    // optional 3rd arg: comma-separated query names (local iteration
-    // only — the driver always dumps the full set)
+    // optional 3rd arg: comma-separated query names for local iteration
+    // (the correctness gate dumps the full set); diff the subset with
+    // tools/local_verify.py --no-run --only=<names>
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -39,7 +39,6 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    import Verify.jsonQuote
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${jsonQuote(k)}: ${jsonQuote(v)}" }
       .mkString("{", ",", "}")

@@ -1154,15 +1154,13 @@ object Dedup {
     * ever broadcasts or goes quadratic. */
   def cosineDupPairsShardedInt8(df: DataFrame, coarse: DataFrame,
       fine: DataFrame, idCol: String, vecCol: String, threshold: Double,
-      pCoarse: Int = 4, pFine: Int = 20, chunkSize: Int = 4096,
-      probeBatch: Int = 0): DataFrame = {
+      pCoarse: Int = 4, pFine: Int = 20,
+      chunkSize: Int = 4096): DataFrame = {
     require(pCoarse >= 1 && pFine >= 1, "probe counts must be >= 1")
-    // routing (coarse probe + CellTopK cell scoring) is the shared
-    // Similarity.shardedProbeRoutes — see its scaladoc for why the
-    // per-row shape is the measured default and the batched shape
-    // (probeBatch > 0) is the retained counterfactual (r10 A/B)
+    // routing (coarse probe + per-row CellTopK cell scoring) is the
+    // shared Similarity.shardedProbeRoutes
     val routed = Similarity.shardedProbeRoutes(df, coarse, fine, idCol,
-        vecCol, pCoarse, pFine, probeBatch)
+        vecCol, pCoarse, pFine)
       .select(col("__a").as("a"),
         when(col("cpos") === 0 && col("fpos") === 0, lit(0))
           .otherwise(lit(1)).as("pos"),

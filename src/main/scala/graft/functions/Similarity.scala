@@ -716,82 +716,27 @@ object Similarity {
     * columns `__a` (id), `cpos`, `cell`, `__p` (the int8 pack),
     * `fpos`, `flabel`.
     *
-    * BATCHED cell scoring — measured and REJECTED as the default (r10,
-    * VERDICT r9 item 4 / watch-item 1): the hypothesis was that each
-    * joined probe row materializes its cell's ENTIRE packed matrix
-    * (≤ maxK2 × dim doubles ≈ 2 MB at dim 256) through the post-join
-    * projection, making matrix bytes the routing stage's dominant
-    * per-row constant; the proposed fix groups probe rows into
-    * `probeBatch`-sized batches per cell (hash-salted sub-keys sized by
-    * a k-scale broadcast count; the groupBy's ClusteredDistribution
-    * (cell, __b) is satisfied by the repartition(cell)
-    * HashPartitioning, so batching adds no exchange of the probe
-    * volume) so one matrix serves a whole batch via a `transform`.
-    * The A/B (`ShardBatchProfile`, SCALE_r10_batch.json: 500k tier,
-    * shared codebooks, pCoarse=8 × pFine=64, min-of-runs campaigns)
-    * REFUTES the premise: shuffle write bytes come out the SAME in
-    * both shapes (the artifact holds the numbers — the matrix never
-    * rides an exchange either way) because the in-memory copy the
-    * hypothesis assumed does not exist — the join output REFERENCES
-    * the buffered build-side row (SMJ buffers one copy per cell per
-    * partition; the scoring projection reads `members` through that
-    * reference), so per-row cost was already just CellTopK's
-    * walk-bounded SCAN. Wall time shows no stable ordering across
-    * same-protocol campaigns — this tier's documented ±30–40 % host
-    * band dominates any shape effect (again: the artifact holds the
-    * measured values).
-    * With no byte win and no wall signal, the default stays the
-    * per-row shape (`probeBatch <= 0`): structurally simpler — no
-    * ObjectHashAggregate state (collect_list of ~n·pCoarse pack
-    * structs), no interpreted lambda shell, scoring stays inside
-    * whole-stage codegen. The batched shape stays behind the knob as
-    * the measured counterfactual and for geometries where a future
-    * join strategy does copy the build side (e.g. a broadcast fine
-    * layer). */
+    * Scoring stays per probe row, inside whole-stage codegen. A batched
+    * shape (probe rows grouped per cell, one matrix read per batch) was
+    * measured and rejected (SCALE_r10_batch.json): equal shuffle bytes
+    * — the join output references the buffered build-side row, so the
+    * matrix is never copied per row — and no stable wall-time signal
+    * within the tier's host noise. */
   private[graft] def shardedProbeRoutes(df: DataFrame, coarse: DataFrame,
       fine: DataFrame, idCol: String, vecCol: String, pCoarse: Int,
-      pFine: Int, probeBatch: Int = 0): DataFrame = {
+      pFine: Int): DataFrame = {
     val packedCells = packFineCells(fine)
-    val probes = assignTopK(df, coarse, idCol, vecCol, pCoarse)
+    assignTopK(df, coarse, idCol, vecCol, pCoarse)
       .select(col(idCol).as("__a"),
         graft.expressions.Int8VecPack.int8_pack(col(vecCol)).as("__p"),
         posexplode(col("probe_buckets")).as(Seq("cpos", "cell")))
       .withColumn("cell", col("cell").cast("int"))
-    if (probeBatch <= 0) {
-      probes.repartition(col("cell"))
-        .join(packedCells, Seq("cell"))
-        .select(col("__a"), col("cpos"), col("cell"), col("__p"),
-          posexplode(graft.expressions.CellTopK.cell_topk(
-            col("__p"), col("members"), col("subc"), pFine))
-            .as(Seq("fpos", "flabel")))
-    } else {
-      // per-cell batch count: k-scale (one short per occupied cell) —
-      // broadcast, so the salt assignment costs no exchange. An extra
-      // coarse-routing evaluation feeds this aggregate (column-pruned
-      // to the cell id — no pack, no CellTopK); coarse routing is
-      // broadcast compute, measured cheap post-two-level.
-      val counts = probes.groupBy("cell")
-        .agg(ceil(count(lit(1)).cast("double") / probeBatch).cast("int")
-          .as("__nb"))
-      probes.join(broadcast(counts), Seq("cell"))
-        .withColumn("__b",
-          pmod(xxhash64(col("__a")), col("__nb").cast("long")).cast("int"))
-        .repartition(col("cell"))
-        .groupBy("cell", "__b")
-        .agg(collect_list(struct(col("__a").as("a"), col("cpos").as("cp"),
-          col("__p").as("p"))).as("__qs"))
-        .join(packedCells, Seq("cell"))
-        .select(col("cell"),
-          explode(transform(col("__qs"), q => struct(
-            q.getField("a").as("a"), q.getField("cp").as("cp"),
-            q.getField("p").as("p"),
-            graft.expressions.CellTopK.cell_topk(q.getField("p"),
-              col("members"), col("subc"), pFine).as("ls"))))
-            .as("__q"))
-        .select(col("__q.a").as("__a"), col("__q.cp").as("cpos"),
-          col("cell"), col("__q.p").as("__p"),
-          posexplode(col("__q.ls")).as(Seq("fpos", "flabel")))
-    }
+      .repartition(col("cell"))
+      .join(packedCells, Seq("cell"))
+      .select(col("__a"), col("cpos"), col("cell"), col("__p"),
+        posexplode(graft.expressions.CellTopK.cell_topk(
+          col("__p"), col("members"), col("subc"), pFine))
+          .as(Seq("fpos", "flabel")))
   }
 
   /** Default IVF codebook size for an n-vector corpus: k ≈ √n, clamped

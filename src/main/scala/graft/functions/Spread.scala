@@ -57,13 +57,11 @@ object Spread {
     * coalescing). Scaling the width with estimated bytes keeps the
     * task-count tax proportional to the data while heavy-per-row
     * stages retain enough lanes; the 4·scanTasks floor preserves a
-    * real spread (≥4×) whenever the gate fires at all. Env-tunable for
-    * calibration; the default is measured at sf0.1 (see
-    * OPTIMIZATION_r14.md — the knee between q_pii_redact-style per-row
-    * heavy winners and q_ppl_buckets-style light chains). */
-  private[graft] def bytesPerSpreadPartition: Long =
-    sys.env.get("SPARK_GRAFT_SPREAD_PART_BYTES").map(_.toLong)
-      .getOrElse(131072L)
+    * real spread (≥4×) whenever the gate fires at all. The value is
+    * measured at sf0.1 (see OPTIMIZATION_r14.md — the knee between
+    * q_pii_redact-style per-row heavy winners and q_ppl_buckets-style
+    * light chains). */
+  private[graft] val bytesPerSpreadPartition: Long = 131072L
 
   /** `df` repartitioned for real parallelism when it is scan-shaped and
     * its estimated scan yields less than a quarter of the session's

@@ -231,9 +231,8 @@ class SarHttpServer(tenants: SarTenants, port: Int = 0,
                     (Vector.empty[Any], Vector.empty[Any])) {
                   case ((ok, bad), (fname, p)) =>
                     try {
-                      val fi = svc.upload(p.toString, fname)
-                      (ok :+ ListMap("name" -> fi.name, "rows" -> fi.rows,
-                        "headers" -> fi.headers), bad)
+                      (ok :+ ServicePayloads.fileInfo(
+                        svc.upload(p.toString, fname)), bad)
                     } catch { case e: Exception =>
                       (ok, bad :+ ListMap("file" -> fname,
                         "detail" -> String.valueOf(e.getMessage)))
@@ -254,9 +253,8 @@ class SarHttpServer(tenants: SarTenants, port: Int = 0,
               // large concurrent uploads would exhaust driver heap)
               java.nio.file.Files.copy(ex.getRequestBody, tmp,
                 java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-              val fi = tenants.forUser(user).upload(tmp.toString, name)
-              json(ex, 201, ListMap("name" -> fi.name, "rows" -> fi.rows,
-                "headers" -> fi.headers))
+              json(ex, 201, ServicePayloads.fileInfo(
+                tenants.forUser(user).upload(tmp.toString, name)))
             } finally java.nio.file.Files.deleteIfExists(tmp)
           case ("GET", List("files", name)) =>
             json(ex, 200, ServicePayloads.fileInfo(tenants.forUser(user), name))

@@ -174,9 +174,8 @@ class SarMcpServer(tenants: SarTenants, serverName: String = "graft-sar") {
           val tmp = java.nio.file.Files.createTempFile("graft_mcp", ".txt")
           try {
             java.nio.file.Files.writeString(tmp, req(args, "content"))
-            val fi = svc(args).upload(tmp.toString, req(args, "name"))
-            ListMap("name" -> fi.name, "rows" -> fi.rows,
-              "headers" -> fi.headers)
+            ServicePayloads.fileInfo(
+              svc(args).upload(tmp.toString, req(args, "name")))
           } finally java.nio.file.Files.deleteIfExists(tmp)
         }),
       ("delete_sar_file", "Delete an uploaded SAR file.",

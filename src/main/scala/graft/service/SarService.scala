@@ -367,18 +367,8 @@ class SarService(spark: SparkSession, storageDir: String) {
     * x-axis; `sequential` keeps real timestamps. */
   def compareTable(files: Seq[String], aliasOrHeader: String,
       device: Option[String] = None,
-      mode: String = "sequential"): DataFrame = {
-    require(files.nonEmpty, "no files selected")
-    require(mode == "sequential" || mode == "overlay", s"bad mode $mode")
-    val frames = files.map { f =>
-      getTable(f, aliasOrHeader, device).withColumn("file", lit(f))
-    }
-    val union = frames.reduce(_ unionByName _)
-    if (mode == "overlay")
-      SarOps.dayOverlayAlign(union, "date", "2000-01-01")
-        .orderBy("file", "aligned")
-    else union.orderBy("file", "date")
-  }
+      mode: String = "sequential"): DataFrame =
+    compareFrames(files, mode)(getTable(_, aliasOrHeader, device))
 
   /** compareTable with each file's own restart zero-rows inserted
     * (E2 × J7): the multi-file Data-tab contract — zero rows and chart
@@ -389,18 +379,26 @@ class SarService(spark: SparkSession, storageDir: String) {
   def compareTableWithRestarts(files: Seq[String], aliasOrHeader: String,
       device: Option[String] = None,
       mode: String = "sequential"): DataFrame = {
+    // resolved once, on the first file, after the argument checks
+    lazy val byFile = restartsByFile(files)
+    // zeros inserted BEFORE the identity column: insertRestartZeros
+    // fills every non-date column with 0.0, which must not touch the
+    // file label
+    compareFrames(files, mode) { f =>
+      val ts = byFile(f)
+      SarOps.insertRestartZeros(getTable(f, aliasOrHeader, device), "date", ts)
+    }
+  }
+
+  /** The compare tail both compare tables share: each file's frame
+    * tagged with a `file` identity column, union'd, then overlay-aligned
+    * or kept sequential and ordered. */
+  private def compareFrames(files: Seq[String], mode: String)(
+      frame: String => DataFrame): DataFrame = {
     require(files.nonEmpty, "no files selected")
     require(mode == "sequential" || mode == "overlay", s"bad mode $mode")
-    val byFile = restartsByFile(files)
-    val frames = files.map { f =>
-      // zeros inserted BEFORE the identity column: insertRestartZeros
-      // fills every non-date column with 0.0, which must not touch the
-      // file label
-      SarOps.insertRestartZeros(getTable(f, aliasOrHeader, device),
-          "date", byFile(f))
-        .withColumn("file", lit(f))
-    }
-    val union = frames.reduce(_ unionByName _)
+    val union = files.map(f => frame(f).withColumn("file", lit(f)))
+      .reduce(_ unionByName _)
     if (mode == "overlay")
       SarOps.dayOverlayAlign(union, "date", "2000-01-01")
         .orderBy("file", "aligned")
@@ -419,13 +417,11 @@ class SarService(spark: SparkSession, storageDir: String) {
     * columns), label-prefixed, blank-line separated
     * (dia_overview_pl.py:85-111). */
   def statisticsCsv(blocks: Seq[(String, DataFrame)]): String = {
-    val statNames = Seq("count", "null_count", "mean", "std", "min",
-      "25%", "50%", "75%", "max")
     val rendered = blocks.map { case (label, stats) =>
       val rows = stats.collect()
       val metricsCols = rows.map(_.getString(0))
       val header = ("statistic" +: metricsCols.toSeq).mkString(",")
-      val lines = statNames.zipWithIndex.map { case (sn, i) =>
+      val lines = ServicePayloads.statNames.zipWithIndex.map { case (sn, i) =>
         val vals = rows.map(r => if (r.isNullAt(i + 1)) "" else r.get(i + 1).toString)
         (sn +: vals.toSeq).mkString(",")
       }

@@ -25,10 +25,13 @@ private[service] object ServicePayloads {
         s"cannot parse timestamp '$s' (expected yyyy-MM-dd[ HH:mm:ss])")
     }
 
-  def fileInfo(svc: SarService, name: String): ListMap[String, Any] = {
-    val fi = svc.fileInfo(name)
+  /** `{name, rows, headers}`: the file-info payload, also the reply to
+    * every upload (HTTP PUT, each multipart part, MCP upload_sar_file). */
+  def fileInfo(fi: FileInfo): ListMap[String, Any] =
     ListMap("name" -> fi.name, "rows" -> fi.rows, "headers" -> fi.headers)
-  }
+
+  def fileInfo(svc: SarService, name: String): ListMap[String, Any] =
+    fileInfo(svc.fileInfo(name))
 
   private def detail(h: HeaderDetail): ListMap[String, Any] =
     ListMap("header" -> h.header, "alias" -> h.alias,

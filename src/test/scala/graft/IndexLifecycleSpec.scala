@@ -8,8 +8,7 @@ import graft.sources.IvfStore
 
 /** Round-10 lifecycle pins (VERDICT r9 items 2–5): the prebuilt-index
   * auto-dispatch (fingerprint-gated), the incremental sharded append,
-  * the targeted cell re-split, the batched cell-matrix routing, and
-  * the bounded span-frame registry.
+  * the targeted cell re-split, and the bounded span-frame registry.
   */
 class IndexLifecycleSpec extends AnyFunSuite {
 
@@ -46,33 +45,6 @@ class IndexLifecycleSpec extends AnyFunSuite {
       n = sc.statusTracker.getJobIdsForGroup(group).length
     }
     (out, n)
-  }
-
-  // ------------------------------------------------- batched routing
-  test("batched cell-matrix routing == per-row routing, route for route " +
-      "(tiny probeBatch forces many batches per cell)") {
-    val emb = plantedCorpus(2000)
-    val (coarse, fine) = Similarity.trainShardedCodebook(emb, "vec_id",
-      "embedding", targetBucket = 32)
-    def routes(batch: Int): Set[(Long, Int, Int, Int, Int)] =
-      Similarity.shardedProbeRoutes(emb, coarse, fine, "vec_id",
-          "embedding", pCoarse = 3, pFine = 3, probeBatch = batch)
-        .select(col("__a"), col("cpos"), col("cell"), col("fpos"),
-          col("flabel"))
-        .collect()
-        .map(r => (r.getLong(0), r.getInt(1), r.getInt(2), r.getInt(3),
-          r.getInt(4))).toSet
-    val perRow = routes(0)   // legacy shape (the A/B baseline)
-    val batched = routes(7)  // ~hundreds of batches per cell
-    assert(batched == perRow,
-      s"missing=${(perRow -- batched).size} extra=${(batched -- perRow).size}")
-    // and through the whole dedup engine: same pairs as the exact join
-    val exact = pairs(Dedup.cosineDupPairsExact(emb, "vec_id",
-      "embedding", 0.9).select("a", "b"))
-    val viaBatched = pairs(Dedup.cosineDupPairsShardedInt8(emb, coarse,
-      fine, "vec_id", "embedding", 0.9, pCoarse = 3, pFine = 3,
-      chunkSize = 8, probeBatch = 7).select("a", "b"))
-    assert(viaBatched == exact)
   }
 
   // ------------------------------------------------- auto-dispatch

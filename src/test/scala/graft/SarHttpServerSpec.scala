@@ -6,7 +6,7 @@ import scala.io.Source
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.service.{SarHttpServer, SarTenants}
+import graft.service.{SarHttpServer, SarMcpServer, SarTenants}
 
 /** Integration spec for the thin HTTP shell: a real server on an
   * ephemeral port, real requests, asserting the reference's response
@@ -60,6 +60,11 @@ class SarHttpServerSpec extends AnyFunSuite {
 
   private def delete(url: String, user: String = "alice"): Int =
     request("DELETE", url, user)._1
+
+  /** A JSON string literal (the escapes the shells' renderer applies). */
+  private def jsonString(s: String): String = "\"" + s
+    .replace("\\", "\\\\").replace("\"", "\\\"")
+    .replace("\n", "\\n").replace("\r", "\\r").replace("\t", "\\t") + "\""
 
   test("HTTP shell: files / data / statistics round-trip the service") {
     val base = Files.createTempDirectory("graft_http").toString
@@ -138,6 +143,14 @@ class SarHttpServerSpec extends AnyFunSuite {
       assert(get(s"$root/files", user = "bob")._2
         .contains("2026-07-01_bobhost_x"))
       assert(!get(s"$root/files")._2.contains("bobhost"))
+      // the same text re-uploaded under the same name through the MCP
+      // upload_sar_file tool replies with the PUT's exact payload
+      val viaMcp = new SarMcpServer(tenants).handleLine(
+        """{"jsonrpc":"2.0","id":1,"method":"tools/call","params":""" +
+          """{"name":"upload_sar_file","arguments":{"name":""" +
+          """"2026-07-01_bobhost_x","username":"bob","content":""" +
+          jsonString(resource("sa_24h.txt")) + "}}}").get
+      assert(viaMcp.contains(""""text":""" + jsonString(uploaded)), viaMcp)
 
       // admin cleanup is scoped to the CALLER's tenant by default — an
       // unauthenticated cross-tenant sweep must be an explicit opt-in

@@ -54,17 +54,11 @@ MAINS = {
     "src/main/scala/graft/Bench.scala": ["BENCH_FULL.json", "BENCH_*.json"],
     # the SHA stamp itself: metadata on every artifact, input to none
     "src/main/scala/graft/BenchUtil.scala": [],
-    "src/main/scala/graft/BenchOne.scala": [],
     "src/main/scala/graft/ScaleBench.scala": ["SCALE_r*_x5m.json",
                                               "SCALE_r*_sharded.json",
                                               "SCALE_r?.json"],
     "src/main/scala/graft/KneeBench.scala": ["SCALE_r*_knee*.json"],
     "src/main/scala/graft/ScaleGen.scala": ["SCALE_r*.json"],
-    "src/main/scala/graft/SaltProfile.scala": [],
-    "src/main/scala/graft/CosProfile.scala": [],
-    "src/main/scala/graft/QueryProfile.scala": [],
-    "src/main/scala/graft/ShardBatchProfile.scala": ["SCALE_r*_batch.json"],
-    "src/main/scala/graft/AppendProfile.scala": ["SCALE_r*_append.json"],
 }
 
 

@@ -6,7 +6,6 @@
 # Usage:
 #   tools/knee_protocol.sh gen        # generate the tB=48 tiers (+ x500k)
 #   tools/knee_protocol.sh run OUT    # run KneeBench -> OUT (e.g. SCALE_r11_knee.json)
-#   tools/knee_protocol.sh append OUT # run AppendProfile on x500k -> OUT
 #
 # r11 note: the r10 knee artifact carried a dirty SHA stamp (docs-only
 # dirt, but the gate couldn't prove that mechanically — VERDICT r10
@@ -123,7 +122,8 @@ case "${1:-}" in
       -cp "$CP" graft.ScaleGen scale/x4m 400000 4000000 32
     java -Xmx24g $ADD_OPENS -Dspark.ui.enabled=false \
       -cp "$CP" graft.ScaleGen scale/x8m 800000 8000000 64
-    # the AppendProfile tier (500k vectors — the r10 append campaign's)
+    # the x500k anchor tier (500k vectors) the run-top and run-r12/r13
+    # campaigns read
     java -Xmx24g $ADD_OPENS -Dspark.ui.enabled=false \
       -cp "$CP" graft.ScaleGen scale/x500k 50000 500000 32
     ;;
@@ -143,11 +143,6 @@ case "${1:-}" in
     SPARK_GRAFT_SCALE_RUNS=1 \
       sbt -batch "runMain graft.KneeBench $OUT --tb=48 scale/x500k scale/x4m scale/x8m"
     ;;
-  append)
-    OUT="${2:?usage: knee_protocol.sh append OUT.json}"
-    SPARK_GRAFT_SHUFFLE_CODEC=zstd SPARK_DRIVER_MEM=64g \
-      sbt -batch "runMain graft.AppendProfile $OUT scale/x500k"
-    ;;
   *)
-    echo "usage: $0 gen | run OUT.json | run-top OUT.json | append OUT.json" >&2; exit 1;;
+    echo "usage: $0 gen | run OUT.json | run-top OUT.json" >&2; exit 1;;
 esac

@@ -42,10 +42,6 @@ object SarOps {
       unwanted: Seq[String]): DataFrame =
     df.filter(!col(column).isin(unwanted: _*))
 
-  /** Distinct headers present in a file (reference pl_helpers2.py:212-213). */
-  def headers(df: DataFrame): Seq[String] =
-    df.select("header").distinct().collect().map(_.getString(0)).toSeq
-
   // ---- P4/P5: time ranges -------------------------------------------
 
   /** Closed-interval time filter (reference pl_helpers2.py:206-209). */

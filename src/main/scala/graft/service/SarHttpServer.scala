@@ -52,7 +52,10 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
   * (403). Without a SarAuth (engine-demo mode, the specs' default), the
   * `X-User` header selects the tenant as before and the user routes
   * are absent. Service-layer `require` failures surface as 400 +
-  * `{"detail": ...}`, matching FastAPI's error body shape.
+  * `{"detail": ...}`, matching FastAPI's error body shape; a read of a
+  * file the tenant does not store is 404; any other failure is a 500
+  * with a generic detail (the exception goes to the server log). JSON
+  * request bodies are capped at 1 MiB (413 beyond).
   *
   * SSO (server-to-server, api/main.py:78-143): pass `ssoSecret` to
   * enable `POST /sso/token` — the support platform, having
@@ -136,8 +139,9 @@ class SarHttpServer(tenants: SarTenants, port: Int = 0,
       }
     } catch {
       case e: HttpError => json(ex, e.status, err(e.detail))
+      case e: NoSuchStoredFile => json(ex, 404, err(e.getMessage))
       case e: IllegalArgumentException => json(ex, 400, err(e.getMessage))
-      case e: Exception => json(ex, 500, err(String.valueOf(e.getMessage)))
+      case e: Exception => json(ex, 500, err(internalError(ex, e)))
     } finally ex.close()
   }
 
@@ -233,9 +237,13 @@ class SarHttpServer(tenants: SarTenants, port: Int = 0,
                     try {
                       (ok :+ ServicePayloads.fileInfo(
                         svc.upload(p.toString, fname)), bad)
-                    } catch { case e: Exception =>
-                      (ok, bad :+ ListMap("file" -> fname,
-                        "detail" -> String.valueOf(e.getMessage)))
+                    } catch {
+                      case e: IllegalArgumentException =>
+                        (ok, bad :+ ListMap("file" -> fname,
+                          "detail" -> e.getMessage))
+                      case e: Exception =>
+                        (ok, bad :+ ListMap("file" -> fname,
+                          "detail" -> internalError(ex, e)))
                     }
                 }
                 val status = if (uploaded.isEmpty && errors.nonEmpty) 400
@@ -267,7 +275,7 @@ class SarHttpServer(tenants: SarTenants, port: Int = 0,
           case ("DELETE", List("files", name)) =>
             if (tenants.forUser(user).delete(name))
               json(ex, 200, ListMap("deleted" -> name))
-            else json(ex, 404, err(s"no stored file '$name'"))
+            else throw new NoSuchStoredFile(name)
           case ("GET", List("files", name, "data")) =>
             data(ex, tenants.forUser(user), name, q)
           case ("GET", List("files", name, "statistics")) =>
@@ -339,8 +347,22 @@ class SarHttpServer(tenants: SarTenants, port: Int = 0,
   // ---- JSON request bodies (chart routes are POST like the reference's;
   // FastAPI models map to plain field accessors here) -------------------
 
+  /** Chart and token bodies are under 1 KB; this cap applies before
+    * auth (POST /token reads a body unauthenticated). */
+  private val maxJsonBody = 1 << 20
+
   private def bodyJson(ex: HttpExchange): Map[String, Any] = {
-    val text = new String(ex.getRequestBody.readAllBytes(), UTF_8)
+    val in = ex.getRequestBody
+    val bytes = in.readNBytes(maxJsonBody + 1)
+    if (bytes.length > maxJsonBody) {
+      // discard, never buffer, up to 16 MiB more: closing a connection
+      // with unread bytes resets it before the client reads the 413
+      val sink = new Array[Byte](8192)
+      Iterator.continually(in.read(sink)).takeWhile(_ > 0).take(2048)
+        .foreach(_ => ())
+      throw HttpError(413, s"request body exceeds $maxJsonBody bytes")
+    }
+    val text = new String(bytes, UTF_8)
     require(text.nonEmpty, "request body must be a JSON object")
     JsonParse.parse(text) match {
       case m: Map[_, _] => m.asInstanceOf[Map[String, Any]]
@@ -431,6 +453,16 @@ class SarHttpServer(tenants: SarTenants, port: Int = 0,
     extends RuntimeException(detail)
 
   private def err(detail: String) = ListMap("detail" -> detail)
+
+  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
+
+  /** An unexpected failure's detail goes to the server log only; the
+    * client gets a generic text (exception messages carry storage
+    * paths). */
+  private def internalError(ex: HttpExchange, e: Exception): String = {
+    log.error(s"${ex.getRequestMethod} ${ex.getRequestURI.getPath} failed", e)
+    "internal server error"
+  }
 
   private def parseQuery(raw: String): Map[String, String] =
     Option(raw).getOrElse("").split("&").filter(_.contains("="))

@@ -3,6 +3,8 @@ package graft.service
 import java.nio.file.{Files, Paths}
 import java.sql.Timestamp
 
+import scala.collection.mutable
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -27,12 +29,55 @@ final case class TableMeta(header: String, alias: String,
 final case class HeaderDetail(header: String, alias: String,
     deviceScoped: Boolean, devices: Seq[String])
 
+/** A read named a file that is not in the caller's storage. */
+final class NoSuchStoredFile(name: String)
+    extends RuntimeException(s"no stored file '$name'")
+
+/** A stored file's cached frame and its fixed facts, built together on
+  * first use and dropped together. Restarts are in file order;
+  * `osDetails` is set when there are any. */
+private final class Cached(val frame: DataFrame) {
+  lazy val meta: FileMeta = {
+    import frame.sparkSession.implicits._
+    // one pass and no shuffle: as an aggregation this cost a cold read (the
+    // first after an upload) more than the per-request probes it replaced
+    val groups = frame.select("header", "data").as[(String, String)]
+      .mapPartitions(Cached.rowsPerDevice).collect()
+    val rs = SarOps.restartHeaders(frame)
+    val os = if (rs.isEmpty) None else Some(SarOps.osDetails(frame))
+    FileMeta(groups.map(_._3).sum, groups.map(_._1).distinct.toSeq.sorted,
+      groups.filter(_._2 != null).groupBy(_._1)
+        .map { case (h, gs) => h -> gs.map(_._2).distinct.sorted.toSeq },
+      os.fold(Seq.empty[Timestamp])(SarOps.parseRestartTimestamps(rs, _)), os)
+  }
+}
+
+private object Cached {
+  /** One partition's rows per (header, device): the device is the first
+    * data token, as toMetrics pops it, and null outside device-scoped
+    * headers. */
+  def rowsPerDevice(rows: Iterator[(String, String)])
+      : Iterator[(String, String, Long)] = {
+    val scoped = mutable.Map.empty[String, Boolean]
+    val n = mutable.Map.empty[(String, String), Long].withDefaultValue(0L)
+    rows.foreach { case (h, d) =>
+      n((h, if (scoped.getOrElseUpdate(h, HeaderMeta.isDeviceScoped(h)))
+        d.takeWhile(_ != ' ') else null)) += 1
+    }
+    n.iterator.map { case ((h, dev), c) => (h, dev, c) }
+  }
+}
+
+private final case class FileMeta(rows: Long, headers: Seq[String],
+    devices: Map[String, Seq[String]], restarts: Seq[Timestamp],
+    osDetails: Option[String])
+
 class SarService(spark: SparkSession, storageDir: String) {
   import spark.implicits._
 
   Files.createDirectories(Paths.get(storageDir))
   // concurrent: this layer backs a REST surface (parallel load/upload)
-  private val cache = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+  private val cache = new java.util.concurrent.ConcurrentHashMap[String, Cached]()
 
   /** Storage-name guard mirroring the reference's _validate_file_name
     * (api/services.py:39,73-77): ^[A-Za-z0-9._-]+$, no leading dot.
@@ -60,9 +105,9 @@ class SarService(spark: SparkSession, storageDir: String) {
     spark.createDataset(rows).write.mode("overwrite").parquet(target)
     // drop BOTH cache layers or a re-upload serves stale rows: our map
     // AND Spark's plan cache (InMemoryFileIndex matches by root path)
-    Option(cache.remove(name)).foreach(_.unpersist())
+    Option(cache.remove(name)).foreach(_.frame.unpersist())
     spark.catalog.refreshByPath(target)
-    FileInfo(name, rows.length, rows.map(_.header).distinct)
+    FileInfo(name, rows.length, rows.map(_.header).distinct.sorted)
   }
 
   def listFiles(): Seq[String] =
@@ -70,48 +115,52 @@ class SarService(spark: SparkSession, storageDir: String) {
       .filter(f => f.getName.endsWith(".parquet")).map(_.getName.stripSuffix(".parquet"))
       .toSeq.sorted
 
-  /** Parse-once load with in-memory caching (S4; Redis layer dropped). */
-  def load(name: String): DataFrame = cache.computeIfAbsent(validated(name),
-    _ => spark.read.parquet(s"$storageDir/$name.parquet").cache())
+  /** Parse-once load with in-memory caching (S4; Redis layer dropped).
+    * The one place a stored file is opened: a missing one is a
+    * [[NoSuchStoredFile]], not Spark's path error. */
+  private def entry(name: String): Cached =
+    cache.computeIfAbsent(validated(name), _ => {
+      val path = Paths.get(s"$storageDir/$name.parquet")
+      if (!Files.exists(path)) throw new NoSuchStoredFile(name)
+      new Cached(spark.read.parquet(path.toString).cache())
+    })
+
+  def load(name: String): DataFrame = entry(name).frame
 
   def fileInfo(name: String): FileInfo = {
-    val df = load(name)
-    FileInfo(name, df.count(), SarOps.headers(df))
+    val m = entry(name).meta
+    FileInfo(name, m.rows, m.headers)
   }
 
   def headerDetails(name: String): Seq[HeaderDetail] = {
-    val df = load(name)
-    SarOps.headers(df).map(mkDetail(df, _))
+    val m = entry(name).meta
+    m.headers.map(mkDetail(m, _))
   }
 
   /** Details for ONE header, alias accepted — resolved through the SAME
     * path as getTable, so any header string getTable accepts, this
-    * accepts (and it computes the sub-device distinct for that single
-    * header, not one Spark job per header in the file). */
+    * accepts. */
   def headerDetail(name: String, aliasOrHeader: String): HeaderDetail = {
-    val df = load(name)
-    mkDetail(df, resolveHeader(df, name, aliasOrHeader))
+    val m = entry(name).meta
+    mkDetail(m, resolveHeader(m, name, aliasOrHeader))
   }
 
   /** Alias-or-header resolution (J1/J2): an exact header of the file
     * wins, otherwise the alias must map to one. */
-  private def resolveHeader(df: DataFrame, name: String,
+  private def resolveHeader(m: FileMeta, name: String,
       aliasOrHeader: String): String = {
-    val fileHeaders = SarOps.headers(df)
     val header =
-      if (fileHeaders.contains(aliasOrHeader)) aliasOrHeader
-      else HeaderMeta.aliasToHeader(aliasOrHeader, fileHeaders)
-    require(fileHeaders.contains(header),
+      if (m.headers.contains(aliasOrHeader)) aliasOrHeader
+      else HeaderMeta.aliasToHeader(aliasOrHeader, m.headers)
+    require(m.headers.contains(header),
       s"header or alias '$aliasOrHeader' not found in $name")
     header
   }
 
-  private def mkDetail(df: DataFrame, h: String): HeaderDetail = {
+  private def mkDetail(m: FileMeta, h: String): HeaderDetail = {
     val scoped = HeaderMeta.isDeviceScoped(h)
-    val devices = if (scoped) {
-      val m = SarOps.toMetrics(SarOps.selectHeader(df, h), h, Some(true))
-      SarOps.sortDevices(SarOps.subDevices(m))
-    } else Nil
+    val devices =
+      if (scoped) SarOps.sortDevices(m.devices.getOrElse(h, Nil)) else Nil
     HeaderDetail(h, HeaderMeta.alias(h), scoped, devices)
   }
 
@@ -143,19 +192,19 @@ class SarService(spark: SparkSession, storageDir: String) {
       device: Option[String] = None,
       start: Option[Timestamp] = None, end: Option[Timestamp] = None,
       metrics: Seq[String] = Nil): (DataFrame, TableMeta) = {
-    val df = load(name)
-    val header = resolveHeader(df, name, aliasOrHeader)
+    val e = entry(name)
+    val header = resolveHeader(e.meta, name, aliasOrHeader)
     val alias = HeaderMeta.alias(header)
     val scoped = HeaderMeta.isDeviceScoped(header)
 
-    var m = SarOps.toMetrics(SarOps.selectHeader(df, header), header, Some(scoped))
+    var m = SarOps.toMetrics(SarOps.selectHeader(e.frame, header), header, Some(scoped))
     var effectiveDevice: Option[String] = None
     if (scoped) {
       // reference get_table uses frames[0]: CPU-like collapse to 'all',
       // other device sections default to the first device in plain sort
       // order; an explicit unknown device is an error
       // (api/services.py:283-307)
-      val devices = SarOps.subDevices(m).sorted
+      val devices = e.meta.devices.getOrElse(header, Nil)
       val dev = device match {
         case Some(d) =>
           require(devices.contains(d),
@@ -213,7 +262,7 @@ class SarService(spark: SparkSession, storageDir: String) {
     } finally {
       // the cache entry dies even on a failed/partial delete — a stale
       // frame would keep serving a file that is partially gone on disk
-      Option(cache.remove(name)).foreach(_.unpersist())
+      Option(cache.remove(name)).foreach(_.frame.unpersist())
       if (existed) spark.catalog.refreshByPath(target.toString)
     }
     existed
@@ -269,8 +318,7 @@ class SarService(spark: SparkSession, storageDir: String) {
 
   /** Restart (reboot) timestamps of a file — the engine-side data E4's
     * chart markers consume. */
-  def restarts(name: String): Seq[Timestamp] =
-    SarOps.restartTimestamps(load(name))
+  def restarts(name: String): Seq[Timestamp] = entry(name).meta.restarts
 
   /** S13 upload: store under the reference's rename convention
     * `<upload date>_<hostname>_<sar date>` derived from the parsed
@@ -296,21 +344,12 @@ class SarService(spark: SparkSession, storageDir: String) {
     * exactly its OWN markers, and only when its name matches its own
     * events' (hostname, date) — same outcome for convention-named
     * files, no cross-attribution ever. */
-  def restartsByFile(files: Seq[String]): Map[String, Seq[Timestamp]] = {
+  def restartsByFile(files: Seq[String]): Map[String, Seq[Timestamp]] =
     files.map { f =>
-      val df = load(f)
-      val rs = SarOps.restartHeaders(df)
-      val ts =
-        if (rs.isEmpty) Seq.empty[Timestamp]
-        else {
-          val od = SarOps.osDetails(df)
-          if (SarNaming.matchesFile(f, od))
-            SarOps.parseRestartTimestamps(rs, od)
-          else Seq.empty[Timestamp]
-        }
-      f -> ts
+      val m = entry(f).meta
+      f -> (if (m.osDetails.exists(SarNaming.matchesFile(f, _))) m.restarts
+        else Nil)
     }.toMap
-  }
 
   /** getTable with restart zero-rows inserted (E2) — the "Data tab"
     * variant whose stats include the inserted zeros (SURVEY §7.4.6). */
@@ -356,7 +395,7 @@ class SarService(spark: SparkSession, storageDir: String) {
     * semantics via set intersection). */
   def commonHeaders(files: Seq[String]): Seq[String] = {
     require(files.nonEmpty, "no files selected")
-    files.map(f => SarOps.headers(load(f)).toSet).reduce(_ intersect _)
+    files.map(entry(_).meta.headers.toSet).reduce(_ intersect _)
       .toSeq.sorted
   }
 

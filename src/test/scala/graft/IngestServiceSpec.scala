@@ -402,16 +402,25 @@ class IngestServiceSpec extends AnyFunSuite {
     val pooled = svc.pooledStatistics(Seq("sa_24h", "sa_24h_b"), "CPU")
     assert(pooled.collect().find(_.getString(0) == "%usr").get.getDouble(1) == 4.0)
 
-    // re-upload must serve the new content (both cache layers dropped)
+    // re-upload must serve the new content (both cache layers dropped,
+    // the file's metadata record with the frame)
     val info1 = svc.fileInfo("sa_24h")
     svc.load("sa_24h").count() // materialize the cache
+    def cpuDevices = svc.headerDetail("sa_24h", "CPU").devices
+    def restartStrings = svc.restarts("sa_24h").map(_.toString)
+    assert(cpuDevices == Seq("all", "0", "1"))
+    assert(restartStrings == Seq("2023-06-05 00:15:30.0"))
     val up3 = Files.createTempFile("sa_up3", ".txt")
     Files.writeString(up3, resource("sa_ampm.txt"))
     svc.upload(up3.toString, "sa_24h")
     val info2 = svc.fileInfo("sa_24h")
     assert(info2.rows != info1.rows &&
       info2.headers.contains("%usr %idle"))
+    assert(cpuDevices == Seq("all"))
+    assert(restartStrings.isEmpty)
     svc.upload(upload.toString, "sa_24h") // restore for later assertions
+    assert(cpuDevices == Seq("all", "0", "1"))
+    assert(restartStrings == Seq("2023-06-05 00:15:30.0"))
 
     // §2.11 y-range + S12 metric docs
     val Some((lo, hi)) = svc.yRange("sa_24h", "CPU")
@@ -434,5 +443,62 @@ class IngestServiceSpec extends AnyFunSuite {
     assert(withZeros.count() == 3)
     assert(withZeros.filter("date = timestamp'2023-06-05 00:15:30'")
       .collect().head.getFloat(1) == 0.0f)
+  }
+
+  test("service: metadata reads on a cached file launch no Spark jobs") {
+    import org.apache.spark.GraftBusBridge
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val storage = Files.createTempDirectory("graft_meta").toString
+    val svc = new SarService(spark, storage)
+    val up = Files.createTempFile("sa_meta", ".txt")
+    Files.writeString(up, resource("sa_24h.txt"))
+    val named = svc.uploadWithConvention(up.toString,
+      java.time.LocalDate.parse("2026-08-12")).name
+    svc.upload(up.toString, "plain")
+    val files = Seq(named, "plain")
+    files.foreach(svc.fileInfo) // cold: loads each frame and its record
+
+    val sc = spark.sparkContext
+    val group = "graft-meta-reads"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(
+            _.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    GraftBusBridge.waitUntilListenerBusEmpty(sc)
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "metadata reads")
+    try {
+      val info = svc.fileInfo(named)
+      val details = svc.headerDetails(named)
+      val cpu = svc.headerDetail(named, "CPU")
+      val restarts = svc.restarts(named)
+      val byFile = svc.restartsByFile(files)
+      val common = svc.commonHeaders(files)
+      val (_, meta) = svc.getTableWithMeta(named, "Block Devices")
+      GraftBusBridge.waitUntilListenerBusEmpty(sc)
+      assert(jobs.get == 0)
+
+      // header lists are sorted, the same order on every run
+      assert(info.headers == Seq(
+        "%usr %nice %sys %iowait %steal %irq %soft %guest %gnice %idle",
+        "fch_rxf/s fch_txf/s fch_rxw/s fch_txw/s",
+        "kbmemfree kbavail kbmemused %memused kbbuffers kbcached kbcommit " +
+          "%commit kbactive kbinact kbdirty",
+        "proc/s cswch/s",
+        "tps rkB/s wkB/s areq-sz aqu-sz await %util"))
+      assert(details.map(_.header) == info.headers)
+      assert(common == info.headers)
+      assert(cpu.devices == Seq("all", "0", "1"))
+      assert(restarts.map(_.toString) == Seq("2023-06-05 00:15:30.0"))
+      // the convention-named file shows its restart, the plain one none
+      assert(byFile == Map(named -> restarts, "plain" -> Nil))
+      assert(meta.device.contains("dev8-0"))
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
   }
 }

@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 import scala.io.Source
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
@@ -521,6 +522,55 @@ class SarHttpServerSpec extends AnyFunSuite {
       // naming yourself is fine
       assert(send("POST", s"$root/admin/cleanup?days=30&username=alice",
         Array.emptyByteArray)._1 == 200)
+    } finally server.stop()
+  }
+
+  test("unknown stored file is a 404; other failures a generic 500") {
+    val base = Files.createTempDirectory("graft_errors").toString
+    val tenants = new SarTenants(spark, base)
+    val up = Files.createTempFile("sa_err", ".txt")
+    Files.writeString(up, resource("sa_24h.txt"))
+    tenants.forUser("alice").upload(up.toString, "broken")
+    val server = new SarHttpServer(tenants)
+    val port = server.start()
+    val root = s"http://localhost:$port/api/v1"
+    try {
+      val notFound = """{"detail":"no stored file 'nosuch'"}"""
+      for (path <- Seq("/files/nosuch", "/files/nosuch/headers",
+          "/files/nosuch/data?header=CPU",
+          "/files/nosuch/statistics?header=CPU"))
+        assert(get(root + path) == (404, notFound, "application/json"), path)
+      assert(send("POST", s"$root/charts/single",
+        """{"file":"nosuch","header":"CPU"}""".getBytes("UTF-8")) ==
+        (404, notFound))
+
+      // a corrupt stored parquet fails inside Spark: the body must not
+      // echo the exception, which names the storage directory
+      val dir = java.nio.file.Paths.get(base, "alice", "broken.parquet")
+      val parts = scala.util.Using.resource(Files.list(dir)) { ps =>
+        ps.iterator().asScala.filter(_.getFileName.toString
+          .startsWith("part-")).toList
+      }
+      parts.foreach(Files.write(_, "not parquet".getBytes("UTF-8")))
+      val (s, body, _) = get(s"$root/files/broken")
+      assert(s == 500 && body == """{"detail":"internal server error"}""")
+    } finally server.stop()
+  }
+
+  test("JSON request bodies are capped at 1 MiB before auth") {
+    import graft.service.SarAuth
+    val base = Files.createTempDirectory("graft_cap").toString
+    val auth = new SarAuth(spark, base, secret = "spec-secret")
+    auth.ensureUser("alice", "alicepw")
+    val server = new SarHttpServer(new SarTenants(spark, base),
+      auth = Some(auth))
+    val port = server.start()
+    def login(body: String): Int = request("POST",
+      s"http://localhost:$port/api/v1/token", "x", body.getBytes("UTF-8"))._1
+    try {
+      assert(login("""{"username":"alice","password":"""" +
+        "x" * (2 << 20) + "\"}") == 413)
+      assert(login("""{"username":"alice","password":"alicepw"}""") == 200)
     } finally server.stop()
   }
 }

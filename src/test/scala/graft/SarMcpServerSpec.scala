@@ -68,6 +68,11 @@ class SarMcpServerSpec extends AnyFunSuite {
       .contains("""\"files\":[]""")) // default tenant sees nothing
     assert(call(6, "get_file_info", """{"name":"day1","username":"alice"}""")
       .contains("""\"name\":\"day1\""""))
+    // an unknown stored file is a tool error naming the file, as HTTP's 404
+    val missing = call(18, "get_file_info",
+      """{"name":"nosuch","username":"alice"}""")
+    assert(missing.contains(""""isError":true""") &&
+      missing.contains(""""text":"no stored file 'nosuch'""""))
     val hd = call(7, "get_header_details",
       """{"name":"day1","header":"CPU","username":"alice"}""")
     assert(hd.contains("""\"alias\":\"CPU\"""") &&

@@ -189,7 +189,8 @@ object ScaleBench {
         // OUTSIDE the timed region:
         //   1. chains persist() intermediates and (correctly) never
         //      unpersist — the returned frame still references them;
-        //      only a driver GC lets ContextCleaner reclaim. Worse,
+        //      the CacheManager keeps them until `unpersist` or
+        //      `clearCache()`, driver GC or not. Worse, the
         //      CacheManager matches canonicalized plans, so pass 2 of
         //      a chain silently REUSES pass 1's blocks — min-of-runs
         //      would time a cache-warmed pass, not the chain.

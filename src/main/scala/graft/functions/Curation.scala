@@ -351,9 +351,10 @@ object Curation {
     // frame and persist it across both executions (doc-scale,
     // ~16 B/row — the fingerprint-frame rule; never the raw corpus).
     // The offset take() is the serial materializing action, so no
-    // sibling-stage race exists; the ContextCleaner reclaims the
-    // blocks with the dropped result (the klTerms contract), and the
-    // bench's cold-run clearCache() evicts between runs.
+    // sibling-stage race exists. The CacheManager keeps the blocks
+    // until `unpersist` or `clearCache()` — dropping the result does
+    // not release them (the klTerms contract); the bench's cold-run
+    // clearCache() evicts between runs.
     val narrow = docs.select(col(idCol), cost.cast("long").as("__c"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val (withCum, _) = withRunningCost(narrow, idCol, col("__c"))
@@ -595,8 +596,9 @@ object Curation {
     // the returned assignment plan; without a persist each one re-runs
     // the caller's whole scoring chain (q_ppl_buckets re-trained and
     // re-scored its LM per action — r14, guide §5). Persisted
-    // MEMORY_AND_DISK; released by ContextCleaner when the result frame
-    // drops (the klTerms contract — the returned plan still reads it).
+    // MEMORY_AND_DISK and kept by the CacheManager until `unpersist` or
+    // `clearCache()`, even after the result frame drops (the klTerms
+    // contract — the returned plan still reads it).
     val scored = docs.filter(col(scoreCol).isNotNull)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val nb = spark.sessionState.conf.numShufflePartitions

@@ -3,6 +3,8 @@ package graft.functions
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.Scoped
+
 /** Benchmark decontamination — the training-pipeline step that flags
   * corpus documents overlapping a held-out evaluation set (the GPT-3
   * appendix-C / "Documenting contamination" procedure: word n-gram
@@ -152,8 +154,8 @@ object Decontam {
     * and [[klReportBy]] (keyed on `__g`): per-key token counts from
     * both corpora full-outer-joined — null-SAFE on the group key, so
     * a null group is measured, not silently dropped — zeros
-    * coalesced, and PERSISTED (both consumers aggregate it twice; the
-    * LangModel.trainUnigram materialization rationale). ONE copy of
+    * coalesced. Every consumer aggregates it twice and persists it
+    * (the LangModel.trainUnigram materialization rationale). ONE copy of
     * the chain — a tokenizer or smoothing tweak applied to one
     * consumer cannot diverge the other. */
   private def vocabUnion(p: DataFrame, q: DataFrame, textCol: String,
@@ -170,19 +172,17 @@ object Decontam {
     }
     val a = cnts(p, "cp")
     val b = cnts(q, "cq")
-    val joined =
-      if (grouped)
-        a.join(b, a("__g") <=> b("__g") && a("tok") === b("tok"),
-            "full_outer")
-          .select(coalesce(a("__g"), b("__g")).as("__g"),
-            coalesce(a("tok"), b("tok")).as("tok"),
-            coalesce(a("cp"), lit(0L)).as("cp"),
-            coalesce(b("cq"), lit(0L)).as("cq"))
-      else
-        a.join(b, Seq("tok"), "full_outer")
-          .select(col("tok"), coalesce(col("cp"), lit(0L)).as("cp"),
-            coalesce(col("cq"), lit(0L)).as("cq"))
-    joined.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    if (grouped)
+      a.join(b, a("__g") <=> b("__g") && a("tok") === b("tok"),
+          "full_outer")
+        .select(coalesce(a("__g"), b("__g")).as("__g"),
+          coalesce(a("tok"), b("tok")).as("tok"),
+          coalesce(a("cp"), lit(0L)).as("cp"),
+          coalesce(b("cq"), lit(0L)).as("cq"))
+    else
+      a.join(b, Seq("tok"), "full_outer")
+        .select(col("tok"), coalesce(col("cp"), lit(0L)).as("cp"),
+          coalesce(col("cq"), lit(0L)).as("cq"))
   }
 
   /** Term chain over an already-built [[vocabUnion]] frame — the ONE
@@ -201,13 +201,15 @@ object Decontam {
 
   /** NOTE the persist lifecycle: the returned per-token frame is built
     * on a PERSISTED union-vocab intermediate (it is scanned twice
-    * inside the one returned plan — totals + terms), which stays
-    * cached until the ContextCleaner collects the dropped frame. A
-    * long-lived monitor that only needs the aggregate should call
-    * [[tokenKlReport]] / [[klReportBy]] instead — both evaluate
-    * eagerly and release the intermediate before returning. */
+    * inside the one returned plan — totals + terms), which Spark's
+    * CacheManager keeps until `unpersist` or `clearCache()` — dropping
+    * the returned frame does not release it. A long-lived monitor that
+    * only needs the aggregate should call [[tokenKlReport]] /
+    * [[klReportBy]] instead — both evaluate eagerly and release the
+    * intermediate before returning. */
   def klTerms(p: DataFrame, q: DataFrame, textCol: String): DataFrame =
-    klTermsOn(vocabUnion(p, q, textCol, grouped = false))
+    klTermsOn(vocabUnion(p, q, textCol, grouped = false)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
   /** Corpus-overlap report: exact Jaccard similarity of the two
     * corpora's distinct n-gram shingle SETS plus the two CONTAINMENT
@@ -281,8 +283,7 @@ object Decontam {
       .sortWithinPartitions("v")
       .as[(Double, Long, Long)]
       .rdd
-    sortedRdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Scoped(sortedRdd) {
       val subs = sortedRdd.mapPartitionsWithIndex { (idx, it) =>
         var a = 0L; var b = 0L
         it.foreach { case (_, ca, cb) => a += ca; b += cb }
@@ -312,7 +313,7 @@ object Decontam {
         if (any) Iterator.single(best) else Iterator.empty
       }.collect().max
       Seq((na, nb, ks)).toDF("n_p", "n_q", "ks")
-    } finally { sortedRdd.unpersist(blocking = false); () }
+    }
   }
 
   /** One micro-nat KL term: p̂·(ln p̂ − ln q̂) on add-one rationals,
@@ -335,7 +336,7 @@ object Decontam {
       textCol: String): DataFrame = {
     val spark = p.sparkSession
     val u = vocabUnion(p, q, textCol, grouped = false)
-    try {
+    Scoped(u) {
       val agg = klTermsOn(u)
         .agg(count(lit(1)).as("n_vocab"),
           sum(col("cp")).as("np"), sum(col("cq")).as("nq"),
@@ -344,7 +345,7 @@ object Decontam {
       // row passthrough, not typed re-extraction: empty-vocab input
       // yields NULL sums, which must survive as NULLs
       spark.createDataFrame(java.util.Arrays.asList(agg.head()), agg.schema)
-    } finally u.unpersist(blocking = false)
+    }
   }
 
   /** Per-group drift: [[tokenKlReport]] computed independently inside
@@ -373,11 +374,11 @@ object Decontam {
       p.select(col(groupCol).as("__g"), col(textCol)),
       q.select(col(groupCol).as("__g"), col(textCol)),
       textCol, grouped = true)
-    try {
+    Scoped(u) {
       val report = klReportOn(u, groupCol)
       spark.createDataFrame(
         java.util.Arrays.asList(report.collect(): _*), report.schema)
-    } finally u.unpersist(blocking = false)
+    }
   }
 
   /** Grouped report plan over an already-built grouped [[vocabUnion]]

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Scoped
+
 /** Deduplication operators for training-data pipelines: exact (hash
   * groupBy), MinHash+LSH banding, SimHash, and exact n-gram Jaccard.
   *
@@ -263,8 +265,8 @@ object Dedup {
     // blocks recompute through lineage on executor loss instead of
     // failing the job, and repeated calls over the SAME corpus reuse
     // the entry via CacheManager plan-matching (one entry per distinct
-    // corpus; spark.catalog.clearCache() evicts). The ContextCleaner
-    // reclaims blocks once unreferenced. jaccardPairs stays
+    // corpus; spark.catalog.clearCache() evicts — dropping the result
+    // does not, the CacheManager holds the entry). jaccardPairs stays
     // unmaterialized because its two branches are the IDENTICAL
     // subplan, which ReuseExchange already computes once — here the
     // four branches differ, so exchange reuse cannot share them.
@@ -464,8 +466,7 @@ object Dedup {
       slices: Int = 16): (Double, Double) = {
     val p = 1.0 / slices
     val sliceSh = sizedSliceShingles(df, textCol, idCol, n, slices)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Scoped(sliceSh) {
       val freqLeg = sliceSh.groupBy("sh").agg(count(lit(1)).as("c"))
         .agg(coalesce(sum(col("c")), lit(0L)).cast("double").as("v1"),
           coalesce(sum(col("c") * col("c")), lit(0L)).cast("double")
@@ -512,7 +513,7 @@ object Dedup {
       val (cand, qual) = legs("dens")
       val density = if (cand == 0.0) 0.0 else qual / cand
       (blowup, density)
-    } finally sliceSh.unpersist()
+    }
   }
 
   /** The dispatch decision alone — package-visible so specs can assert
@@ -1891,12 +1892,12 @@ object Dedup {
     *
     * Persist lifecycle: that fingerprint frame is scanned three times
     * inside the ONE returned plan (keys + both verify sides), so it
-    * stays pinned until the ContextCleaner collects the dropped result
-    * frame — the [[Decontam.klTerms]] contract. The result is
-    * pair-scale, so no eager-release wrapper exists; a long-lived loop
-    * that calls this repeatedly should fully consume each result and
-    * drop the reference (or `spark.catalog.clearCache()` between
-    * snapshots).
+    * stays pinned in the CacheManager until `unpersist` or
+    * `clearCache()` — dropping the result frame does not release it
+    * (the [[Decontam.klTerms]] contract). The result is pair-scale, so
+    * no eager-release wrapper exists; a long-lived loop that calls this
+    * repeatedly should `spark.catalog.clearCache()` between
+    * snapshots.
     */
   /** [[simhashNearDupPairs]] with the block parameterization chosen by
     * measured corpus size — the dispatch the scaladoc below prescribes,

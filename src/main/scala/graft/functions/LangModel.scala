@@ -70,7 +70,8 @@ object LangModel {
     // the count table feeds the totals action here AND the vocabulary
     // join in every later crossEntropy call — persist so the reference
     // corpus is scanned once, not once per consumer (recomputable on
-    // executor loss, ContextCleaner-reclaimed)
+    // executor loss; the CacheManager keeps it until `unpersist` or
+    // `clearCache()` — dropping the model does not release it)
     val counts = Spread.across(ref)
       .select(explode(tokens(col(textCol))).as("token"))
       .groupBy("token").agg(count(lit(1)).as("c"))

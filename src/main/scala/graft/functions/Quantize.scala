@@ -5,6 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.IntegerType
 
+import graft.Scoped
 import graft.expressions.{CodebookData, CodebookTopK}
 
 /** Vector compression for embedding corpora — the scan-byte half of the
@@ -97,48 +98,48 @@ object Quantize {
     // re-slicing) the source per pass (released before returning)
     val base = df.select(
       col(idCol) +: (0 until m).map(s => subCol(s).as(s"__sub$s")): _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
-    // init: the ksub md5-smallest rows seed every sub-space (a corpus
-    // smaller than ksub just trains a smaller effective codebook)
-    val seedRows = base
-      .orderBy(md5(col(idCol).cast("string")), col(idCol)).limit(ksub)
-      .collect()
-    var books: Array[Array[Array[Double]]] =
-      Array.tabulate(m) { s =>
-        seedRows.map(_.getSeq[Double](s + 1).toArray)
-      }
-
-    for (_ <- 1 to iters) {
-      val bcs = books.map(bcBook(spark, _))
-      val assigned = base.select(
-        (0 until m).flatMap(s => Seq(
-          col(s"__sub$s"),
-          element_at(CodebookTopK.codebook_topk(col(s"__sub$s"), bcs(s), 1,
-            IntegerType, false, CodebookTopK.L2), 1).as(s"__a$s"))): _*)
-      val cells = assigned.select(explode(array((0 until m).map(s =>
-          struct(lit(s).as("sub"), col(s"__a$s").as("lab"),
-            col(s"__sub$s").as("v"))): _*)).as("e"))
-        .select(col("e.sub").as("sub"), col("e.lab").as("lab"),
-          posexplode(col("e.v")).as(Seq("pos", "x")))
-        .groupBy("sub", "lab", "pos").agg(avg(col("x")).as("mx"))
+    val books = Scoped(base) {
+      // init: the ksub md5-smallest rows seed every sub-space (a corpus
+      // smaller than ksub just trains a smaller effective codebook)
+      val seedRows = base
+        .orderBy(md5(col(idCol).cast("string")), col(idCol)).limit(ksub)
         .collect()
-      val next = cells.groupBy(r => (r.getInt(0), r.getInt(1)))
-        .map { case ((s, lab), rows) =>
-          (s, lab) -> {
-            val v = new Array[Double](dsub)
-            rows.foreach(r => v(r.getInt(2)) = r.getDouble(3))
-            v
+      var books: Array[Array[Array[Double]]] =
+        Array.tabulate(m) { s =>
+          seedRows.map(_.getSeq[Double](s + 1).toArray)
+        }
+
+      for (_ <- 1 to iters) {
+        val bcs = books.map(bcBook(spark, _))
+        val assigned = base.select(
+          (0 until m).flatMap(s => Seq(
+            col(s"__sub$s"),
+            element_at(CodebookTopK.codebook_topk(col(s"__sub$s"), bcs(s),
+              1, IntegerType, false, CodebookTopK.L2), 1).as(s"__a$s"))): _*)
+        val cells = assigned.select(explode(array((0 until m).map(s =>
+            struct(lit(s).as("sub"), col(s"__a$s").as("lab"),
+              col(s"__sub$s").as("v"))): _*)).as("e"))
+          .select(col("e.sub").as("sub"), col("e.lab").as("lab"),
+            posexplode(col("e.v")).as(Seq("pos", "x")))
+          .groupBy("sub", "lab", "pos").agg(avg(col("x")).as("mx"))
+          .collect()
+        val next = cells.groupBy(r => (r.getInt(0), r.getInt(1)))
+          .map { case ((s, lab), rows) =>
+            (s, lab) -> {
+              val v = new Array[Double](dsub)
+              rows.foreach(r => v(r.getInt(2)) = r.getDouble(3))
+              v
+            }
+          }
+        books = Array.tabulate(m) { s =>
+          books(s).zipWithIndex.map { case (old, i) =>
+            next.getOrElse((s, i + 1), old)
           }
         }
-      books = Array.tabulate(m) { s =>
-        books(s).zipWithIndex.map { case (old, i) =>
-          next.getOrElse((s, i + 1), old)
-        }
+        bcs.foreach(_.destroy())
       }
-      bcs.foreach(_.destroy())
+      books
     }
-    base.unpersist(blocking = false)
 
     books.zipWithIndex.flatMap { case (book, s) =>
       book.zipWithIndex.map { case (v, i) => (s, i + 1, v.toSeq) }

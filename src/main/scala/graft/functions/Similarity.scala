@@ -3,6 +3,8 @@ package graft.functions
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.Scoped
+
 /** Similarity search over embedding columns (Array[Float]).
   *
   * Brute-force cosine is the exact baseline: a broadcast of the query
@@ -350,7 +352,7 @@ object Similarity {
     // there is the whole corpus, and a MEMORY_AND_DISK copy of a
     // 100 TB input is exactly the scratch-disk wall the r8/r12 scale
     // campaigns hit.
-    val (train0, trainN, bounded) =
+    val (train, trainN, bounded) =
       if (samplePerCentroid <= 0) {
         (df, if (knownN >= 0L) knownN else df.count(), false)
       } else {
@@ -371,9 +373,6 @@ object Similarity {
           if (sn >= k) (sampled, sn, true) else (df, n, false)
         }
       }
-    val train = if (bounded)
-      train0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else train0
     def local(cb: Seq[(Int, Seq[Double])]): DataFrame =
       cb.toDF("centroid_label", "cvec")
     // SEEDS: the k rows with smallest (md5(id), id) — labels 1..k in
@@ -393,44 +392,46 @@ object Similarity {
     // cutoff, every excluded row orders after every kept row — the
     // global top-k is inside the kept set. Collect volume is k-scale
     // and partition-count-independent.
-    val seedHash = md5(col(idCol).cast("string"))
-    val seedPrefix =
-      conv(substring(seedHash, 1, 8), 16, 10).cast("long")
-    // sized from trainN — the row count of the frame the cutoff
-    // filters — never the corpus count (see the (train, trainN) note)
-    val nBound = math.max(1L, trainN)
-    def seedRows(): Array[org.apache.spark.sql.Row] = {
-      var mult = 4.0
-      while (true) {
-        val cutoff = math.min(4294967296.0,
-          math.max(1.0, mult * k / nBound * 4294967296.0)).toLong
-        val cand = train.filter(seedPrefix < cutoff)
-        if (cutoff >= 4294967296L || cand.count() >= k)
-          return cand.orderBy(seedHash, col(idCol)).limit(k)
-            .select(transform(col(vecCol), _.cast("double")))
-            .collect()
-        mult *= 4
+    def lloyd(): DataFrame = {
+      val seedHash = md5(col(idCol).cast("string"))
+      val seedPrefix =
+        conv(substring(seedHash, 1, 8), 16, 10).cast("long")
+      // sized from trainN — the row count of the frame the cutoff
+      // filters — never the corpus count (see the (train, trainN) note)
+      val nBound = math.max(1L, trainN)
+      def seedRows(): Array[org.apache.spark.sql.Row] = {
+        var mult = 4.0
+        while (true) {
+          val cutoff = math.min(4294967296.0,
+            math.max(1.0, mult * k / nBound * 4294967296.0)).toLong
+          val cand = train.filter(seedPrefix < cutoff)
+          if (cutoff >= 4294967296L || cand.count() >= k)
+            return cand.orderBy(seedHash, col(idCol)).limit(k)
+              .select(transform(col(vecCol), _.cast("double")))
+              .collect()
+          mult *= 4
+        }
+        throw new IllegalStateException("unreachable")
       }
-      throw new IllegalStateException("unreachable")
+      var codebook: Seq[(Int, Seq[Double])] =
+        seedRows().toSeq.zipWithIndex
+          .map { case (r, i) => (i + 1, r.getSeq[Double](0)) }
+      for (_ <- 1 to iters) {
+        // one scan: route every training vector over the
+        // (broadcast-literal) codebook, aggregate k×dim bucket means,
+        // collect k rows
+        val next = centroids(assignNearest(train, local(codebook), idCol,
+            vecCol), "assigned", vecCol)
+          .collect()
+          .map(r => r.get(0).asInstanceOf[Number].intValue() ->
+            r.getSeq[Double](1)).toMap
+        // empty buckets vanish from `next`; keep their old centroid so k
+        // stays constant and labels remain stable across iterations
+        codebook = codebook.map { case (l, v) => (l, next.getOrElse(l, v)) }
+      }
+      local(codebook)
     }
-    var codebook: Seq[(Int, Seq[Double])] =
-      seedRows().toSeq.zipWithIndex
-        .map { case (r, i) => (i + 1, r.getSeq[Double](0)) }
-    for (_ <- 1 to iters) {
-      // one scan: route every training vector over the
-      // (broadcast-literal) codebook, aggregate k×dim bucket means,
-      // collect k rows
-      val next = centroids(assignNearest(train, local(codebook), idCol,
-          vecCol), "assigned", vecCol)
-        .collect()
-        .map(r => r.get(0).asInstanceOf[Number].intValue() ->
-          r.getSeq[Double](1)).toMap
-      // empty buckets vanish from `next`; keep their old centroid so k
-      // stays constant and labels remain stable across iterations
-      codebook = codebook.map { case (l, v) => (l, next.getOrElse(l, v)) }
-    }
-    if (bounded) train.unpersist(blocking = false)
-    local(codebook)
+    if (bounded) Scoped(train)(lloyd()) else lloyd()
   }
 
   /** SHARDED two-level codebook with a DISTRIBUTED fine layer — the
@@ -650,39 +651,39 @@ object Similarity {
       .join(broadcast(k2), Seq("cell")) // k2 is k₁ rows — metadata scale
       .withColumn("__rk", row_number().over(w))
       .filter(col("__rk") <= col("k2") * samplePerCentroid)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     def truncate(d: DataFrame): DataFrame =
       if (d.sparkSession.sparkContext.getCheckpointDir.isDefined)
         d.checkpoint(eager = true)
       else d.localCheckpoint(eager = true)
-    // seeds: rank within cell IS the fine label (1..k₂ per cell)
-    var fine = truncate(sample.filter(col("__rk") <= col("k2"))
-      .select(col("cell"), col("__rk").cast("int").as("flabel"),
-        col("__v").as("cvec")))
-    for (_ <- 1 to itersFine) {
-      val packed = packFineCells(fine)
-      val assigned = sample.join(packed, Seq("cell"))
-        .select(col("cell"), col("__v"),
-          element_at(graft.expressions.CellTopK.cell_topk(
-            col("__v"), col("members"), col("subc"), 1), 1).as("flabel"))
-        .filter(col("flabel").isNotNull)
-      val next = assigned
-        .select(col("cell"), col("flabel"),
-          posexplode(col("__v")).as(Seq("pos", "x")))
-        .groupBy(col("cell"), col("flabel"), col("pos"))
-        .agg(avg(col("x")).as("cv"))
-        .groupBy(col("cell"), col("flabel"))
-        .agg(array_sort(collect_list(struct(col("pos"), col("cv"))))
-          .as("pc"))
-        .select(col("cell"), col("flabel"),
-          transform(col("pc"), _.getField("cv")).as("__next"))
-      // empty fine buckets keep their previous centroid (k₂ stable)
-      fine = truncate(fine.join(next, Seq("cell", "flabel"), "left")
-        .select(col("cell"), col("flabel"),
-          coalesce(col("__next"), col("cvec")).as("cvec")))
+    Scoped(sample) {
+      // seeds: rank within cell IS the fine label (1..k₂ per cell)
+      var fine = truncate(sample.filter(col("__rk") <= col("k2"))
+        .select(col("cell"), col("__rk").cast("int").as("flabel"),
+          col("__v").as("cvec")))
+      for (_ <- 1 to itersFine) {
+        val packed = packFineCells(fine)
+        val assigned = sample.join(packed, Seq("cell"))
+          .select(col("cell"), col("__v"),
+            element_at(graft.expressions.CellTopK.cell_topk(
+              col("__v"), col("members"), col("subc"), 1), 1).as("flabel"))
+          .filter(col("flabel").isNotNull)
+        val next = assigned
+          .select(col("cell"), col("flabel"),
+            posexplode(col("__v")).as(Seq("pos", "x")))
+          .groupBy(col("cell"), col("flabel"), col("pos"))
+          .agg(avg(col("x")).as("cv"))
+          .groupBy(col("cell"), col("flabel"))
+          .agg(array_sort(collect_list(struct(col("pos"), col("cv"))))
+            .as("pc"))
+          .select(col("cell"), col("flabel"),
+            transform(col("pc"), _.getField("cv")).as("__next"))
+        // empty fine buckets keep their previous centroid (k₂ stable)
+        fine = truncate(fine.join(next, Seq("cell", "flabel"), "left")
+          .select(col("cell"), col("flabel"),
+            coalesce(col("__next"), col("cvec")).as("cvec")))
+      }
+      fine
     }
-    sample.unpersist()
-    fine
     }
     if (cacheRoot != null) cacheRoot.unpersist()
     (coarse, fineOut)

@@ -33,11 +33,8 @@ object SarOps {
     df.filter(col("header").rlike(
       headers.map(java.util.regex.Pattern.quote).mkString("|")))
 
-  /** Anti-filter of unwanted sections (reference pl_helpers2.py:85-105). */
-  def excludeHeaders(df: DataFrame, unwanted: Seq[String]): DataFrame =
-    excludeHeadersBy(df, "header", unwanted)
-
-  /** Generic membership anti-filter on any column. */
+  /** Membership anti-filter on any column — the unwanted-section filter
+    * of reference pl_helpers2.py:85-105 with `column = "header"`. */
   def excludeHeadersBy(df: DataFrame, column: String,
       unwanted: Seq[String]): DataFrame =
     df.filter(!col(column).isin(unwanted: _*))
@@ -79,12 +76,6 @@ object SarOps {
 
   // ---- P6/G4/O2: devices --------------------------------------------
 
-  /** Distinct sub-devices (reference pl_helpers2.py:165-169). */
-  def subDevices(df: DataFrame): Seq[String] =
-    if (df.columns.contains("sub_device"))
-      df.select("sub_device").distinct().collect().map(_.getString(0)).toSeq
-    else Seq.empty
-
   /** Numeric-aware device ordering with 'all' pinned first (reference
     * helpers_pl.py:42-60 merge_headers). Driver-side: cardinality is
     * #CPUs/#disks. */
@@ -97,10 +88,6 @@ object SarOps {
       "all" +: sortedRest
     } else arr
   }
-
-  /** Devices/headers common to all files (reference helpers_pl.py:42-60). */
-  def mergeHeaders(fields: Seq[Seq[String]]): Seq[String] =
-    sortDevices(fields.map(_.toSet).reduce(_ intersect _).toSeq)
 
   /** Single-device slice (reference pl_helpers2.py:172-175). */
   def forDevice(df: DataFrame, device: String): DataFrame =
@@ -151,23 +138,13 @@ object SarOps {
         .select("restart").collect().map(_.getString(0)).toSeq
     else Seq.empty
 
-  /** E3: restart strings → timestamps. Each restart string carries its
-    * HH:MM:SS as the last token (appended at parse); the day comes from
-    * the file's os_details (reference bokeh_charts.py:114-147). In AM/PM
-    * files the original line (preserved at the front of the restart
-    * string) still holds the qualifier, so "12:05:00 AM" resolves to
-    * 00:05 — the reference's format=mixed parse shifts such restarts by
-    * 12h; this keeps the string format but not the bug. */
-  def restartTimestamps(df: DataFrame): Seq[Timestamp] = {
-    val rs = restartHeaders(df)
-    // early exit keeps osDetails lazy: restart-less files pay no extra
-    // head() job and a frame without an os_details row can't throw here
-    if (rs.isEmpty) Seq.empty else parseRestartTimestamps(rs, osDetails(df))
-  }
-
-  /** Parse already-collected restart strings against their file's
-    * os_details — the pooled-event form J7 multi-file matching needs
-    * (events arrive as (strings, os_details) pairs, not DataFrames). */
+  /** E3: restart strings → timestamps, parsed against their file's
+    * os_details (the day; reference bokeh_charts.py:114-147). Each
+    * restart string carries its HH:MM:SS as the last token (appended at
+    * parse). In AM/PM files the original line (preserved at the front
+    * of the restart string) still holds the qualifier, so "12:05:00 AM"
+    * resolves to 00:05 — the reference's format=mixed parse shifts such
+    * restarts by 12h; this keeps the string format but not the bug. */
   def parseRestartTimestamps(restarts: Seq[String],
       osDetailsStr: String): Seq[Timestamp] = {
     if (restarts.isEmpty) return Seq.empty

@@ -1072,23 +1072,15 @@ object LlmQueries extends QueryPack {
       // the four gate counts are independent actions — run them
       // concurrently (guide §2.6); each is a deterministic count over
       // its own plan, so the flags are unchanged
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val hitsF = Future(ann.select("query_id", "neighbor_id")
-        .join(exact.select("query_id", "neighbor_id"),
-          Seq("query_id", "neighbor_id"), "left_semi").count())
-      val totalF = Future(exact.count())
-      val nqF = Future(queries.count())
-      val selfF = Future(ann.filter(
-        col("query_id") === col("neighbor_id")).count())
-      val hits = Await.result(hitsF, Duration.Inf)
-      val total = Await.result(totalF, Duration.Inf)
-      val nq = Await.result(nqF, Duration.Inf)
-      val selfOk = Await.result(selfF, Duration.Inf) == nq
+      val Seq(hits, total, nq, selfHits) = graft.Par.map(Seq(
+        ann.select("query_id", "neighbor_id")
+          .join(exact.select("query_id", "neighbor_id"),
+            Seq("query_id", "neighbor_id"), "left_semi"),
+        exact, queries,
+        ann.filter(col("query_id") === col("neighbor_id"))))(_.count())
       Seq((nq, 5, 8,
           if (hits.toDouble / total >= 0.6) 1 else 0,
-          if (selfOk) 1 else 0))
+          if (selfHits == nq) 1 else 0))
         .toDF("n_queries", "k_neighbors", "probes", "recall_ok",
           "self_in_topk_ok")
     }, Some(

@@ -1,7 +1,9 @@
 package graft.queries
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.{Par, Scoped}
 import graft.functions.{Quantize, Similarity, TextAnalysis}
 
 /** Vector-compression queries (int8 scalar quantization, product
@@ -19,6 +21,29 @@ import graft.functions.{Quantize, Similarity, TextAnalysis}
 object VectorQueries extends QueryPack {
 
   private val dim = 64 // embeddings dimension (TESTDATA)
+
+  /** The SDC recall measurement `q_pq_sdc_recall` and `q_sdc_clustered`
+    * share: PQ m=8 × ksub=32 (iters 3) over `emb`, then the SDC k=5
+    * code-to-code join of the first 30 ids against the exact knnJoin,
+    * run concurrently (guide §2.6). The codes feed both cross-join
+    * sides, so they persist for the call: the m compiled encode scorers
+    * run one corpus pass, not one per branch. Returns (recall@5, number
+    * of queries whose own code is among its SDC top 5). */
+  private def sdcRecall(emb: DataFrame): (Double, Int) = {
+    val cb = Quantize.trainPq(emb, "vec_id", "embedding", m = 8,
+      ksub = 32, iters = 3)
+    val codes = Quantize.pqEncode(emb, "embedding", cb)
+      .select("vec_id", "pq_code")
+    def pairs(knn: DataFrame) = knn.select("query_id", "neighbor_id")
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val (got, exact) = Scoped(codes)(Par.both(
+      pairs(Quantize.pqKnnJoin(codes.filter(col("vec_id") < 30), codes,
+        "vec_id", "vec_id", "pq_code", cb, k = 5)),
+      pairs(Similarity.knnJoin(emb.filter(col("vec_id") < 30), emb,
+        "vec_id", "vec_id", "embedding", k = 5))))
+    ((exact intersect got).size.toDouble / exact.size,
+      got.count { case (a, b) => a == b })
+  }
 
   /** DuckDB mirror of one UNROUNDED randomProject component: the same
     * literal sign row multiplied in element order, scaled by the exact
@@ -162,27 +187,22 @@ object VectorQueries extends QueryPack {
     // IvfStore.writePqTrained.
     QueryDef("q_pq_search", (s, dir) => {
       import s.implicits._
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
       val emb = Tables.load(s, dir, "embeddings")
       // independent driver actions run concurrently (guide §2.6): the
       // corpus count and the exact top-k overlap the PQ training loop;
       // every value is a deterministic function of its own plan
-      val nF = Future(emb.count())
-      val exactF = Future(
+      val (got, (n, exact)) = Par.both({
+        val cb = Quantize.trainPq(emb, "vec_id", "embedding", m = 8,
+          ksub = 32, iters = 3)
+        val codes = Quantize.pqEncode(emb, "embedding", cb)
+        val qv = emb.filter(col("vec_id") === 3L)
+          .select("embedding").head().getSeq[Float](0)
+        Quantize.pqSearchRerank(emb, "vec_id", "embedding",
+            codes, "pq_code", cb, qv, k = 10, shortlist = 100)
+          .collect().map(_.getLong(0)).toSet
+      }, Par.both(emb.count(),
         Similarity.topKCosine(emb, "vec_id", "embedding", 3L, 10)
-          .collect().map(_.getLong(0)).toSet)
-      val cb = Quantize.trainPq(emb, "vec_id", "embedding", m = 8,
-        ksub = 32, iters = 3)
-      val codes = Quantize.pqEncode(emb, "embedding", cb)
-      val qv = emb.filter(col("vec_id") === 3L)
-        .select("embedding").head().getSeq[Float](0)
-      val got = Quantize.pqSearchRerank(emb, "vec_id", "embedding",
-          codes, "pq_code", cb, qv, k = 10, shortlist = 100)
-        .collect().map(_.getLong(0)).toSet
-      val n = Await.result(nF, Duration.Inf)
-      val exact = Await.result(exactF, Duration.Inf)
+          .collect().map(_.getLong(0)).toSet))
       val recall = (exact intersect got).size.toDouble / exact.size
       Seq((n, 10, 100,
           if (recall >= 0.5) 1 else 0,
@@ -207,31 +227,7 @@ object VectorQueries extends QueryPack {
     // maximum), measured 30/30 at every SF.
     QueryDef("q_pq_sdc_recall", (s, dir) => {
       import s.implicits._
-      val emb = Tables.load(s, dir, "embeddings")
-      val cb = Quantize.trainPq(emb, "vec_id", "embedding", m = 8,
-        ksub = 32, iters = 3)
-      // codes feed both cross-join sides: cache so the m compiled
-      // encode scorers run one corpus pass, not one per branch
-      val codes = Quantize.pqEncode(emb, "embedding", cb)
-        .select("vec_id", "pq_code").cache()
-      // the SDC join and the exact baseline are independent actions —
-      // run them concurrently (guide §2.6)
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val gotF = Future(Quantize.pqKnnJoin(codes.filter(col("vec_id") < 30),
-          codes, "vec_id", "vec_id", "pq_code", cb, k = 5)
-        .select("query_id", "neighbor_id")
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet)
-      val exactF = Future(Similarity.knnJoin(emb.filter(col("vec_id") < 30),
-          emb, "vec_id", "vec_id", "embedding", k = 5)
-        .select("query_id", "neighbor_id")
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet)
-      val got = Await.result(gotF, Duration.Inf)
-      val exact = Await.result(exactF, Duration.Inf)
-      val recall = (exact intersect got).size.toDouble / exact.size
-      val selfIn = got.count { case (a, b) => a == b }
-      codes.unpersist(blocking = false)
+      val (recall, selfIn) = sdcRecall(Tables.load(s, dir, "embeddings"))
       Seq((30, 5,
           if (recall >= 0.15) 1 else 0,
           if (selfIn == 30) 1 else 0))
@@ -290,19 +286,16 @@ object VectorQueries extends QueryPack {
       val n = base.count()
       val nc = math.max(8L, n / 24).toInt
       val emb = Similarity.clusterPull(base, "vec_id", "embedding",
-        nc, 0.9).cache()
-      val cb = Quantize.trainPq(emb, "vec_id", "embedding", m = 8,
-        ksub = 32, iters = 3)
-      val codes = Quantize.pqEncode(emb, "embedding", cb)
-        .select("vec_id", "pq_code").cache()
-      // the four query ids are independent search+recall measurements —
-      // run them concurrently (guide §2.6); per-qid results and the min
-      // are unchanged
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val minRecall = Await.result(
-        Future.traverse(Seq(0L, 3L, 7L, 11L)) { qid => Future {
+        nc, 0.9)
+      val minRecall = Scoped(emb) {
+        val cb = Quantize.trainPq(emb, "vec_id", "embedding", m = 8,
+          ksub = 32, iters = 3)
+        val codes = Quantize.pqEncode(emb, "embedding", cb)
+          .select("vec_id", "pq_code")
+        // the four query ids are independent search+recall
+        // measurements — run them concurrently (guide §2.6); per-qid
+        // results and the min are unchanged
+        Scoped(codes)(Par.map(Seq(0L, 3L, 7L, 11L)) { qid =>
           val qv = emb.filter(col("vec_id") === qid)
             .select("embedding").head().getSeq[Float](0)
           val exact = Similarity.topKCosine(emb, "vec_id", "embedding",
@@ -311,9 +304,8 @@ object VectorQueries extends QueryPack {
               codes, "pq_code", cb, qv, k = 10, shortlist = 100)
             .collect().map(_.getLong(0)).toSet
           (exact intersect got).size.toDouble / exact.size
-        }}, Duration.Inf).min
-      codes.unpersist(blocking = false)
-      emb.unpersist(blocking = false)
+        }).min
+      }
       Seq((n, nc, if (minRecall >= 0.9) 1 else 0))
         .toDF("n_vectors", "n_clusters", "recall_ok")
     }, Some(
@@ -327,29 +319,8 @@ object VectorQueries extends QueryPack {
       val n = base.count()
       val nc = math.max(1L, n / 6).toInt
       val emb = Similarity.clusterPull(base, "vec_id", "embedding",
-        nc, 0.9).cache()
-      val cb = Quantize.trainPq(emb, "vec_id", "embedding", m = 8,
-        ksub = 32, iters = 3)
-      val codes = Quantize.pqEncode(emb, "embedding", cb)
-        .select("vec_id", "pq_code").cache()
-      // independent actions run concurrently (guide §2.6)
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val gotF = Future(Quantize.pqKnnJoin(codes.filter(col("vec_id") < 30),
-          codes, "vec_id", "vec_id", "pq_code", cb, k = 5)
-        .select("query_id", "neighbor_id")
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet)
-      val exactF = Future(Similarity.knnJoin(emb.filter(col("vec_id") < 30),
-          emb, "vec_id", "vec_id", "embedding", k = 5)
-        .select("query_id", "neighbor_id")
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet)
-      val got = Await.result(gotF, Duration.Inf)
-      val exact = Await.result(exactF, Duration.Inf)
-      val recall = (exact intersect got).size.toDouble / exact.size
-      val selfIn = got.count { case (a, b) => a == b }
-      codes.unpersist(blocking = false)
-      emb.unpersist(blocking = false)
+        nc, 0.9)
+      val (recall, selfIn) = Scoped(emb)(sdcRecall(emb))
       Seq((n, nc, if (recall >= 0.7) 1 else 0,
           if (selfIn == 30) 1 else 0))
         .toDF("n_vectors", "n_clusters", "recall_ok", "self_in_top5_ok")
@@ -365,11 +336,10 @@ object VectorQueries extends QueryPack {
       val n = base.count()
       val nc = math.max(1L, n / 6).toInt
       val emb = Similarity.clusterPull(base, "vec_id", "embedding",
-        nc, 0.9).cache()
+        nc, 0.9)
       // overlap@5, self excluded (the Calibrate `project` rationale:
       // the query ranks 1 in both spaces tautologically)
-      def topNoSelf(qs: org.apache.spark.sql.DataFrame,
-          corpus: org.apache.spark.sql.DataFrame, vc: String) =
+      def topNoSelf(qs: DataFrame, corpus: DataFrame, vc: String) =
         Similarity.knnJoin(qs, corpus, "vec_id", "vec_id", vc, k = 6)
           .filter(col("query_id") =!= col("neighbor_id"))
           .select("query_id", "neighbor_id", "rank")
@@ -377,20 +347,13 @@ object VectorQueries extends QueryPack {
           .groupBy(_._1).iterator.flatMap { case (_, rows) =>
             rows.sortBy(_._3).take(5).map(t => (t._1, t._2))
           }.toSet
-      // independent actions run concurrently (guide §2.6)
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val exactF = Future(topNoSelf(emb.filter(col("vec_id") < 20), emb,
-        "embedding"))
       val pr = Similarity.randomProject(emb, "embedding", dim, 16)
-        .select(col("vec_id"), col("proj")).cache()
-      val gotF = Future(topNoSelf(pr.filter(col("vec_id") < 20), pr, "proj"))
-      val exact = Await.result(exactF, Duration.Inf)
-      val got = Await.result(gotF, Duration.Inf)
+        .select(col("vec_id"), col("proj"))
+      // independent actions run concurrently (guide §2.6)
+      val (exact, got) = Scoped(emb)(Scoped(pr)(Par.both(
+        topNoSelf(emb.filter(col("vec_id") < 20), emb, "embedding"),
+        topNoSelf(pr.filter(col("vec_id") < 20), pr, "proj"))))
       val overlap = (exact intersect got).size.toDouble / exact.size
-      pr.unpersist(blocking = false)
-      emb.unpersist(blocking = false)
       Seq((n, nc, if (overlap >= 0.9) 1 else 0))
         .toDF("n_vectors", "n_clusters", "overlap_ok")
     }, Some(

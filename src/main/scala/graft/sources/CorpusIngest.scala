@@ -7,6 +7,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{bit_xor, coalesce, col, count, lit, xxhash64}
 
+import graft.Scoped
 import graft.functions.Curation
 
 /** The incremental ingestion entry point: what a 100 TB pipeline runs
@@ -44,30 +45,25 @@ object CorpusIngest {
     * have no exact-prefix ancestor AND no near-dup band collision in
     * history. BOTH ledgers resolve their key rules from stored meta
     * (band geometry and prefix-word rule alike) — `cfg.dedupPrefixWords`
-    * only serves exact ledgers seeded before the rule was stored. */
+    * only serves exact ledgers seeded before the rule was stored. The
+    * near-dup stage consumes the gate+exact result TWICE (banding
+    * branch and anti-join branch), so it is persisted; the CacheManager
+    * keeps it until `unpersist` or `clearCache()` — dropping the
+    * returned plan does not release it ([[ingest]] releases its own). */
   def screen(spark: SparkSession, batch: DataFrame, textCol: String,
       idCol: String, exactPath: String, nearPath: String,
       cfg: Curation.Config = Curation.Config()): DataFrame =
-    screenPinned(spark, batch, textCol, idCol, exactPath, nearPath,
-      cfg)._1
+    NearDupLedger.filterNew(spark, exactStage(spark, batch, textCol,
+        exactPath, cfg)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK),
+      textCol, idCol, nearPath)
 
-  /** [[screen]] plus the persisted intermediate it pins: the near-dup
-    * stage consumes the gate+exact result TWICE (banding branch and
-    * anti-join branch), so it is persisted — [[ingest]] unpersists it
-    * once the survivors are checkpointed; long-lived callers of the
-    * pure [[screen]] release it via the ContextCleaner when they drop
-    * the returned plan (nothing else holds it). */
-  private def screenPinned(spark: SparkSession, batch: DataFrame,
-      textCol: String, idCol: String, exactPath: String,
-      nearPath: String, cfg: Curation.Config)
-      : (DataFrame, DataFrame) = {
-    val gated = Curation.qualityGate(batch, textCol, cfg)
-    val exactNew = DedupLedger.filterNew(spark, gated, textCol,
-        exactPath, cfg.dedupPrefixWords)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    (NearDupLedger.filterNew(spark, exactNew, textCol, idCol, nearPath),
-      exactNew)
-  }
+  /** The quality gate + exact-ledger stage of [[screen]]. */
+  private def exactStage(spark: SparkSession, batch: DataFrame,
+      textCol: String, exactPath: String, cfg: Curation.Config)
+      : DataFrame =
+    DedupLedger.filterNew(spark, Curation.qualityGate(batch, textCol, cfg),
+      textCol, exactPath, cfg.dedupPrefixWords)
 
   /** Record `survivors`' keys in BOTH ledgers — the final step of the
     * crash-safe recipe. NOT atomic across the two ledgers: on a crash
@@ -174,13 +170,12 @@ object CorpusIngest {
   def ingest(spark: SparkSession, batch: DataFrame, textCol: String,
       idCol: String, exactPath: String, nearPath: String,
       cfg: Curation.Config = Curation.Config()): DataFrame = {
-    val (scr, pinned) = screenPinned(spark, batch, textCol, idCol,
-      exactPath, nearPath, cfg)
-    val fresh = Lineage.truncated(spark, scr)
-    // the checkpoint materialized the survivors; the pinned
-    // intermediate would otherwise accumulate one cached frame per
-    // ingested batch in a long-lived pipeline
-    pinned.unpersist(blocking = false)
+    // [[screen]] with its persisted stage released once the checkpoint
+    // materialized the survivors (a long-lived pipeline would otherwise
+    // accumulate one cached frame per ingested batch)
+    val exactNew = exactStage(spark, batch, textCol, exactPath, cfg)
+    val fresh = Scoped(exactNew)(Lineage.truncated(spark,
+      NearDupLedger.filterNew(spark, exactNew, textCol, idCol, nearPath)))
     commit(spark, fresh, textCol, idCol, exactPath, nearPath,
       cfg.dedupPrefixWords)
     fresh

@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.{Par, Scoped}
 import graft.functions.Similarity
 
 /** On-disk IVF index for embedding corpora: the corpus is written as
@@ -638,7 +639,6 @@ object IvfStore {
       val residents = spark.read.parquet(s"$path/data")
         .filter(col("bucket") >= lo && col("bucket") < hi)
         .select(col(idCol), col(vecCol))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       // deepened per-cell codebook: k₂ = ⌈count/targetBucket⌉ via the
       // shared deterministic trainer (the cell is ≤ ~2·cellCap rows —
       // comfortably inside the flat trainer's regime). Labels offset
@@ -648,47 +648,48 @@ object IvfStore {
       val fineLive = spark.read.parquet(s"$path/fine")
       val epoch = fineLive.filter(col("cell") === cellId)
         .agg(coalesce(max(col("flabel")) + 1, lit(0))).head().getInt(0)
-      val cents = Similarity.trainCodebook(residents, idCol, vecCol,
-        k2, itersFine)
-      val newFine = cents.select(lit(cellId).as("cell"),
-        (col("centroid_label").cast("int") + lit(epoch)).as("flabel"),
-        transform(col("cvec"), _.cast("double")).as("cvec"))
-      val keptFine = fineLive.filter(col("cell") =!= cellId)
-      val tmpFine = s"$path/fine-resplit-tmp"
-      keptFine.unionByName(newFine).write.mode("overwrite").parquet(tmpFine)
-      // fresh full-depth probe lists for the residents over the
-      // UPDATED fine layer (their coarse routing is unchanged — the
-      // coarse codebook didn't move — so residence stays inside this
-      // cell's bucket range by construction)
-      val updatedFine = spark.read.parquet(tmpFine)
-      val probeLists = Similarity
-        .shardedProbeRoutes(residents, coarse, updatedFine, idCol,
-          vecCol, pCoarse, pFine)
-        .select(col("__a"), struct(col("cpos"), col("fpos"),
-          (col("cell").cast("long") * lit(1L << 40) +
-            col("flabel").cast("long")).as("bucket")).as("pr"))
-        .groupBy("__a")
-        .agg(array_sort(collect_list(col("pr"))).as("__pb"))
-        .select(col("__a").as(idCol),
-          transform(col("__pb"), _.getField("bucket")).as("probe_buckets"))
-      // STAGE: every rebuilt resident row lands durably on disk before
-      // any live dir is touched; `_EPOCH` (written after the parquet
-      // _SUCCESS) seals the stage and records the label watershed the
-      // publish needs to tell old dirs from staged ones
       val stage = new org.apache.hadoop.fs.Path(
         s"$path/data-resplit-tmp-cell$cellId")
-      residents
-        .join(probeLists, Seq(idCol))
-        .withColumn("int8_pack",
-          graft.expressions.Int8VecPack.int8_pack(col(vecCol)))
-        .withColumn("bucket", element_at(col("probe_buckets"), 1))
-        .repartition(col("bucket"))
-        .write.mode("overwrite").partitionBy("bucket")
-        .parquet(stage.toString)
-      val out = fs.create(new org.apache.hadoop.fs.Path(stage, "_EPOCH"))
-      out.writeBytes(epoch.toString)
-      out.close()
-      residents.unpersist()
+      Scoped(residents) {
+        val cents = Similarity.trainCodebook(residents, idCol, vecCol,
+          k2, itersFine)
+        val newFine = cents.select(lit(cellId).as("cell"),
+          (col("centroid_label").cast("int") + lit(epoch)).as("flabel"),
+          transform(col("cvec"), _.cast("double")).as("cvec"))
+        val keptFine = fineLive.filter(col("cell") =!= cellId)
+        val tmpFine = s"$path/fine-resplit-tmp"
+        keptFine.unionByName(newFine).write.mode("overwrite").parquet(tmpFine)
+        // fresh full-depth probe lists for the residents over the
+        // UPDATED fine layer (their coarse routing is unchanged — the
+        // coarse codebook didn't move — so residence stays inside this
+        // cell's bucket range by construction)
+        val updatedFine = spark.read.parquet(tmpFine)
+        val probeLists = Similarity
+          .shardedProbeRoutes(residents, coarse, updatedFine, idCol,
+            vecCol, pCoarse, pFine)
+          .select(col("__a"), struct(col("cpos"), col("fpos"),
+            (col("cell").cast("long") * lit(1L << 40) +
+              col("flabel").cast("long")).as("bucket")).as("pr"))
+          .groupBy("__a")
+          .agg(array_sort(collect_list(col("pr"))).as("__pb"))
+          .select(col("__a").as(idCol),
+            transform(col("__pb"), _.getField("bucket")).as("probe_buckets"))
+        // STAGE: every rebuilt resident row lands durably on disk before
+        // any live dir is touched; `_EPOCH` (written after the parquet
+        // _SUCCESS) seals the stage and records the label watershed the
+        // publish needs to tell old dirs from staged ones
+        residents
+          .join(probeLists, Seq(idCol))
+          .withColumn("int8_pack",
+            graft.expressions.Int8VecPack.int8_pack(col(vecCol)))
+          .withColumn("bucket", element_at(col("probe_buckets"), 1))
+          .repartition(col("bucket"))
+          .write.mode("overwrite").partitionBy("bucket")
+          .parquet(stage.toString)
+        val out = fs.create(new org.apache.hadoop.fs.Path(stage, "_EPOCH"))
+        out.writeBytes(epoch.toString)
+        out.close()
+      }
       publishStagedResplit(fs, path, cellId, stage, epoch)
     }
     spark.catalog.refreshByPath(s"$path/data")
@@ -1150,14 +1151,10 @@ object IvfStore {
     // the earlier jobs' straggler tails; r14, VERDICT r13 item 6).
     // Each result is a deterministic function of its own inputs, so
     // overlap cannot change either codebook.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val centsF = Future(Similarity.trainCodebook(emb, idCol, vecCol,
-      Similarity.codebookSize(emb.count()), iters))
-    val pqCbF = Future(Quantize.trainPq(emb, idCol, vecCol, m, ksub, iters))
-    val cents = Await.result(centsF, Duration.Inf)
-    val pqCb = Await.result(pqCbF, Duration.Inf)
+    val (cents, pqCb) = Par.both(
+      Similarity.trainCodebook(emb, idCol, vecCol,
+        Similarity.codebookSize(emb.count()), iters),
+      Quantize.trainPq(emb, idCol, vecCol, m, ksub, iters))
     Quantize.pqEncode(
         Similarity.assignNearest(emb, cents, idCol, vecCol), vecCol, pqCb)
       .withColumnRenamed("assigned", "bucket")
@@ -1166,11 +1163,8 @@ object IvfStore {
       .parquet(s"$path/data")
     // the two codebook writes are independent metadata-scale jobs —
     // overlap them too
-    val w1 = Future(
-      cents.write.mode("overwrite").parquet(s"$path/codebook"))
-    val w2 = Future(
+    Par.both(cents.write.mode("overwrite").parquet(s"$path/codebook"),
       pqCb.write.mode("overwrite").parquet(s"$path/pq_codebook"))
-    Await.result(w1, Duration.Inf); Await.result(w2, Duration.Inf)
     (cents, pqCb)
   }
 

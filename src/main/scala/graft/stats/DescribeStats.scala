@@ -3,6 +3,8 @@ package graft.stats
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.{Par, Scoped}
+
 /** describe()-style summary statistics (reference G1: dia_compute_pl.py:
   * 68-73, api/main.py:314-331; SURVEY.md §2.6).
   *
@@ -102,8 +104,7 @@ object DescribeStats {
       .select(col("metric"), col("v"), col("cnt"))
       .as[(String, Double, Long)]
       .rdd
-    rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Scoped(rdd) {
       val partTotals = rdd.mapPartitionsWithIndex { (idx, it) =>
         val acc = scala.collection.mutable.LinkedHashMap.empty[String, Long]
         it.foreach { case (metric, _, cnt) =>
@@ -158,7 +159,7 @@ object DescribeStats {
           }
         }
       }.toMap
-    } finally { rdd.unpersist(blocking = false); () }
+    }
   }
 
   /** One output row per metric column, exact quantiles (see object doc).
@@ -178,8 +179,11 @@ object DescribeStats {
     * Spark's `Percentile` by construction (same arithmetic, same
     * boundary-key selection), with no |distinct|-sized task anywhere.
     * The moments aggregate and the quantile selection run as
-    * concurrent driver actions (guide §2.6 — each is a deterministic
-    * function of its own subplan).
+    * concurrent driver actions through [[graft.Par]] (guide §2.6 —
+    * each is a deterministic function of its own subplan): the moments
+    * job on the caller's thread, the selection on Par's pool under the
+    * caller's job group and local properties, so both jobs are
+    * attributed to the calling request.
     *
     * Eager: both jobs run at call time, and the returned frame is a
     * local one built on the driver from their |cols|-row results. */
@@ -187,15 +191,7 @@ object DescribeStats {
     require(cols.nonEmpty, "describe needs at least one column")
     val spark = df.sparkSession
     import spark.implicits._
-    // blocking {}: both bodies park a pool thread for a whole Spark job;
-    // the marker lets the cores-sized global pool add threads, so
-    // concurrent service requests cannot starve it
-    import scala.concurrent.{Await, Future, blocking}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
     val aggs = cols.flatMap(c => momentAggs(c, None))
-    val mF = Future(blocking(
-      df.agg(aggs.head, aggs.tail: _*).collect().head))
     // (metric, value) → count for all columns in ONE scan; nulls are
     // dropped exactly as the percentile aggregate drops them. NOT
     // spread (measured): the explode feeds a map-side partial
@@ -210,10 +206,9 @@ object DescribeStats {
       .select(col("p.metric").as("metric"), col("p.v").as("v"))
       .filter(col("v").isNotNull)
       .groupBy("metric", "v").agg(count(lit(1)).as("cnt"))
-    val qF = Future(blocking(
-      weightedQuantiles(pairs, Seq(0.25, 0.5, 0.75))))
-    val m = Await.result(mF, Duration.Inf)
-    val quantiles = Await.result(qF, Duration.Inf)
+    val (m, quantiles) = Par.both(
+      df.agg(aggs.head, aggs.tail: _*).collect().head,
+      weightedQuantiles(pairs, Seq(0.25, 0.5, 0.75)))
     def opt(field: String): Option[Double] =
       if (m.isNullAt(m.fieldIndex(field))) None
       else Some(m.get(m.fieldIndex(field)) match {

@@ -207,8 +207,9 @@ class LlmFunctionsSpec extends AnyFunSuite {
     val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
     assert(leaked.isEmpty, s"leaked cached RDDs: $leaked")
     // default prefix path materializes EXACTLY ONE artifact — the
-    // hashed shingle checkpoint feeding its four branches (reclaimed by
-    // the ContextCleaner once the result is unreferenced)
+    // hashed shingle checkpoint feeding its four branches (the
+    // CacheManager keeps it until unpersist or clearCache(), so it
+    // stays pinned after the result is dropped)
     Dedup.jaccardPairsPrefix(docs, "text", "doc_id", 3, 0.8).collect()
     val pinned = spark.sparkContext.getPersistentRDDs.keySet -- before
     assert(pinned.size <= 1, s"expected at most the shingle checkpoint: $pinned")

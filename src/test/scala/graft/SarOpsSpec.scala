@@ -58,7 +58,8 @@ class SarOpsSpec extends AnyFunSuite {
 
   test("device list: numeric sort, 'all' pinned first") {
     val metrics = SarOps.toMetrics(SarOps.selectHeader(sar.toDF(), cpuHeader), cpuHeader)
-    val devices = SarOps.sortDevices(SarOps.subDevices(metrics))
+    val devices = SarOps.sortDevices(metrics.select("sub_device").distinct()
+      .collect().map(_.getString(0)).toSeq)
     assert(devices == Seq("all", "0", "1"))
   }
 
@@ -120,7 +121,8 @@ class SarOpsSpec extends AnyFunSuite {
     import spark.implicits._
     val path = getClass.getResource("/sar/sa_edge.txt").getPath
     val edge = graft.ingest.SarTextParser.parse(spark, path).toDF()
-    val rs = SarOps.restartTimestamps(edge)
+    val rs = SarOps.parseRestartTimestamps(SarOps.restartHeaders(edge),
+      SarOps.osDetails(edge))
     assert(rs.map(_.toString) == Seq("2023-06-05 00:15:30.0"))
   }
 

@@ -1,27 +1,19 @@
 package graft
 
-/** Shared helpers for the benchmark mains (Bench / ScaleBench /
-  * KneeBench). */
+/** Shared helpers for the benchmark mains (Bench / ScaleBench). */
 object BenchUtil {
 
-  /** The git commit the benchmark binary was measured on, embedded in
+  /** The git commit the benchmark binary was measured on, plus the LIST
+    * of tracked-modified paths when the tree is dirty — embedded in
     * every artifact JSON (VERDICT r8 item 3: SCALE_r8.json was labeled
     * "final code" but predated two code commits — an artifact must
-    * carry the SHA it measured so `tools/check_artifacts.py` can
-    * reject any that no longer matches HEAD at round end). Appends
-    * `-dirty` when the working tree has uncommitted changes, so a
-    * measurement over unpublished code is visibly unciteable. Returns
+    * carry the SHA it measured so `tools/check_artifacts.py` can reject
+    * any that no longer matches HEAD at round end). A dirty tree gets
+    * `-dirty` appended to the SHA, and the path list lets the gate pass
+    * an artifact whose only dirt is outside the measured-code set and
+    * fail one whose dirt touches src/main or build config. Returns
     * "unknown" outside a git checkout rather than failing the bench. */
-  def gitHead(): String = gitState()._1
-
-  /** [[gitHead]] plus the LIST of tracked-modified paths when the tree
-    * is dirty (r11 — VERDICT r10 item 1: a bare `-dirty` suffix cannot
-    * distinguish dirty DOCS from dirty ENGINE, so the r10 knee
-    * artifact needed a judge reading git to stay credible; with the
-    * path list stamped, `tools/check_artifacts.py` passes an artifact
-    * whose only dirt is outside the measured-code set and fails one
-    * whose dirt touches src/main or build config — mechanically). */
-  def gitState(): (String, Seq[String]) =
+  private def gitState(): (String, Seq[String]) =
     try {
       // NO whole-output trim (r12 bug, caught by its own artifact: a
       // porcelain first line " M NOTES_r12.md" lost its leading space

@@ -112,7 +112,7 @@ object GraftExtensions {
 }
 
 /** Canonical session factory: the configuration every entry point
-  * (Verify/Bench/Demo/user code) should run with. */
+  * (Verify/Bench/the SAR service/user code) should run with. */
 object GraftSession {
   /** `shuffle.partitions` = cores keeps small-corpus plans lean, but a
     * FIXED task count is exactly what breaks a 10× scale-up: every

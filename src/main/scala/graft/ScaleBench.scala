@@ -97,7 +97,7 @@ object ScaleBench {
         "probes deepen with k2 until saturation (~520k vectors), so " +
         "candidate volume grows superlinearly BY CONSTRUCTION at " +
         "these tiers; the alpha-contracted sharded measurement is " +
-        "KneeBench's probes=20 auto-dispatch (SCALE_r9_knee: 1.03)"),
+        "the probes=20 auto-dispatch (SCALE_r9_knee: 1.03)"),
     "q_dedup_cosine_sharded_indexed" ->
       ("same oracle-exhaustive probe settings as " +
         "q_dedup_cosine_sharded, read from the persisted index — " +

@@ -88,27 +88,6 @@ object Curation {
     docs.join(losers, Seq(idCol), "left_anti")
   }
 
-  /** Cluster-semantics near-dup removal: connected components of the
-    * LSH candidate graph ([[Dedup.duplicateClusters]]), keep exactly
-    * the component-minimum document. Differs from the greedy
-    * [[dropNearDups]] on chained near-dups: pairs (2,3),(1,3) leave
-    * greedy survivors {1,2} (2 is never the higher id of a pair) but
-    * cluster survivors {1} (one doc per component). Greedy is
-    * per-pair-local and cheapest; clusters guarantee one survivor per
-    * transitive group — pick by how aggressive the dedup must be. */
-  def dropNearDupsClustered(docs: DataFrame, textCol: String,
-      idCol: String, cfg: Config = Config()): DataFrame = {
-    // star edges preserve connected components exactly (every bucket
-    // member links through the bucket minimum) at Θ(rows) instead of
-    // Θ(Σ bucket²) edge rows — see Dedup.lshBucketMinEdges
-    val clusters = Dedup.duplicateClusters(
-      Dedup.lshBucketMinEdges(docs, textCol, idCol,
-        k = cfg.minhashK, rowsPerBand = cfg.rowsPerBand, n = cfg.shingleN))
-    val losers = clusters.filter(col("node") =!= col("cluster"))
-      .select(col("node").as(idCol))
-    docs.join(losers, Seq(idCol), "left_anti")
-  }
-
   /** The full pipeline: gate → exact dedup → near-dup removal. */
   def curate(docs: DataFrame, idCol: String, textCol: String,
       cfg: Config = Config()): DataFrame =

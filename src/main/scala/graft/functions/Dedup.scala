@@ -1207,11 +1207,7 @@ object Dedup {
   /** The flat-codebook broadcast knee: above this many vectors the
     * dedup-sized codebook (k = n/targetBucket) exceeds the 65,536-
     * centroid broadcast cap and [[cosineDupPairsTrainedInt8]]
-    * dispatches to the sharded two-level path. ONE definition shared
-    * by the dispatcher and graft.KneeBench's per-tier branch label
-    * (the r8 advisor found the bench recomputing the constant — a
-    * formula change would have mislabeled which branch each tier
-    * actually ran). */
+    * dispatches to the sharded two-level path. */
   private[graft] def flatKneeVectors(targetBucket: Int): Long =
     targetBucket.toLong * 65536L
 

@@ -2,31 +2,25 @@ package graft.functions
 
 import org.apache.spark.sql.SparkSession
 
-/** Semantic job-leg tagging for the scale harnesses (r13 — VERDICT r12
-  * item 2): KneeBench's per-job `job_shuffle_bytes` landed in r12 as
-  * RAW data, but aligning a byte step to its leg still meant counting
-  * jobs by position. The engine now stamps the Spark job-group id
+/** Semantic job-leg tagging: the engine stamps the Spark job-group id
   * (thread-local, read by `SparkListenerJobStart.properties`) around
-  * its internal actions, so a listener can aggregate shuffle bytes per
-  * SEMANTIC leg — `train-coarse` (the flat Lloyd's loop),
-  * `train-split:rN` (split-detection counts and round N's seed work),
-  * `train-fine` (the fine Lloyd's loop + its sample exchange — the
-  * probes-independent term that dominates a low-probes campaign) —
-  * and gate the pair-engine leg's exponent separately from bounded
-  * training steps.
+  * its internal training actions, so a listener can attribute jobs and
+  * shuffle bytes to a SEMANTIC leg instead of counting jobs by
+  * position — `train-coarse` (the flat Lloyd's loop), `train-split:rN`
+  * (split-detection counts and round N's seed work), `train-fine` (the
+  * fine Lloyd's loop + its sample exchange). [[graft.Par]] carries the
+  * tag onto its pool threads.
   *
   * Uses the job-group LOCAL PROPERTY directly (not
   * `SparkContext.setJobGroup`, which also flips interrupt-on-cancel)
   * and restores the caller's value in a `finally`, so nesting works:
-  * an outer harness tag (e.g. KneeBench's `pair` around the timed
-  * chain) survives the engine's inner training tags, and whatever the
-  * engine does not claim stays attributed to the outer leg. Tags are
-  * inert outside the harnesses — a no-listener session pays one
-  * thread-local write per tagged block. */
+  * an outer tag survives the engine's inner training tags, and
+  * whatever the engine does not claim stays attributed to the outer
+  * leg. Tags are inert without a listener — one thread-local write per
+  * tagged block. */
 object JobLeg {
-  /** Group-id prefix the harness listeners recognize; the optional
-    * `:qualifier` suffix (e.g. `train-split:r2`) subdivides a leg
-    * without fragmenting its aggregation. */
+  /** Group-id prefix of every tagged leg; an optional `:qualifier`
+    * suffix (e.g. `train-split:r2`) subdivides a leg. */
   val Prefix = "graft-leg-"
 
   private val GroupKey = "spark.jobGroup.id"
@@ -41,16 +35,4 @@ object JobLeg {
     sc.setLocalProperty(GroupKey, Prefix + leg)
     try body finally sc.setLocalProperty(GroupKey, prev)
   }
-
-  /** The leg name of a job-group id: strips [[Prefix]] and any
-    * `:qualifier`; None for untagged/foreign groups. */
-  def legOf(groupId: String): Option[String] =
-    Option(groupId).filter(_.startsWith(Prefix))
-      .map(_.stripPrefix(Prefix).takeWhile(_ != ':'))
-
-  /** The qualifier of a tagged group id (`train-split:r2` -> `r2`). */
-  def qualifierOf(groupId: String): Option[String] =
-    Option(groupId).filter(_.startsWith(Prefix))
-      .map(_.stripPrefix(Prefix)).filter(_.contains(':'))
-      .map(_.dropWhile(_ != ':').drop(1)).filter(_.nonEmpty)
 }

@@ -36,8 +36,6 @@ object Multimodal {
   private val headerMeta =
     udf((payload: Array[Byte]) => ImageHeaders.decode(payload))
 
-  def imageMeta(payload: Column): Column = headerMeta(payload)
-
   /** Wrap any (id, bytes-or-string) frame into the media schema — payload
     * is the raw bytes (UTF-8 for strings), metadata parsed from the real
     * image header when the payload is one (PNG/JPEG/GIF/BMP); opaque

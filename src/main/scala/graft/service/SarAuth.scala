@@ -108,17 +108,6 @@ class SarAuth(spark: SparkSession, baseDir: String,
   def listUsers(): Seq[(String, String)] =
     synchronized(users).toSeq.map { case (u, (_, r)) => (u, r) }.sortBy(_._1)
 
-  def changePassword(username: String, password: String): Boolean =
-    synchronized {
-      require(password.length >= 6, "password must be at least 6 characters")
-      users.get(username) match {
-        case Some((_, r)) =>
-          users += username -> (hashPassword(password), r)
-          persist(); true
-        case None => false
-      }
-    }
-
   // ---- stateless tokens (api/auth.py:40-83) -------------------------
 
   /** Issue a signed bearer token; returns (token, expiresAtEpochSec). */

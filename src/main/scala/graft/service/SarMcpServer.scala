@@ -19,8 +19,9 @@ import scala.collection.immutable.ListMap
   * also scoped out.
   *
   * Protocol errors (unknown method, malformed request) are JSON-RPC
-  * errors; tool execution failures are `isError: true` results with the
-  * message as text content, per the MCP spec.
+  * errors; tool execution failures are `isError: true` results, per the
+  * MCP spec, whose text is the message of a client error (bad argument,
+  * unknown stored file) or a generic "internal server error" otherwise.
   */
 class SarMcpServer(tenants: SarTenants, serverName: String = "graft-sar") {
 
@@ -81,6 +82,16 @@ class SarMcpServer(tenants: SarTenants, serverName: String = "graft-sar") {
   private def message(e: Throwable): String =
     Option(e.getMessage).getOrElse(e.getClass.getSimpleName)
 
+  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
+
+  /** An unexpected tool failure's detail goes to the server log only;
+    * the agent gets a generic text (exception messages carry storage
+    * paths and Spark plan text), as the HTTP shell's 500 does. */
+  private def internalError(tool: String, e: Exception): String = {
+    log.error(s"tool $tool failed", e)
+    "internal server error"
+  }
+
   /** MCP revisions this server implements (max = the default answer). */
   private val supportedProtocolVersions =
     Set("2024-11-05", "2025-03-26", "2025-06-18")
@@ -123,13 +134,14 @@ class SarMcpServer(tenants: SarTenants, serverName: String = "graft-sar") {
         }
         val fn = tools.find(_._1 == name).map(_._4).getOrElse(
           throw new RpcError(-32602, s"unknown tool '$name'"))
-        Some(try {
-          ListMap("content" -> Seq(ListMap("type" -> "text",
-            "text" -> Json.render(fn(args)))), "isError" -> false)
-        } catch { case e: Exception =>
-          // tool failures are results, not protocol errors (MCP spec)
-          ListMap("content" -> Seq(ListMap("type" -> "text",
-            "text" -> message(e))), "isError" -> true)
+        // tool failures are results, not protocol errors (MCP spec)
+        def result(text: String, isError: Boolean) = ListMap(
+          "content" -> Seq(ListMap("type" -> "text", "text" -> text)),
+          "isError" -> isError)
+        Some(try result(Json.render(fn(args)), isError = false) catch {
+          case e @ (_: IllegalArgumentException | _: NoSuchStoredFile) =>
+            result(message(e), isError = true)
+          case e: Exception => result(internalError(name, e), isError = true)
         })
       case m if m.startsWith("notifications/") => None
       case m => throw new RpcError(-32601, s"method not found: $m")

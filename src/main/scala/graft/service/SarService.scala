@@ -223,9 +223,21 @@ class SarService(spark: SparkSession, storageDir: String) {
       case (None, Some(e0)) => wide = SarOps.filterByRange(wide, "date", e0, "lt")
       case _ =>
     }
-    if (metrics.nonEmpty)
+    if (metrics.nonEmpty) {
+      metrics.foreach(requireMetric(wide, _))
       wide = wide.select((col("date") +: metrics.map(col)): _*)
+    }
     (wide, TableMeta(header, alias, effectiveDevice))
+  }
+
+  /** The one metric check: a requested metric must be a column of the
+    * resolved table, else a client error listing what is available
+    * (reads the schema only — no Spark job). */
+  private[service] def requireMetric(table: DataFrame,
+      metric: String): Unit = {
+    val avail = table.columns.filterNot(_ == "date")
+    require(avail.contains(metric),
+      s"Unknown metric '$metric'; available: ${avail.mkString(", ")}")
   }
 
   /** Delete a stored file: parquet directory AND both cache layers

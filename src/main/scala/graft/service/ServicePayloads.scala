@@ -117,13 +117,6 @@ private[service] object ServicePayloads {
     (rows.map(RawJson), n, step, truncated)
   }
 
-  private def requireMetric(table: org.apache.spark.sql.DataFrame,
-      metric: String): Unit = {
-    val avail = table.columns.filterNot(_ == "date")
-    require(avail.contains(metric),
-      s"Unknown metric '$metric'; available: ${avail.mkString(", ")}")
-  }
-
   /** POST /charts/single (api/main.py:348-385 minus render fields): one
     * metric → detail series, no metric → every metric of the header
     * (overview_v1's melted frame). Carries the same resolved meta block
@@ -135,7 +128,7 @@ private[service] object ServicePayloads {
       budget: Int = chartBudget): ListMap[String, Any] = {
     val (full, meta) = svc.getTableWithMeta(name, header, device,
       start.map(parseTs), end.map(parseTs))
-    metric.foreach(requireMetric(full, _))
+    metric.foreach(svc.requireMetric(full, _))
     val valueCols = metric.map(Seq(_))
       .getOrElse(full.columns.filterNot(_ == "date").toSeq)
     val table = metric.map(m => full.select("date", m)).getOrElse(full)
@@ -194,7 +187,7 @@ private[service] object ServicePayloads {
     var ranges = Seq.empty[(Double, Double)]
     val perFile = files.map { f =>
       val (full, meta) = svc.getTableWithMeta(f, header, device)
-      requireMetric(full, metric)
+      svc.requireMetric(full, metric)
       alias = meta.alias
       val table = full.select("date", metric)
       ranges ++= SarOps.yRange(table, Seq(metric))

@@ -557,6 +557,35 @@ class SarHttpServerSpec extends AnyFunSuite {
     } finally server.stop()
   }
 
+  test("unknown metric on /data and /statistics is a 400 listing metrics") {
+    val base = Files.createTempDirectory("graft_metric").toString
+    val tenants = new SarTenants(spark, base)
+    val up = Files.createTempFile("sa_metric", ".txt")
+    Files.writeString(up, resource("sa_24h.txt"))
+    tenants.forUser("alice").upload(up.toString, "day1")
+    val server = new SarHttpServer(tenants)
+    val port = server.start()
+    val root = s"http://localhost:$port/api/v1/files/day1"
+    try {
+      for (path <- Seq("/data?header=CPU&metrics=nope",
+          "/data?header=CPU&metrics=nope&format=csv",
+          "/statistics?header=CPU&metrics=nope",
+          "/statistics?header=CPU&metrics=nope&format=csv")) {
+        val (s, body, _) = get(root + path)
+        assert(s == 400 && body.contains("Unknown metric 'nope'") &&
+          body.contains("available") && body.contains("%idle"),
+          s"$path -> $s $body")
+      }
+    } finally server.stop()
+    // the MCP shell answers the same input with a tool error
+    val data = new SarMcpServer(tenants).handleLine(
+      """{"jsonrpc":"2.0","id":1,"method":"tools/call","params":""" +
+        """{"name":"get_data","arguments":{"name":"day1",""" +
+        """"header":"CPU","metric":"nope","username":"alice"}}}""").get
+    assert(data.contains(""""isError":true""") &&
+      data.contains("Unknown metric 'nope'"), data)
+  }
+
   test("JSON request bodies are capped at 1 MiB before auth") {
     import graft.service.SarAuth
     val base = Files.createTempDirectory("graft_cap").toString

@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 import scala.io.Source
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
@@ -145,5 +146,29 @@ class SarMcpServerSpec extends AnyFunSuite {
     assert(call(14, "delete_sar_file",
       """{"name":"day1","username":"alice"}""")
       .contains("""\"deleted\":true"""))
+  }
+
+  test("MCP tool failures other than client errors answer a generic text") {
+    val base = Files.createTempDirectory("graft_mcp_err").toString
+    val mcp = new SarMcpServer(new SarTenants(spark, base))
+    def call(id: Int, tool: String, args: String): String =
+      mcp.handleLine(s"""{"jsonrpc":"2.0","id":$id,"method":"tools/call",""" +
+        s""""params":{"name":"$tool","arguments":$args}}""").get
+    assert(call(1, "upload_sar_file",
+      s"""{"name":"broken","content":"${esc(resource("sa_24h.txt"))}",""" +
+        """"username":"alice"}""").contains(""""isError":false"""))
+    // a corrupt stored parquet fails inside Spark: the tool text must
+    // not echo the exception, which names the storage directory
+    val dir = java.nio.file.Paths.get(base, "alice", "broken.parquet")
+    val parts = scala.util.Using.resource(Files.list(dir)) { ps =>
+      ps.iterator().asScala.filter(_.getFileName.toString
+        .startsWith("part-")).toList
+    }
+    parts.foreach(Files.write(_, "not parquet".getBytes("UTF-8")))
+    val info = call(2, "get_file_info",
+      """{"name":"broken","username":"alice"}""")
+    assert(info.contains(""""isError":true""") &&
+      info.contains(""""text":"internal server error"""") &&
+      !info.contains(base), info)
   }
 }

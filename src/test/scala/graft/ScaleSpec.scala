@@ -201,7 +201,7 @@ class ScaleSpec extends AnyFunSuite {
     // the two oracle-exhaustive sharded declarations (fixed 8×64
     // probes deepen with k₂ until ~520k vectors — superlinear BY
     // CONSTRUCTION at small tiers; the contracted sharded measurement
-    // is KneeBench's probes=20 auto-dispatch) are exempt; the
+    // is the budgeted probes=20 auto-dispatch) are exempt; the
     // budgeted int8/indexed chains still carry the contract
     assert(!ScaleBench.violatesContract("q_dedup_cosine_sharded", 1.3))
     assert(!ScaleBench.violatesContract(

@@ -8,12 +8,13 @@ itself (and docs/logs) naturally moves HEAD, so the gate checks the
 measured-SHA..HEAD diff rather than literal SHA equality.
 
 An artifact depends on the ENGINE (everything under src/ except the
-top-level bench mains, plus build config) and on its PRODUCING main.
-A gate-metadata change inside another producer (e.g. widening
-ScaleBench.ContractExempt) does not alter what a KneeBench binary
-measured, so it must not invalidate the knee artifact. Known blind
-spot, documented here: KneeBench reads ScaleBench.ContractAlpha — if
-that CONSTANT ever changes, re-run the knee by hand.
+top-level harness mains, plus build config) and on its PRODUCING main.
+A change inside another main does not alter what the producing binary
+measured, so it must not invalidate the artifact: kept mains that
+produce no gated artifact map to no artifact at all, and a main
+deleted since the stamp is no measured-code change. The knee
+artifacts' producer is deleted; their top-pair and contract checks
+below still read the committed history.
 
 Dirty stamps (r11 — VERDICT r10 item 1): BenchUtil now embeds the
 tracked-modified PATH LIST next to the `-dirty` SHA, so the gate can
@@ -32,7 +33,7 @@ entirely, so such an artifact would pass while verifying nothing
 about scaling. A deliberate crossing measurement must carry an
 explicit `"crossing_waiver": "<why>"` field to pass.
 
-Usage: tools/check_artifacts.py [glob ...]   (default: SCALE_r11*.json,
+Usage: tools/check_artifacts.py [glob ...]   (default: SCALE_r13*.json,
 BENCH_FULL.json)
 Exit 0 = every artifact's measured code state is HEAD's and its
 contract is clean; 1 otherwise.
@@ -57,9 +58,12 @@ MAINS = {
     "src/main/scala/graft/ScaleBench.scala": ["SCALE_r*_x5m.json",
                                               "SCALE_r*_sharded.json",
                                               "SCALE_r?.json"],
-    "src/main/scala/graft/KneeBench.scala": ["SCALE_r*_knee*.json"],
     "src/main/scala/graft/ScaleGen.scala": ["SCALE_r*.json"],
 }
+# kept mains that produce no gated artifact: plan printer, crossover
+# calibration, correctness dump
+MAINS.update((f"src/main/scala/graft/{m}.scala", [])
+             for m in ("Explain", "Calibrate", "Verify"))
 
 
 def run(*args):
@@ -97,9 +101,23 @@ def measured_code_paths(paths, artifact):
     return bad
 
 
+def deleted_main(sha, path):
+    """True iff `path` is a top-level harness main (a `def main(` file
+    directly under src/main/scala/graft/) at `sha` that HEAD no longer
+    has: deleting a main changes no other main's binary, and its own
+    artifacts are history, so its removal measures nothing."""
+    if path.count("/") != 4 or not path.startswith("src/main/scala/graft/"):
+        return False
+    if subprocess.run(["git", "cat-file", "-e", f"HEAD:{path}"],
+                      capture_output=True).returncode == 0:
+        return False
+    return "def main(" in run("git", "show", f"{sha}:{path}")
+
+
 def invalidating_changes(sha, artifact):
     out = run("git", "diff", "--name-only", f"{sha}..HEAD")
-    return measured_code_paths(out.splitlines(), artifact)
+    return [p for p in measured_code_paths(out.splitlines(), artifact)
+            if not deleted_main(sha, p)]
 
 
 head = run("git", "rev-parse", "HEAD").strip()

@@ -3,9 +3,13 @@ package graft
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
+import scala.collection.immutable.ListMap
+
 import org.apache.spark.GraftBusBridge
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
   SparkListenerJobStart, SparkListenerStageCompleted}
+
+import graft.service.Json
 
 /** Benchmark main (driver contract): runs every registered query on
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line with per-query seconds.
@@ -48,8 +52,8 @@ object Bench {
 
   /** One timed run: seconds (wall = build + exec; wall -1 marks a
     * failure) plus the listener's counts over exactly that run. */
-  private final case class Run(wall: Double, build: Double, exec: Double,
-      jobs: Int, stages: Int, taskSec: Double, shufRead: Long,
+  private[graft] final case class Run(wall: Double, build: Double,
+      exec: Double, jobs: Int, stages: Int, taskSec: Double, shufRead: Long,
       shufWrite: Long)
 
   /** Job/stage/task/shuffle counters, reset and read around each timed
@@ -172,64 +176,70 @@ object Bench {
       val order = if (p % 2 == 0) names else names.reverse
       order.map(n => n -> exec(n)).toMap
     }
-    val timings: Seq[(String, Seq[Run])] =
-      names.map(n => n -> byPass.map(_(n)))
 
-    // any failed run marks the query -1 (a query that fails even once
-    // is not a timing)
-    def stat(rs: Seq[Run], pick: Seq[Double] => Double): Double =
-      if (rs.exists(_.wall < 0)) -1.0 else pick(rs.map(_.wall))
-    val medianRuns = timings.collect { case (n, rs) if !rs.exists(_.wall < 0) =>
-      n -> rs.sortBy(_.wall).apply(rs.length / 2) }
-    val medians = timings.map { case (n, rs) =>
-      n -> stat(rs, s => s.sorted.apply(s.length / 2)) }
-    val mins = timings.map { case (n, rs) => n -> stat(rs, _.min) }
-
-    def toJson(kvs: Seq[(String, Double)]) =
-      kvs.map { case (k, v) => "\"" + k + "\":" + v }
-        .mkString("{", ",", "}")
-    def round3(s: Double): Double = math.round(s * 1000) / 1000.0
-    val profileJson = medianRuns.map { case (n, r) =>
-      s""""$n":{"build_s":${round3(r.build)},"exec_s":${round3(r.exec)},""" +
-        s""""jobs":${r.jobs},"stages":${r.stages},"task_s":${round3(r.taskSec)},""" +
-        s""""shuffle_read_bytes":${r.shufRead},"shuffle_write_bytes":${r.shufWrite}}"""
-    }.mkString("{", ",", "}")
-    // failures stay visible per-query as -1 but must not subtract from
-    // the headline total
-    val total = medians.map(_._2).filter(_ >= 0).sum
-    // per-pass totals + per-query pass times (r12 — VERDICT r11 item 6:
-    // a single outlier pass, e.g. disk contention during one index
-    // build, was only visible by min/median forensics; with the raw
-    // passes in the artifact the outlier is machine-readable)
-    val passTotals = byPass
-      .map(m => m.values.map(_.wall).filter(_ >= 0).sum)
-      .mkString("[", ",", "]")
-    val passesJson = byPass
-      .map(m => toJson(names.map(n => n -> m(n).wall)))
-      .mkString("[", ",", "]")
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","n":$runs,${BenchUtil.commitJsonFields(compact = true)},"queries":${toJson(medians)},"queries_min":${toJson(mins)},"pass_totals":$passTotals,"passes":$passesJson,"profile":$profileJson,"sf":"$sfDir"}"""
-    println(line)
     // the single-line contract output is also written to a file: with
     // 120+ queries the line runs past typical log-capture tail windows
     // (the r6 driver artifact kept only the tail — head queries and the
     // queries_min stat were lost), and a file survives truncation
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
       "BENCH_FULL.json")
-    // Compact FINAL summary line (r14 — VERDICT r13 item 1): with 130+
-    // queries the full contract line above runs ~20 KB, and the driver's
-    // log capture keeps only a ~2000-char tail, so BENCH_r10–r13 all
-    // shipped `parsed: null` (a headless JSON fragment). This second
-    // line is ≤300 chars — it survives any tail window — and repeats
-    // the headline fields (total seconds, pass/query counts, commit,
-    // sf); per-query medians/mins/passes/profile stay in the full line above
-    // and in the `queries_file` artifact. Nothing was removed from the
-    // full line, so existing consumers are unchanged.
-    println(s"""{"metric":"total","value":$total,"unit":"sec","n":$runs,"n_queries":${names.length},${BenchUtil.commitJsonFields(compact = true)},"pass_totals":$passTotals,"queries_file":"$outPath","sf":"$sfDir"}""")
+    val (full, summary) =
+      contract(names, byPass, BenchUtil.commitFields(), sfDir, outPath)
+    val line = Json.render(full)
+    println(line)
+    println(Json.render(summary))
     try java.nio.file.Files.writeString(
       java.nio.file.Paths.get(outPath), line + "\n")
     catch { case e: Exception =>
       System.err.println(s"[bench] could not write $outPath: ${e.getMessage}")
     }
     spark.stop()
+  }
+
+  /** The full contract line (also the `outPath` file) and the compact
+    * final summary line, from the timed passes (`byPass`, one map per
+    * pass; a wall of -1 marks a failed run).
+    *
+    * Failures stay visible per query as -1 but do not subtract from the
+    * headline total; `profile` is the median-wall run's row (a query that
+    * failed in any run has none). `pass_totals`/`passes` keep the raw
+    * passes so a single outlier pass is machine-readable.
+    *
+    * The summary line exists because the full line runs ~20 KB with 130+
+    * queries, and a log capture that keeps only a ~2000-char tail holds
+    * a headless fragment of it. The summary is ≤300 chars and repeats
+    * the headline fields; per-query medians/mins/passes/profile stay in
+    * the full line and in the `queries_file` artifact. */
+  private[graft] def contract(names: Seq[String],
+      byPass: Seq[Map[String, Run]], commit: Seq[(String, Any)],
+      sfDir: String, outPath: String)
+      : (ListMap[String, Any], ListMap[String, Any]) = {
+    val timings = names.map(n => n -> byPass.map(_(n)))
+    def stat(rs: Seq[Run], pick: Seq[Double] => Double): Double =
+      if (rs.exists(_.wall < 0)) -1.0 else pick(rs.map(_.wall))
+    val medians = timings.map { case (n, rs) =>
+      n -> stat(rs, s => s.sorted.apply(s.length / 2)) }
+    val mins = timings.map { case (n, rs) => n -> stat(rs, _.min) }
+    def round3(s: Double): Double = math.round(s * 1000) / 1000.0
+    val profile = timings.collect { case (n, rs) if !rs.exists(_.wall < 0) =>
+      val r = rs.sortBy(_.wall).apply(rs.length / 2)
+      n -> ListMap("build_s" -> round3(r.build), "exec_s" -> round3(r.exec),
+        "jobs" -> r.jobs, "stages" -> r.stages,
+        "task_s" -> round3(r.taskSec), "shuffle_read_bytes" -> r.shufRead,
+        "shuffle_write_bytes" -> r.shufWrite)
+    }
+    val total = medians.map(_._2).filter(_ >= 0).sum
+    val passTotals = byPass.map(m => m.values.map(_.wall).filter(_ >= 0).sum)
+    val head = Seq("metric" -> "total", "value" -> total, "unit" -> "sec",
+      "n" -> byPass.length)
+    val full = ListMap(head ++ commit ++ Seq(
+      "queries" -> ListMap(medians: _*), "queries_min" -> ListMap(mins: _*),
+      "pass_totals" -> passTotals,
+      "passes" -> byPass.map(m => ListMap(names.map(n => n -> m(n).wall): _*)),
+      "profile" -> ListMap(profile: _*), "sf" -> sfDir): _*)
+    val summary = ListMap(head ++ Seq("n_queries" -> names.length) ++
+      commit ++ Seq("pass_totals" -> passTotals, "queries_file" -> outPath,
+        "sf" -> sfDir): _*)
+    (full, summary)
   }
 }

@@ -44,21 +44,10 @@ object BenchUtil {
       }
     } catch { case _: Exception => ("unknown", Seq.empty) }
 
-  /** The two artifact-identity JSON fields every bench main embeds:
-    * `"commit": …, "dirty_paths": […]` — splice with surrounding
-    * comma handling left to the caller. `compact = true` emits the
-    * single-line `"k":v` spacing Bench's one-line contract output
-    * uses (r11 ADVICE: Bench post-processed the pretty form with
-    * `.replace(": ", ":")`, which would mangle a dirty path that
-    * itself contains ": " and silently depended on this method's
-    * exact spacing). */
-  def commitJsonFields(compact: Boolean = false): String = {
+  /** The two artifact-identity fields every bench main embeds, in
+    * order: `commit` and `dirty_paths`. */
+  def commitFields(): Seq[(String, Any)] = {
     val (sha, dirty) = gitState()
-    val sep = if (compact) ":" else ": "
-    val listSep = if (compact) "," else ", "
-    s""""commit"$sep"$sha", "dirty_paths"$sep${
-      dirty.map(p => "\"" + p.replace("\\", "\\\\")
-          .replace("\"", "\\\"") + "\"")
-        .mkString("[", listSep, "]")}"""
+    Seq("commit" -> sha, "dirty_paths" -> dirty)
   }
 }

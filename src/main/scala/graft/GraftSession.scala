@@ -114,24 +114,16 @@ object GraftExtensions {
 /** Canonical session factory: the configuration every entry point
   * (Verify/Bench/the SAR service/user code) should run with. */
 object GraftSession {
-  /** `shuffle.partitions` = cores keeps small-corpus plans lean, but a
-    * FIXED task count is exactly what breaks a 10× scale-up: every
-    * shuffle task carries 10× the rows, blows its memory fraction, and
-    * spills — the 5M-doc stress run measured the heaviest chains
-    * drifting from α≈0.8 (500k, in-memory tasks) to α≈1.2 (5M,
-    * spilling tasks) with no algorithmic change. The remedy is AQE's
-    * `initialPartitionNum`: start every shuffle wide (total shuffle
-    * bytes / 64 MB advisory size) and let partition coalescing merge
-    * small data back down. The right start count depends on DATA
-    * VOLUME, which a session factory cannot know — so it is an
-    * explicit knob (`SPARK_GRAFT_INITIAL_PARTITIONS`), defaulting to
-    * Spark's own (= shuffle.partitions): at oracle SF a wide start is
-    * pure scheduling tax (measured +0.2–0.6 s on sub-second queries at
-    * 8× cores), while the 5M-doc harness sets it high
-    * ([[ScaleBench]]) and measures the spill relief directly. On a
-    * cluster, size it to the LARGEST shuffle, never to core count. */
-  def builder(cores: Int = 32): SparkSession.Builder = {
-    val b = SparkSession.builder()
+  /** `shuffle.partitions` = cores keeps small-corpus plans lean; AQE's
+    * `initialPartitionNum` keeps Spark's default (= shuffle.partitions),
+    * since at oracle SF a wide start is pure scheduling tax (measured
+    * +0.2–0.6 s on sub-second queries at 8× cores). Corpora 10× larger
+    * need wide starts to stop spilling ([[ScaleBench]] sets 256); a
+    * deployment sets it, like any Spark setting, as
+    * `-Dspark.sql.adaptive.coalescePartitions.initialPartitionNum=…`,
+    * sized to its LARGEST shuffle, never to core count. */
+  def builder(cores: Int = 32): SparkSession.Builder =
+    SparkSession.builder()
       .master(s"local[$cores]")
       .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.sql.adaptive.enabled", "true")
@@ -154,19 +146,6 @@ object GraftSession {
       .config("spark.sql.optimizer.excludedRules",
         "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
       .withExtensions(new GraftExtensions)
-    sys.env.get("SPARK_GRAFT_INITIAL_PARTITIONS").foreach(n =>
-      b.config(
-        "spark.sql.adaptive.coalescePartitions.initialPartitionNum", n))
-    // Shuffle/spill codec (context-creation config, hence env not conf):
-    // lz4 (Spark's default) trades ratio for speed; zstd cuts shuffle
-    // bytes ~25-40%, which is the difference between completing and
-    // ENOSPC when a 2M-vector blocked-dedup chain's live spill meets a
-    // single host's scratch disk. Scale campaigns set zstd; CPU-bound
-    // oracle-SF runs keep lz4.
-    sys.env.get("SPARK_GRAFT_SHUFFLE_CODEC").foreach(c =>
-      b.config("spark.io.compression.codec", c))
-    b
-  }
 
   def get(cores: Int = 32): SparkSession = {
     val s = builder(cores).getOrCreate()

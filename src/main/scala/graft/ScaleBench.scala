@@ -2,8 +2,12 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import scala.collection.immutable.ListMap
+
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+
+import graft.service.Json
 
 /** Scale-stress harness (VERDICT r5 punch item #1): runs the heaviest
   * registered query chains against ScaleGen corpora at increasing row
@@ -126,10 +130,12 @@ object ScaleBench {
     // scale runs shuffle GBs per stage: start shuffles wide and let AQE
     // coalesce (see GraftSession.builder's scaladoc — at these volumes
     // the wide start is spill relief, at oracle SF it would be tax).
-    // Runtime-settable conf, so the env knob still wins if set.
-    if (!sys.env.contains("SPARK_GRAFT_INITIAL_PARTITIONS"))
-      spark.conf.set(
-        "spark.sql.adaptive.coalescePartitions.initialPartitionNum", 256)
+    // A value the deployment's Spark conf sets (e.g. `-Dspark.sql.
+    // adaptive.coalescePartitions.initialPartitionNum=…`) wins.
+    val initialPartitions =
+      "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
+    if (!spark.sparkContext.getConf.contains(initialPartitions))
+      spark.conf.set(initialPartitions, 256)
 
     /** Replay a corpus table as a bounded stream (4 micro-batches via
       * maxFilesPerTrigger so the watermark actually advances and evicts
@@ -231,15 +237,17 @@ object ScaleBench {
       else math.log(b / a) / math.log(ratio)
     }
 
+    def rounded(x: Double, scale: Double): Double =
+      math.rint(x * scale) / scale // NaN stays NaN, rendered as null
     val rows = names.map { n =>
-      val perDir = dirs.map(d => f"""\"${nRows(d)}\":${mins((n, d))}%.3f""")
-        .mkString("{", ",", "}")
       val alpha = exponent(n)
       println(f"[scale] $n%-24s " +
         dirs.map(d => f"${mins((n, d))}%8.2fs").mkString(" ") +
         f"  alpha=$alpha%5.2f")
-      s"""    "$n": {"secs": $perDir, "alpha": ${if (alpha.isNaN) "null"
-        else f"$alpha%.3f"}}"""
+      n -> ListMap(
+        "secs" -> ListMap(dirs.map(d =>
+          nRows(d).toString -> rounded(mins((n, d)), 1000)): _*),
+        "alpha" -> rounded(alpha, 1000))
     }
     val superlinear = names.filter(n => exponent(n) >= 1.5)
     // the CONTRACT gate: scale-path chains fail at alpha >= 1.15;
@@ -247,24 +255,15 @@ object ScaleBench {
     // the artifact with their reasons so an accidental exemption is
     // visible to the judge, not silent
     val violations = names.filter(n => violatesContract(n, exponent(n)))
-    val exemptJson = ContractExempt.filter(e => names.contains(e._1))
-      .map { case (n, why) => s"""    "$n": "$why"""" }
-      .mkString("{\n", ",\n", "\n  }")
-    val json =
-      s"""{
-  ${BenchUtil.commitJsonFields()},
-  "scales": ${dirs.map(d => s""""${nRows(d)}"""").mkString("[", ",", "]")},
-  "top_pair_ratio": ${f"$ratio%.1f"},
-  "queries": {
-${rows.mkString(",\n")}
-  },
-  "superlinear": ${superlinear.map(n => s""""$n"""").mkString("[", ",", "]")},
-  "contract_alpha": $ContractAlpha,
-  "contract_violations": ${violations.map(n => s""""$n"""")
-        .mkString("[", ",", "]")},
-  "contract_exempt": $exemptJson
-}
-"""
+    val json = Json.render(ListMap(BenchUtil.commitFields() ++ Seq(
+      "scales" -> dirs.map(d => nRows(d).toString),
+      "top_pair_ratio" -> rounded(ratio, 10),
+      "queries" -> ListMap(rows: _*),
+      "superlinear" -> superlinear,
+      "contract_alpha" -> ContractAlpha,
+      "contract_violations" -> violations,
+      "contract_exempt" -> ContractExempt.filter(e => names.contains(e._1))
+    ): _*)) + "\n"
     Files.writeString(Paths.get(outJson), json)
     println(s"[scale] wrote $outJson; superlinear(alpha>=1.5): " +
       (if (superlinear.isEmpty) "NONE" else superlinear.mkString(", ")))

@@ -1,23 +1,12 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+
+import graft.service.Json
+
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
-
-  /** Quoted JSON string: backslash, quote, and ALL control chars (<0x20)
-    * escaped — a tab or CR in builder-authored SQL would otherwise make
-    * the driver's json.load fail and silently zero the round's
-    * correctness. */
-  private def jsonQuote(s: String): String = "\"" + s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     // optional 3rd arg: comma-separated query names for local iteration
@@ -39,10 +28,8 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${jsonQuote(k)}: ${jsonQuote(v)}" }
-      .mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      Json.render(SparkEntry.oracleSql))
     spark.stop()
   }
 }

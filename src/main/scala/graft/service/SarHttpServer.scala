@@ -2,7 +2,6 @@ package graft.service
 
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets.UTF_8
-import java.sql.Timestamp
 
 import scala.collection.immutable.ListMap
 
@@ -493,47 +492,4 @@ class SarHttpServer(tenants: SarTenants, port: Int = 0,
 
   private def json(ex: HttpExchange, status: Int, value: Any): Unit =
     respond(ex, status, "application/json", Json.render(value))
-}
-
-/** Minimal JSON writer for the HTTP shell — the response values are all
-  * plain JVM types collected from DataFrames, so a renderer (no parser)
-  * is the whole requirement; NaN/Infinity render as null like FastAPI's
-  * `value != value` guard (api/main.py:325). */
-/** Pre-serialized JSON embedded verbatim (e.g. rows from
-  * `Dataset.toJSON`) — never re-escaped. */
-private[service] final case class RawJson(json: String)
-
-private[service] object Json {
-  def render(v: Any): String = v match {
-    case null | None => "null"
-    case Some(x) => render(x)
-    case r: RawJson => r.json
-    case s: String => quote(s)
-    case b: Boolean => b.toString
-    case d: Double => if (d.isNaN || d.isInfinite) "null" else d.toString
-    case f: Float => render(f.toDouble)
-    case n: java.lang.Number => n.toString
-    case t: Timestamp => quote(t.toString)
-    case d: java.sql.Date => quote(d.toString)
-    case m: scala.collection.Map[_, _] =>
-      m.map { case (k, x) => quote(String.valueOf(k)) + ":" + render(x) }
-        .mkString("{", ",", "}")
-    case it: Iterable[_] => it.map(render).mkString("[", ",", "]")
-    case arr: Array[_] => arr.map(render).mkString("[", ",", "]")
-    case other => quote(other.toString)
-  }
-
-  private def quote(s: String): String = {
-    val sb = new StringBuilder("\"")
-    s.foreach {
-      case '"' => sb.append("\\\"")
-      case '\\' => sb.append("\\\\")
-      case '\n' => sb.append("\\n")
-      case '\r' => sb.append("\\r")
-      case '\t' => sb.append("\\t")
-      case c if c < ' ' => sb.append(f"\\u${c.toInt}%04x")
-      case c => sb.append(c)
-    }
-    sb.append('"').toString
-  }
 }

@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.util.Properties
-
 import org.apache.hadoop.fs.Path
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -128,16 +126,11 @@ object CorpusIngest {
   def batchState(spark: SparkSession, manifestDir: String,
       batchId: String): Option[(String, Long, Long)] = {
     val f = new Path(s"$manifestDir/$batchId.properties")
-    val fs = f.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(f)) None
-    else {
-      val in = fs.open(f)
-      val props = new Properties()
-      try props.load(in) finally in.close()
-      def p(k: String) = Option(props.getProperty(k)).getOrElse(
+    MetaProps.read(spark.sparkContext.hadoopConfiguration, f).map { props =>
+      def p(k: String) = props.getOrElse(k,
         throw new IllegalStateException(
           s"corrupt commit manifest $f: missing $k"))
-      Some((p("state"), p("n").toLong, p("digest").toLong))
+      (p("state"), p("n").toLong, p("digest").toLong)
     }
   }
 
@@ -150,13 +143,8 @@ object CorpusIngest {
     val live = new Path(s"$manifestDir/$batchId.properties")
     val tmp = new Path(s"$manifestDir/$batchId.tmp")
     val fs = live.getFileSystem(conf)
-    val out = fs.create(tmp, true)
-    val props = new Properties()
-    props.setProperty("state", state)
-    props.setProperty("n", n.toString)
-    props.setProperty("digest", digest.toString)
-    try props.store(out, "graft ingest commit manifest")
-    finally out.close()
+    MetaProps.write(conf, tmp, "graft ingest commit manifest",
+      "state" -> state, "n" -> n.toString, "digest" -> digest.toString)
     if (!fs.exists(live)) {
       if (!fs.rename(tmp, live)) throw new IllegalStateException(
         s"manifest write failed: $tmp -> $live")

@@ -65,14 +65,9 @@ object DedupLedger {
     * lesson, applied one level down). */
   def write(docs: DataFrame, textCol: String, path: String,
       prefixWords: Int = 8, bucketChars: Int = 2): Unit = {
-    val f = new org.apache.hadoop.fs.Path(s"$path/meta.properties")
-    val fs = f.getFileSystem(
-      docs.sparkSession.sparkContext.hadoopConfiguration)
-    val props = new java.util.Properties()
-    props.setProperty("prefixWords", prefixWords.toString)
-    val out = fs.create(f, true)
-    try props.store(out, "DedupLedger key rule")
-    finally out.close()
+    MetaProps.write(docs.sparkSession.sparkContext.hadoopConfiguration,
+      new org.apache.hadoop.fs.Path(s"$path/meta.properties"),
+      "DedupLedger key rule", "prefixWords" -> prefixWords.toString)
     keyRows(docs, textCol, prefixWords, bucketChars)
       .write.mode("overwrite").partitionBy("bucket")
       .parquet(s"$path/keys")
@@ -81,17 +76,10 @@ object DedupLedger {
   /** The stored key rule; ledgers seeded before the rule was stored
     * (no meta file) fall back to the caller's parameter. */
   private def storedPrefixWords(spark: SparkSession, path: String,
-      fallback: Int): Int = {
-    val f = new org.apache.hadoop.fs.Path(s"$path/meta.properties")
-    val fs = f.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(f)) return fallback
-    val in = fs.open(f)
-    val props = new java.util.Properties()
-    try props.load(in)
-    finally in.close()
-    Option(props.getProperty("prefixWords")).map(_.toInt)
-      .getOrElse(fallback)
-  }
+      fallback: Int): Int =
+    MetaProps.read(spark.sparkContext.hadoopConfiguration,
+        new org.apache.hadoop.fs.Path(s"$path/meta.properties"))
+      .flatMap(_.get("prefixWords")).map(_.toInt).getOrElse(fallback)
 
   /** Ledger reads carry an explicit schema: an EMPTY seed write leaves
     * only _SUCCESS behind (no parquet footer to infer from), and

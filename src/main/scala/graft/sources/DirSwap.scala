@@ -1,5 +1,7 @@
 package graft.sources
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 
@@ -31,6 +33,32 @@ private[sources] object DirSwap {
             s"failed; $live is missing — restore the staged copy at $aside")
     }
     fs.delete(aside, true)
+  }
+}
+
+/** The one `.properties` reader and writer for store metadata: the
+  * ledgers' key rule and band geometry, the ingest commit manifests. */
+private[sources] object MetaProps {
+
+  /** The file's entries; None when it does not exist. */
+  def read(conf: Configuration, f: Path): Option[Map[String, String]] = {
+    val fs = f.getFileSystem(conf)
+    if (!fs.exists(f)) None
+    else {
+      val props = new java.util.Properties()
+      val in = fs.open(f)
+      try props.load(in) finally in.close()
+      Some(props.asScala.toMap)
+    }
+  }
+
+  /** Create or overwrite `f` with `entries`. */
+  def write(conf: Configuration, f: Path, comment: String,
+      entries: (String, String)*): Unit = {
+    val props = new java.util.Properties()
+    entries.foreach { case (k, v) => props.setProperty(k, v) }
+    val out = f.getFileSystem(conf).create(f, true)
+    try props.store(out, comment) finally out.close()
   }
 }
 

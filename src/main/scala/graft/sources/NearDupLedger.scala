@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.util.Properties
-
 import org.apache.hadoop.fs.Path
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -57,30 +55,20 @@ object NearDupLedger {
       bucketChars: Int)
 
   private def writeParams(spark: SparkSession, path: String,
-      p: BandParams): Unit = {
-    val props = new Properties()
-    props.setProperty("k", p.k.toString)
-    props.setProperty("rowsPerBand", p.rowsPerBand.toString)
-    props.setProperty("n", p.n.toString)
-    props.setProperty("bucketChars", p.bucketChars.toString)
-    val f = new Path(s"$path/meta.properties")
-    val fs = f.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(f, true)
-    try props.store(out, "NearDupLedger band geometry")
-    finally out.close()
-  }
+      p: BandParams): Unit =
+    MetaProps.write(spark.sparkContext.hadoopConfiguration,
+      new Path(s"$path/meta.properties"), "NearDupLedger band geometry",
+      "k" -> p.k.toString, "rowsPerBand" -> p.rowsPerBand.toString,
+      "n" -> p.n.toString, "bucketChars" -> p.bucketChars.toString)
 
   private def readParams(spark: SparkSession, path: String): BandParams = {
     val f = new Path(s"$path/meta.properties")
-    val fs = f.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(f)
-    val props = new Properties()
-    try props.load(in)
-    finally in.close()
+    val props = MetaProps.read(spark.sparkContext.hadoopConfiguration, f)
+      .getOrElse(throw new java.io.FileNotFoundException(
+        s"File $f does not exist"))
     def i(name: String) = {
-      val v = props.getProperty(name)
-      require(v != null, s"near-dup ledger at $path: missing $name")
-      v.toInt
+      require(props.contains(name), s"near-dup ledger at $path: missing $name")
+      props(name).toInt
     }
     BandParams(i("k"), i("rowsPerBand"), i("n"), i("bucketChars"))
   }

@@ -602,4 +602,16 @@ class SarHttpServerSpec extends AnyFunSuite {
       assert(login("""{"username":"alice","password":"alicepw"}""") == 200)
     } finally server.stop()
   }
+
+  test("a truncated JSON body is a 400 with a detail") {
+    val base = Files.createTempDirectory("graft_badjson").toString
+    val server = new SarHttpServer(new SarTenants(spark, base))
+    val port = server.start()
+    try {
+      val (s, body) = send("POST",
+        s"http://localhost:$port/api/v1/charts/single",
+        """{"file":""".getBytes("UTF-8"))
+      assert(s == 400 && body.contains(""""detail":"""), body)
+    } finally server.stop()
+  }
 }

@@ -1,13 +1,12 @@
 package graft
 
-import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 import scala.collection.immutable.ListMap
 
 import org.apache.spark.GraftBusBridge
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
-  SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerStageCompleted}
 
 import graft.service.Json
 
@@ -15,10 +14,10 @@ import graft.service.Json
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line with per-query seconds.
   *
   * Each query is forced through the `noop` sink — a plain count() would
-  * let Catalyst prune every column and skip the actual expressions. A
-  * warmup pass (q1_agg) absorbs JVM/codegen startup, and every query runs
-  * `runs` times with the median reported, so round-over-round deltas are
-  * signal rather than JIT variance.
+  * let Catalyst prune every column and skip the actual expressions. One
+  * untimed pass over the selected queries absorbs JVM/codegen startup,
+  * and every query then runs `runs` times with the median reported, so
+  * round-over-round deltas are signal rather than JIT variance.
   *
   * Host-noise hardening: repetitions run as full SUITE passes with the
   * query order REVERSED on alternate passes (A,B,C / C,B,A / A,B,C), so
@@ -43,10 +42,7 @@ import graft.service.Json
   * Environment: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS,
   * SPARK_GRAFT_BENCH_RUNS (passes, default 3), SPARK_GRAFT_BENCH_ONLY
   * (comma-separated query names), SPARK_GRAFT_BENCH_OUT (full-line
-  * file, default BENCH_FULL.json), SPARK_GRAFT_QPROF_JOBS=1 (one
-  * `[qprof-job]` line per Spark job of every timed run: callsite, wall,
-  * summed task time, task count — locates WHICH action inside a
-  * multi-job query burns the time its profile row reports).
+  * file, default BENCH_FULL.json).
   */
 object Bench {
 
@@ -57,17 +53,13 @@ object Bench {
       shufWrite: Long)
 
   /** Job/stage/task/shuffle counters, reset and read around each timed
-    * run; with `perJob` it also prints one `[qprof-job]` line per job. */
-  private final class Profiler(perJob: Boolean) extends SparkListener {
-    @volatile var query = ""
+    * run. */
+  private final class Profiler extends SparkListener {
     private val jobs = new AtomicInteger(0)
     private val stages = new AtomicInteger(0)
     private val taskTimeMs = new AtomicLong(0)
     private val shufRead = new AtomicLong(0)
     private val shufWrite = new AtomicLong(0)
-    private val jobStart = new ConcurrentHashMap[Int, (Long, String)]()
-    private val jobTask = new ConcurrentHashMap[Int, (Long, Long)]()
-    private val stageJob = new ConcurrentHashMap[Int, Int]()
 
     def reset(): Unit = {
       jobs.set(0); stages.set(0); taskTimeMs.set(0)
@@ -77,23 +69,8 @@ object Bench {
       Run(wall, build, exec, jobs.get, stages.get, taskTimeMs.get / 1e3,
         shufRead.get, shufWrite.get)
 
-    override def onJobStart(j: SparkListenerJobStart): Unit = {
+    override def onJobStart(j: SparkListenerJobStart): Unit =
       jobs.incrementAndGet()
-      if (perJob) {
-        val site = j.stageInfos.lastOption.map(_.name).getOrElse("?")
-        jobStart.put(j.jobId, (System.nanoTime(), site))
-        j.stageIds.foreach(s => stageJob.put(s, j.jobId))
-      }
-    }
-    override def onJobEnd(j: SparkListenerJobEnd): Unit =
-      if (perJob) {
-        val (t0, site) = jobStart.getOrDefault(j.jobId, (0L, "?"))
-        val (tt, nt) = jobTask.getOrDefault(j.jobId, (0L, 0L))
-        if (t0 > 0)
-          println(f"[qprof-job] $query%-32s #${j.jobId}%-4d " +
-            f"${(System.nanoTime() - t0) / 1e9}%7.2f s " +
-            f"task ${tt / 1e3}%7.2f s  n=$nt%-5d $site%s")
-      }
     override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
       stages.incrementAndGet()
       val m = sc.stageInfo.taskMetrics
@@ -101,13 +78,6 @@ object Bench {
         taskTimeMs.addAndGet(m.executorRunTime)
         shufRead.addAndGet(m.shuffleReadMetrics.totalBytesRead)
         shufWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        if (perJob) {
-          val jid = stageJob.getOrDefault(sc.stageInfo.stageId, -1)
-          if (jid >= 0)
-            jobTask.merge(jid,
-              (m.executorRunTime, sc.stageInfo.numTasks.toLong),
-              (a, b) => (a._1 + b._1, a._2 + b._2))
-        }
       }
     }
   }
@@ -120,8 +90,7 @@ object Bench {
     // partition count) so the benched plans are the shipped plans
     val spark = GraftSession.get(cpus.toInt)
     val sc = spark.sparkContext
-    val profiler = new Profiler(
-      sys.env.get("SPARK_GRAFT_QPROF_JOBS").contains("1"))
+    val profiler = new Profiler
     sc.addSparkListener(profiler)
 
     def exec(name: String): Run = {
@@ -131,7 +100,6 @@ object Bench {
       // so no late event of the previous run lands in this one (a
       // fixed sleep raced late events under load)
       GraftBusBridge.waitUntilListenerBusEmpty(sc)
-      profiler.query = name
       profiler.reset()
       val t0 = System.nanoTime()
       val (wall, build, ex) = try {
@@ -161,8 +129,6 @@ object Bench {
       profiler.snapshot(wall, build, ex)
     }
 
-    exec("q1_agg") // warmup, not reported
-
     // optional comma-separated name filter (local iteration only — the
     // driver never sets it, so the contract output is unchanged)
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
@@ -170,6 +136,9 @@ object Bench {
     val names = SparkEntry.all
       .filter(q => only.forall(_.contains(q.name)))
       .map(_.name)
+
+    // warmup: one untimed pass, so no timed pass runs cold
+    names.foreach(exec)
 
     // suite passes, alternating direction (see scaladoc)
     val byPass: Seq[Map[String, Run]] = (0 until runs).map { p =>

@@ -65,8 +65,12 @@ object XzIngest {
   }
 
   /** Read a possibly-xz, possibly-sadf-JSON SAR file into parser-ready
-    * text (the full preprocessing chain: S6 → S8 sniff → S7 → S1). */
+    * text (the full preprocessing chain: S6 → S8 sniff → S7 → S1). A
+    * file above the decompressed-size cap is refused before it is read. */
   def readSarFile(path: String): String = {
+    val cap = maxDecompressedBytes
+    require(Files.size(Paths.get(path)) <= cap,
+      s"$path: file size exceeds the ${cap / (1024 * 1024)} MB limit")
     val raw = Files.readAllBytes(Paths.get(path))
     val (bytes, name) = maybeDecompress(raw, path)
     val text = new String(bytes, "UTF-8")

@@ -127,9 +127,10 @@ object SarOps {
 
   // ---- P8/P9: probes ------------------------------------------------
 
+  /** The first os_details line containing "Linux", "" when none does. */
   def osDetails(df: DataFrame): String =
     df.filter(col("os_details").contains("Linux"))
-      .select("os_details").head().getString(0)
+      .select("os_details").head(1).headOption.fold("")(_.getString(0))
 
   /** Restart strings, schema-safe (reference pl_helpers2.py:227-235). */
   def restartHeaders(df: DataFrame): Seq[String] =

@@ -35,42 +35,49 @@ final class NoSuchStoredFile(name: String)
 
 /** A stored file's cached frame and its fixed facts, built together on
   * first use and dropped together. Restarts are in file order;
-  * `osDetails` is set when there are any. */
+  * `osDetails` is the file's first "Linux" line, "" when it has none. */
 private final class Cached(val frame: DataFrame) {
   lazy val meta: FileMeta = {
     import frame.sparkSession.implicits._
-    // one pass and no shuffle: as an aggregation this cost a cold read (the
+    // one job and no shuffle: as an aggregation this cost a cold read (the
     // first after an upload) more than the per-request probes it replaced
-    val groups = frame.select("header", "data").as[(String, String)]
-      .mapPartitions(Cached.rowsPerDevice).collect()
-    val rs = SarOps.restartHeaders(frame)
-    val os = if (rs.isEmpty) None else Some(SarOps.osDetails(frame))
+    val parts = frame.select("header", "data", "restart", "os_details")
+      .as[(String, String, String, String)]
+      .mapPartitions(rows => Iterator(Cached.fold(rows))).collect()
+    val groups = parts.flatMap(_._1)
+    val os = parts.map(_._3).find(_.nonEmpty).getOrElse("")
     FileMeta(groups.map(_._3).sum, groups.map(_._1).distinct.toSeq.sorted,
       groups.filter(_._2 != null).groupBy(_._1)
         .map { case (h, gs) => h -> gs.map(_._2).distinct.sorted.toSeq },
-      os.fold(Seq.empty[Timestamp])(SarOps.parseRestartTimestamps(rs, _)), os)
+      SarOps.parseRestartTimestamps(parts.flatMap(_._2).toSeq, os), os)
   }
 }
 
 private object Cached {
-  /** One partition's rows per (header, device): the device is the first
-    * data token, as toMetrics pops it, and null outside device-scoped
-    * headers. */
-  def rowsPerDevice(rows: Iterator[(String, String)])
-      : Iterator[(String, String, Long)] = {
+  /** One partition's facts: rows per (header, device), its restart
+    * strings in row order and its first os_details containing "Linux"
+    * ("" if none). The device is the first data token, as toMetrics pops
+    * it, and null outside device-scoped headers. */
+  def fold(rows: Iterator[(String, String, String, String)])
+      : (Seq[(String, String, Long)], Seq[String], String) = {
     val scoped = mutable.Map.empty[String, Boolean]
     val n = mutable.Map.empty[(String, String), Long].withDefaultValue(0L)
-    rows.foreach { case (h, d) =>
+    val restarts = mutable.ArrayBuffer.empty[String]
+    var os = ""
+    rows.foreach { case (h, d, r, o) =>
       n((h, if (scoped.getOrElseUpdate(h, HeaderMeta.isDeviceScoped(h)))
         d.takeWhile(_ != ' ') else null)) += 1
+      if (r != null && r.contains("RESTART")) restarts += r
+      if (os.isEmpty && o != null && o.contains("Linux")) os = o
     }
-    n.iterator.map { case ((h, dev), c) => (h, dev, c) }
+    (n.iterator.map { case ((h, dev), c) => (h, dev, c) }.toSeq,
+      restarts.toSeq, os)
   }
 }
 
 private final case class FileMeta(rows: Long, headers: Seq[String],
     devices: Map[String, Seq[String]], restarts: Seq[Timestamp],
-    osDetails: Option[String])
+    osDetails: String)
 
 class SarService(spark: SparkSession, storageDir: String) {
   import spark.implicits._
@@ -332,6 +339,10 @@ class SarService(spark: SparkSession, storageDir: String) {
     * chart markers consume. */
   def restarts(name: String): Seq[Timestamp] = entry(name).meta.restarts
 
+  /** The file's first "Linux" line from its record, "" when it has none. */
+  private[graft] def osDetails(name: String): String =
+    entry(name).meta.osDetails
+
   /** S13 upload: store under the reference's rename convention
     * `<upload date>_<hostname>_<sar date>` derived from the parsed
     * os_details (helpers_pl.py:245-280). The convention is what makes
@@ -359,8 +370,7 @@ class SarService(spark: SparkSession, storageDir: String) {
   def restartsByFile(files: Seq[String]): Map[String, Seq[Timestamp]] =
     files.map { f =>
       val m = entry(f).meta
-      f -> (if (m.osDetails.exists(SarNaming.matchesFile(f, _))) m.restarts
-        else Nil)
+      f -> (if (SarNaming.matchesFile(f, m.osDetails)) m.restarts else Nil)
     }.toMap
 
   /** getTable with restart zero-rows inserted (E2) — the "Data tab"

@@ -81,6 +81,19 @@ class IngestServiceSpec extends AnyFunSuite {
     }
   }
 
+  test("a file above the size cap is refused before it is read") {
+    val tmp = Files.createTempFile("sa_huge", ".txt")
+    // sparse: cap + 1 bytes long, no data blocks on disk
+    val f = new java.io.RandomAccessFile(tmp.toFile, "rw")
+    try f.setLength(XzIngest.maxDecompressedBytes + 1) finally f.close()
+    try {
+      val e = intercept[IllegalArgumentException] {
+        XzIngest.readSarFile(tmp.toString)
+      }
+      assert(e.getMessage.contains("file size exceeds"), e.getMessage)
+    } finally Files.delete(tmp)
+  }
+
   test("binary SAR sniff: binary data flagged, text never flagged") {
     import graft.ingest.BinarySarDetector
     val rnd = new scala.util.Random(7)
@@ -455,8 +468,10 @@ class IngestServiceSpec extends AnyFunSuite {
     val named = svc.uploadWithConvention(up.toString,
       java.time.LocalDate.parse("2026-08-12")).name
     svc.upload(up.toString, "plain")
+    val ampm = Files.createTempFile("sa_meta_ampm", ".txt")
+    Files.writeString(ampm, resource("sa_ampm.txt"))
+    svc.upload(ampm.toString, "ampm") // no restart
     val files = Seq(named, "plain")
-    files.foreach(svc.fileInfo) // cold: loads each frame and its record
 
     val sc = spark.sparkContext
     val group = "graft-meta-reads"
@@ -471,6 +486,18 @@ class IngestServiceSpec extends AnyFunSuite {
     sc.addSparkListener(listener)
     sc.setJobGroup(group, "metadata reads")
     try {
+      // cold: opening the frame reads the parquet schema in a job of its
+      // own; the first read of the file's record then builds it in one
+      // job, with or without restarts
+      for (f <- files :+ "ampm") {
+        svc.load(f)
+        GraftBusBridge.waitUntilListenerBusEmpty(sc)
+        jobs.set(0)
+        svc.fileInfo(f)
+        GraftBusBridge.waitUntilListenerBusEmpty(sc)
+        assert(jobs.get == 1, f)
+      }
+      jobs.set(0)
       val info = svc.fileInfo(named)
       val details = svc.headerDetails(named)
       val cpu = svc.headerDetail(named, "CPU")
@@ -499,6 +526,31 @@ class IngestServiceSpec extends AnyFunSuite {
     } finally {
       sc.clearJobGroup()
       sc.removeSparkListener(listener)
+    }
+  }
+
+  test("service: the record's restarts and os_details match the probes") {
+    import graft.ops.SarOps
+    import graft.service.SarNaming
+    val storage = Files.createTempDirectory("graft_record").toString
+    val svc = new SarService(spark, storage)
+    val fixtures = Seq("sa_24h.txt", "sa_ampm.txt", "sa_comma.txt",
+      "sa_edge.txt", "sadf_sample.json")
+    fixtures.zipWithIndex.foreach { case (fx, i) =>
+      val up = Files.createTempFile("sa_record", fx)
+      Files.writeString(up, resource(fx))
+      // a distinct upload date per fixture keeps the convention names apart
+      val n = svc.uploadWithConvention(up.toString,
+        java.time.LocalDate.parse("2026-08-01").plusDays(i)).name
+      val f = svc.load(n)
+      val os = SarOps.osDetails(f)
+      val probed = SarOps.parseRestartTimestamps(SarOps.restartHeaders(f), os)
+      assert(svc.osDetails(n) == os, fx)
+      assert(svc.restarts(n) == probed, fx)
+      assert(svc.restartsByFile(Seq(n)) ==
+        Map(n -> (if (SarNaming.matchesFile(n, os)) probed else Nil)), fx)
+      if (fx == "sa_24h.txt" || fx == "sa_edge.txt")
+        assert(probed.nonEmpty && svc.restartsByFile(Seq(n))(n) == probed, fx)
     }
   }
 }

@@ -525,6 +525,36 @@ class SarHttpServerSpec extends AnyFunSuite {
     } finally server.stop()
   }
 
+  test("a file without a Linux line answers every read, os_details empty") {
+    val base = Files.createTempDirectory("graft_nolinux").toString
+    val tenants = new SarTenants(spark, base)
+    val up = Files.createTempFile("sa_nolinux", ".txt")
+    // sa_24h without its first ("Linux ...") line; the restart line stays
+    Files.writeString(up,
+      resource("sa_24h.txt").linesWithSeparators.drop(1).mkString)
+    tenants.forUser("alice").upload(up.toString, "bare")
+    val server = new SarHttpServer(tenants)
+    val port = server.start()
+    val root = s"http://localhost:$port/api/v1"
+    try {
+      for (path <- Seq("/files/bare", "/files/bare/headers",
+          "/files/bare/data?header=CPU", "/files/bare/statistics?header=CPU")) {
+        val (s, body, _) = get(root + path)
+        assert(s == 200, s"$path -> $s $body")
+      }
+      for ((path, body) <- Seq(
+          "/charts/single" -> """{"file":"bare","header":"CPU"}""",
+          "/charts/overview" -> """{"file":"bare","aliases":["CPU"]}""")) {
+        val (s, chart) = send("POST", root + path, body.getBytes("UTF-8"))
+        assert(s == 200 && chart.contains(""""os_details":""""),
+          s"$path -> $s $chart")
+        // the marker falls on the parser's fallback day, like the rows
+        assert(chart.contains(""""restarts":["2000-01-01 00:15:30"]"""),
+          chart)
+      }
+    } finally server.stop()
+  }
+
   test("unknown stored file is a 404; other failures a generic 500") {
     val base = Files.createTempDirectory("graft_errors").toString
     val tenants = new SarTenants(spark, base)

@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
 
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+import org.apache.spark.sql.types.IntegerType
 
 import graft.expressions.{CosineSimilarity, TDigestQuantiles}
 import graft.functions.{LineClean, Pii, TextAnalysis}
@@ -129,6 +131,11 @@ object GraftSession {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      // Spark's LRU of compiled codegen classes defaults to 100 entries;
+      // the SAR service's request mix alone keeps ~140 live, so at 100
+      // each request recompiled classes another request had evicted, and
+      // its latency depended on what the concurrent requests ran before it
+      .config("spark.sql.codegen.cache.maxEntries", "1000")
       // InferFiltersFromGenerate synthesizes `size(e) > 0 AND
       // isnotnull(e)` below every explode and predicate pushdown then
       // INLINES the full generator expression into the scan's Filter —
@@ -150,6 +157,11 @@ object GraftSession {
   def get(cores: Int = 32): SparkSession = {
     val s = builder(cores).getOrCreate()
     GraftExtensions.register(s) // in case getOrCreate reused a session
+    // the codegen cache takes its size from SQLConf.get when CodeGenerator
+    // is first used. Use it here, where that is this session's conf: on a
+    // thread without an active session (an HTTP server's pool) it is the
+    // default conf, and the cache stayed at 100
+    CodeGenerator.javaType(IntegerType)
     s.sparkContext.setLogLevel("WARN")
     s
   }

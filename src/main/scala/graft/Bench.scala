@@ -7,6 +7,7 @@ import scala.collection.immutable.ListMap
 import org.apache.spark.GraftBusBridge
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
   SparkListenerStageCompleted}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.service.Json
 
@@ -82,19 +83,17 @@ object Bench {
     }
   }
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
-    // the canonical GraftSession config (AQE + scale-out initial
-    // partition count) so the benched plans are the shipped plans
-    val spark = GraftSession.get(cpus.toInt)
-    val sc = spark.sparkContext
-    val profiler = new Profiler
+  /** The one timed run, shared by Bench (per query) and ScaleBench (per
+    * chain and scale): build the frame, drain it to the noop sink, and
+    * count that run's jobs, stages, task time and shuffle bytes. A run
+    * that throws reports wall -1, never a timing. */
+  private[graft] final class Timer(spark: SparkSession) {
+    private val sc = spark.sparkContext
+    private val profiler = new Profiler
     sc.addSparkListener(profiler)
 
-    def exec(name: String): Run = {
-      val fn = SparkEntry.queries(name) // lookup outside the timed region
+    /** `label` opens the failure line on stderr. */
+    def run(label: String)(build: => DataFrame): Run = {
       // deterministic drain before resetting and before reading the
       // counters: block until every already-posted event is delivered,
       // so no late event of the previous run lands in this one (a
@@ -102,31 +101,52 @@ object Bench {
       GraftBusBridge.waitUntilListenerBusEmpty(sc)
       profiler.reset()
       val t0 = System.nanoTime()
-      val (wall, build, ex) = try {
-        val df = fn(spark, sfDir)
+      val (wall, b, ex) = try {
+        val df = build
         val t1 = System.nanoTime()
-        df.write.mode("overwrite").format("noop").save()
+        drain(df)
         val t2 = System.nanoTime()
         ((t2 - t0) / 1e9, (t1 - t0) / 1e9, (t2 - t1) / 1e9)
       } catch { case e: Throwable =>
-        System.err.println(s"[bench] $name failed: ${e.getMessage}")
-        // failure marker: never report a broken query as a timing
+        System.err.println(s"$label failed: ${e.getMessage}")
         (-1.0, -1.0, -1.0)
       } finally {
-        // cold-run discipline (r9 ADVICE medium): chains persist
-        // intermediates deliberately (e.g. the spans trio's shared
-        // span frame), and CacheManager matches canonicalized plans
-        // ACROSS queries — without a reset, later passes of a query
-        // time a cache read and the artifact presents it as an engine
-        // timing. ScaleBench has always cleared between chains; Bench
-        // now matches, so every reported run is a cold run. Disk-level
+        // cold-run discipline: chains persist intermediates
+        // deliberately (e.g. the spans trio's shared span frame) and
+        // never unpersist them (the returned frame still reads them),
+        // and CacheManager matches canonicalized plans ACROSS queries —
+        // without a reset, later passes of a query time a cache read and
+        // the artifact presents it as an engine timing. Disk-level
         // amortization (persisted indexes, cached codebooks) is
         // unaffected — those rows are declared amortized by name
         // (*_indexed / *_amortized).
         spark.catalog.clearCache()
       }
       GraftBusBridge.waitUntilListenerBusEmpty(sc)
-      profiler.snapshot(wall, build, ex)
+      profiler.snapshot(wall, b, ex)
+    }
+  }
+
+  /** Full execution without a collect (see the scaladoc): the noop sink
+    * for a batch frame, a drain to completion for a streaming one. */
+  private def drain(df: DataFrame): Unit =
+    if (df.isStreaming) {
+      val q = df.writeStream.outputMode("append").format("noop").start()
+      try q.processAllAvailable() finally q.stop()
+    } else df.write.mode("overwrite").format("noop").save()
+
+  def main(args: Array[String]): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
+    // the canonical GraftSession config (AQE + scale-out initial
+    // partition count) so the benched plans are the shipped plans
+    val spark = GraftSession.get(cpus.toInt)
+    val timer = new Timer(spark)
+
+    def exec(name: String): Run = {
+      val fn = SparkEntry.queries(name) // lookup outside the timed region
+      timer.run(s"[bench] $name")(fn(spark, sfDir))
     }
 
     // optional comma-separated name filter (local iteration only — the

@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import scala.collection.immutable.ListMap
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.service.Json
@@ -21,9 +21,10 @@ import graft.service.Json
   * n·log(n) of a sort lands ~1.1; anything ≥ 1.5 is flagged as
   * superlinear and fails the run summary.
   *
-  * Timing discipline mirrors Bench: noop sink (full execution, no
-  * collect), per-scale warmup pass, `runs` full suite passes with
-  * order reversed on alternate passes, min-of-runs reported (for a
+  * Each chain is timed by Bench's one timed run ([[Bench.Timer]]: noop
+  * sink or stream drain, -1 on failure, cache reset after). On top of
+  * it: a per-scale warmup chain, `runs` full suite passes with order
+  * reversed on alternate passes, min-of-runs reported (for a
   * scaling exponent the min is the right statistic — host-load spikes
   * only ever ADD time, so the min is the closest observation to the
   * true cost at each scale).
@@ -139,10 +140,10 @@ object ScaleBench {
 
     /** Replay a corpus table as a bounded stream (4 micro-batches via
       * maxFilesPerTrigger so the watermark actually advances and evicts
-      * state mid-run) and drain it to the noop sink: documents for the
+      * state mid-run), for the timed run to drain: documents for the
       * text faces, embeddings for the vector face. Event time is
       * id-derived (100 rows/second), deterministic at any scale. */
-    def execStream(name: String, dir: String): Unit = {
+    def stream(name: String, dir: String): DataFrame = {
       import graft.streaming.SarStreaming
       val table =
         if (name == "s_vector_neardup_stream") "embeddings" else "documents"
@@ -155,7 +156,7 @@ object ScaleBench {
         .parquet(src)
         .withColumn("ts",
           timestamp_seconds(lit(1600000000L) + col(idCol) / lit(100)))
-      val out = name match {
+      name match {
         case "s_curate_stream" =>
           SarStreaming.curateStream(rows, "text", "ts")
         case "s_neardup_stream" =>
@@ -176,40 +177,20 @@ object ScaleBench {
             "embedding", "ts", cents, threshold = 0.45, probes = 20).toDF()
         case other => throw new IllegalArgumentException(other)
       }
-      val q = out.writeStream.outputMode("append").format("noop").start()
-      try q.processAllAvailable() finally q.stop()
     }
 
+    val timer = new Bench.Timer(spark)
     def exec(name: String, dir: String): Double = {
-      val t0 = System.nanoTime()
-      try {
-        if (name.startsWith("s_")) execStream(name, dir)
-        else SparkEntry.queries(name)(spark, dir)
-          .write.mode("overwrite").format("noop").save()
-        (System.nanoTime() - t0) / 1e9
-      } catch { case e: Throwable =>
-        System.err.println(s"[scale] $name @ $dir failed: ${e.getMessage}")
-        -1.0
-      } finally {
-        // Two leaks this long-lived suite session must plug, both
-        // OUTSIDE the timed region:
-        //   1. chains persist() intermediates and (correctly) never
-        //      unpersist — the returned frame still references them;
-        //      the CacheManager keeps them until `unpersist` or
-        //      `clearCache()`, driver GC or not. Worse, the
-        //      CacheManager matches canonicalized plans, so pass 2 of
-        //      a chain silently REUSES pass 1's blocks — min-of-runs
-        //      would time a cache-warmed pass, not the chain.
-        //   2. finished-stage shuffle files also wait for driver GC —
-        //      and a 64 GB heap under scale corpora collects rarely.
-        //      Measured: the 5M tier filled a 49-GB-free disk with
-        //      dead shuffle files + spilled cache blocks mid-suite.
-        // clearCache() unpersists every registered frame (passes stay
-        // cold), and an explicit GC lets the cleaner drop dead
-        // shuffles before the next chain needs the disk.
-        spark.catalog.clearCache()
-        System.gc()
-      }
+      val wall = timer.run(s"[scale] $name @ $dir")(
+        if (name.startsWith("s_")) stream(name, dir)
+        else SparkEntry.queries(name)(spark, dir)).wall
+      // finished-stage shuffle files wait for driver GC, which a large
+      // heap under scale corpora runs rarely (measured: the 5M tier
+      // filled a 49-GB-free disk with dead shuffle files mid-suite);
+      // an explicit GC lets the cleaner drop them before the next
+      // chain needs the disk
+      System.gc()
+      wall
     }
 
     val nRows: Map[String, Long] = dirs.map { d =>

@@ -1,6 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, DataFrame}
+
+import graft.Lineage
 import org.apache.spark.sql.functions._
 
 /** Byte-pair-encoding tokenizer training as a distributed Spark job —
@@ -129,15 +131,12 @@ object BpeTokenizer {
     * so a production-size merge list is a chain of bounded-depth plans
     * over the VOCABULARY table; the corpus never pays per-merge work. */
   def wordTokens(docs: DataFrame, textCol: String, bpe: Bpe): DataFrame = {
-    def truncate(df: DataFrame): DataFrame =
-      if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
-        df.checkpoint(eager = true)
-      else df.localCheckpoint(eager = true)
     val init = wordCounts(docs, textCol)
       .select(col("word"), col("c"), initSymbols(col("word")).as("syms"))
     bpe.merges.grouped(mergeBatch).zipWithIndex
       .foldLeft(init) { case (df, (chunk, i)) =>
-        val applied = chunk.foldLeft(if (i == 0) df else truncate(df)) {
+        val start = if (i == 0) df else Lineage.truncated(df)
+        val applied = chunk.foldLeft(start) {
           case (d, (a, b)) => d.withColumn("syms", mergeOnce(col("syms"), a, b))
         }
         applied

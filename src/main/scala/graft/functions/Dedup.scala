@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Scoped
+import graft.{Lineage, Scoped}
 
 /** Deduplication operators for training-data pipelines: exact (hash
   * groupBy), MinHash+LSH banding, SimHash, and exact n-gram Jaccard.
@@ -1416,11 +1416,7 @@ object Dedup {
   def duplicateClusters(pairs: DataFrame, aCol: String = "a",
       bCol: String = "b", maxIters: Int = 50,
       smallGraphEdgeCap: Long = SmallGraphEdgeCap): DataFrame = {
-    def truncate(df: DataFrame): DataFrame =
-      if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
-        df.checkpoint(eager = true)
-      else df.localCheckpoint(eager = true)
-    val edges = truncate(
+    val edges = Lineage.truncated(
       pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
         .unionByName(pairs.select(col(bCol).as("src"), col(aCol).as("dst")))
         .distinct())
@@ -1477,7 +1473,7 @@ object Dedup {
       return pairs.sparkSession.createDataFrame(
         out.asJava, schema)
     }
-    var labels = truncate(
+    var labels = Lineage.truncated(
       edges.select(col("src").as("node")).distinct()
         .withColumn("label", col("node")))
     // convergence via the label-sum invariant (r14): labels are
@@ -1510,7 +1506,7 @@ object Dedup {
       // O(log n): a 5M-node replica CHAIN converges in ~23 rounds
       // where plain min-label needed 5M (the 5M-doc scale run hit
       // exactly that — a chain component past the 50-round bound).
-      val next = truncate(
+      val next = Lineage.truncated(
         hopped.join(hopped.toDF("label", "__l2"), Seq("label"), "left")
           .select(col("node"),
             least(col("label"), coalesce(col("__l2"), col("label")))

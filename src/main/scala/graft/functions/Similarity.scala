@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.Scoped
+import graft.{Lineage, Scoped}
 
 /** Similarity search over embedding columns (Array[Float]).
   *
@@ -651,15 +651,12 @@ object Similarity {
       .join(broadcast(k2), Seq("cell")) // k2 is k₁ rows — metadata scale
       .withColumn("__rk", row_number().over(w))
       .filter(col("__rk") <= col("k2") * samplePerCentroid)
-    def truncate(d: DataFrame): DataFrame =
-      if (d.sparkSession.sparkContext.getCheckpointDir.isDefined)
-        d.checkpoint(eager = true)
-      else d.localCheckpoint(eager = true)
     Scoped(sample) {
       // seeds: rank within cell IS the fine label (1..k₂ per cell)
-      var fine = truncate(sample.filter(col("__rk") <= col("k2"))
-        .select(col("cell"), col("__rk").cast("int").as("flabel"),
-          col("__v").as("cvec")))
+      var fine = Lineage.truncated(
+        sample.filter(col("__rk") <= col("k2"))
+          .select(col("cell"), col("__rk").cast("int").as("flabel"),
+            col("__v").as("cvec")))
       for (_ <- 1 to itersFine) {
         val packed = packFineCells(fine)
         val assigned = sample.join(packed, Seq("cell"))
@@ -678,9 +675,10 @@ object Similarity {
           .select(col("cell"), col("flabel"),
             transform(col("pc"), _.getField("cv")).as("__next"))
         // empty fine buckets keep their previous centroid (k₂ stable)
-        fine = truncate(fine.join(next, Seq("cell", "flabel"), "left")
-          .select(col("cell"), col("flabel"),
-            coalesce(col("__next"), col("cvec")).as("cvec")))
+        fine = Lineage.truncated(
+          fine.join(next, Seq("cell", "flabel"), "left")
+            .select(col("cell"), col("flabel"),
+              coalesce(col("__next"), col("cvec")).as("cvec")))
       }
       fine
     }

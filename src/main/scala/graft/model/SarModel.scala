@@ -1,7 +1,6 @@
 package graft.model
 
 import java.sql.Timestamp
-import org.apache.spark.sql.types._
 
 /** One row of the long SAR frame (reference: parse_into_polars.py:143-165,
   * pl_helpers2.py:50-82 — see SURVEY.md §1.1).
@@ -25,14 +24,6 @@ final case class SarLine(
     date: Timestamp)
 
 object SarModel {
-  /** Schema of the long SAR frame (matches the SarLine encoder). */
-  val sarFrameSchema: StructType = StructType(Seq(
-    StructField("header", StringType),
-    StructField("data", StringType),
-    StructField("os_details", StringType),
-    StructField("restart", StringType),
-    StructField("date", TimestampType)))
-
   /** Sections removed from the long frame after parse
     * (reference pl_helpers2.py:99-105). */
   val unwantedHeaders: Seq[String] = Seq("CPU MHz", "INTR intr/s")

@@ -176,7 +176,7 @@ object VectorQueries extends QueryPack {
 
     // ---- PQ + ADC + rerank, recall-gated ----------------------------
     // m=8 sub-spaces × ksub=32 L2 centroids, iters=3 — EXACTLY the
-    // calibrated configuration (Calibrate pq, 2026-08): recall@10 of the
+    // calibrated configuration (2026-08, NOTES_r5.md): recall@10 of the
     // shortlist-100 rerank vs exact top-10 measured 0.7–1.0 across
     // sf0.001/0.01/0.1 and query ids {0,3,7,11}; floor 0.5 leaves margin
     // for float jitter in training. self_in_topk is near-structural:
@@ -220,7 +220,7 @@ object VectorQueries extends QueryPack {
     // vectors — 32× less bandwidth than the exact knnJoin at dim 64).
     // Raw SDC on the near-uniform corpus is the documented worst case
     // for double quantization: measured recall@5 = 0.340/0.320/0.247 at
-    // sf0.001/0.01/0.1 (Calibrate sdc, m=8 ksub=32 iters=3) — floor
+    // sf0.001/0.01/0.1 (m=8 ksub=32 iters=3, NOTES_r5.md) — floor
     // 0.15 with margin. It is the CANDIDATE stage; production chains an
     // exact rerank like pqSearchRerank. self_in_top5 is structural-ish:
     // a code's SDC score with itself is exactly 1.0 (the cosine
@@ -270,8 +270,8 @@ object VectorQueries extends QueryPack {
     // — a regression from 0.34 to 0.16 recall would pass them. These
     // three run the SAME operators on Similarity.clusterPull's
     // deterministic mixture-of-Gaussians-shaped corpus, where real
-    // recall is high and the floors bite. Geometry per Calibrate
-    // `clustered` (2026-08, all 3 SFs):
+    // recall is high and the floors bite. Geometry measured 2026-08 at
+    // all 3 SFs (these comments hold the numbers):
     //  - PQ rerank: ~24-member clusters (n/24, w=0.9) keep the exact
     //    top-10 inside one cluster AND small enough for the ADC
     //    shortlist to rank — min recall measured 1.00 everywhere
@@ -337,8 +337,8 @@ object VectorQueries extends QueryPack {
       val nc = math.max(1L, n / 6).toInt
       val emb = Similarity.clusterPull(base, "vec_id", "embedding",
         nc, 0.9)
-      // overlap@5, self excluded (the Calibrate `project` rationale:
-      // the query ranks 1 in both spaces tautologically)
+      // overlap@5, self excluded (NOTES_r5.md, random projection: the
+      // query ranks 1 in both spaces tautologically)
       def topNoSelf(qs: DataFrame, corpus: DataFrame, vc: String) =
         Similarity.knnJoin(qs, corpus, "vec_id", "vec_id", vc, k = 6)
           .filter(col("query_id") =!= col("neighbor_id"))

@@ -5,7 +5,7 @@ import java.sql.Timestamp
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ingest.{SarTextParser, XzIngest}
@@ -85,6 +85,8 @@ class SarService(spark: SparkSession, storageDir: String) {
   Files.createDirectories(Paths.get(storageDir))
   // concurrent: this layer backs a REST surface (parallel load/upload)
   private val cache = new java.util.concurrent.ConcurrentHashMap[String, Cached]()
+  // the schema `store` writes every file with
+  private val storedSchema = Encoders.product[SarLine].schema
 
   /** Storage-name guard mirroring the reference's _validate_file_name
     * (api/services.py:39,73-77): ^[A-Za-z0-9._-]+$, no leading dot.
@@ -124,12 +126,18 @@ class SarService(spark: SparkSession, storageDir: String) {
 
   /** Parse-once load with in-memory caching (S4; Redis layer dropped).
     * The one place a stored file is opened: a missing one is a
-    * [[NoSuchStoredFile]], not Spark's path error. */
+    * [[NoSuchStoredFile]], not Spark's path error. A file is stored once
+    * its write committed (Spark's `_SUCCESS` marker): mid-write, the
+    * directory holds only `_temporary/`, which a read with the known
+    * schema would silently answer with 0 rows. The schema is the one
+    * every file was written with, so opening launches no inference job. */
   private def entry(name: String): Cached =
     cache.computeIfAbsent(validated(name), _ => {
       val path = Paths.get(s"$storageDir/$name.parquet")
-      if (!Files.exists(path)) throw new NoSuchStoredFile(name)
-      new Cached(spark.read.parquet(path.toString).cache())
+      if (!Files.exists(path.resolve("_SUCCESS")))
+        throw new NoSuchStoredFile(name)
+      new Cached(spark.read.schema(storedSchema)
+        .parquet(path.toString).cache())
     })
 
   def load(name: String): DataFrame = entry(name).frame
@@ -499,7 +507,10 @@ class SarService(spark: SparkSession, storageDir: String) {
         d.withColumn(f.name, date_format(col(f.name), "yyyy-MM-dd HH:mm:ss"))
       else d
     }
-    val rows = stringified.limit(maxRows + 1).toJSON.collect().toSeq
+    // one row past the page flags a cut; maxRows + 1 would wrap at
+    // Int.MaxValue, where the page already holds every collectable row
+    val probe = if (maxRows == Int.MaxValue) maxRows else maxRows + 1
+    val rows = stringified.limit(probe).toJSON.collect().toSeq
     (rows.take(maxRows), rows.length > maxRows)
   }
 }

@@ -5,7 +5,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{bit_xor, coalesce, col, count, lit, xxhash64}
 
-import graft.Scoped
+import graft.{Lineage, Scoped}
 import graft.functions.Curation
 
 /** The incremental ingestion entry point: what a 100 TB pipeline runs
@@ -162,7 +162,7 @@ object CorpusIngest {
     // materialized the survivors (a long-lived pipeline would otherwise
     // accumulate one cached frame per ingested batch)
     val exactNew = exactStage(spark, batch, textCol, exactPath, cfg)
-    val fresh = Scoped(exactNew)(Lineage.truncated(spark,
+    val fresh = Scoped(exactNew)(Lineage.truncated(
       NearDupLedger.filterNew(spark, exactNew, textCol, idCol, nearPath)))
     commit(spark, fresh, textCol, idCol, exactPath, nearPath,
       cfg.dedupPrefixWords)

@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Lineage
 import graft.functions.TextAnalysis
 
 /** Persistent dedup ledger — incremental EXACT dedup across ingestion
@@ -191,7 +192,7 @@ object DedupLedger {
     * (duplicate key rows are no-ops for the anti-join). */
   def append(spark: SparkSession, docs: DataFrame, textCol: String,
       path: String, prefixWords: Int = 8): DataFrame = {
-    val fresh = Lineage.truncated(spark,
+    val fresh = Lineage.truncated(
       filterNew(spark, docs, textCol, path, prefixWords))
     recordKeys(spark, fresh, textCol, path, prefixWords)
     fresh

@@ -61,16 +61,3 @@ private[sources] object MetaProps {
     try props.store(out, comment) finally out.close()
   }
 }
-
-/** Eager lineage truncation before a store mutates: reliable checkpoint
-  * when a checkpoint dir is configured (the cluster deployment),
-  * localCheckpoint otherwise. ONE copy of the idiom shared by both
-  * ledgers' `append` and `CorpusIngest.ingest` — the refreshByPath
-  * lesson those call sites document. */
-private[sources] object Lineage {
-  def truncated(spark: org.apache.spark.sql.SparkSession,
-      df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    if (spark.sparkContext.getCheckpointDir.isDefined)
-      df.checkpoint(eager = true)
-    else df.localCheckpoint(eager = true)
-}

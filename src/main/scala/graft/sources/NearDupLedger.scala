@@ -5,6 +5,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Lineage
 import graft.functions.Dedup
 
 /** Persistent NEAR-dup ledger — incremental MinHash/LSH dedup across
@@ -213,7 +214,7 @@ object NearDupLedger {
     * harmless (duplicate key rows are no-ops for collision checks). */
   def append(spark: SparkSession, docs: DataFrame, textCol: String,
       idCol: String, path: String): DataFrame = {
-    val fresh = Lineage.truncated(spark,
+    val fresh = Lineage.truncated(
       filterNew(spark, docs, textCol, idCol, path))
     recordKeys(spark, fresh, textCol, idCol, path)
     fresh

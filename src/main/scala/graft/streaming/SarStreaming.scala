@@ -7,6 +7,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types.StructType
 
+import graft.Lineage
+
 /** Structured Streaming extension (SURVEY.md §2.10: the reference is
   * batch-only; this exposes the same event analytics over an unbounded
   * file source). Streams are first-class for the 100 TB target: a
@@ -693,10 +695,7 @@ object SarStreaming {
       .distinct()
     // seal the loser set before its two consumers (count + anti-join):
     // its lineage is the whole screen, which must not re-run per reader
-    val loserIds =
-      if (spark.sparkContext.getCheckpointDir.isDefined)
-        losers.checkpoint(eager = true)
-      else losers.localCheckpoint(eager = true)
+    val loserIds = Lineage.truncated(losers)
     val survivors = batch.join(loserIds, Seq(idCol), "left_anti")
     val dropped = loserIds.count()
     val (n, _) = IvfStore.appendOrResplit(

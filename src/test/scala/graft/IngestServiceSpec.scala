@@ -486,13 +486,15 @@ class IngestServiceSpec extends AnyFunSuite {
     sc.addSparkListener(listener)
     sc.setJobGroup(group, "metadata reads")
     try {
-      // cold: opening the frame reads the parquet schema in a job of its
-      // own; the first read of the file's record then builds it in one
-      // job, with or without restarts
+      // cold: opening a never-opened file launches no job (it is read
+      // with the schema it was written with); the first read of the
+      // file's record then builds it in one job, with or without restarts
       for (f <- files :+ "ampm") {
-        svc.load(f)
         GraftBusBridge.waitUntilListenerBusEmpty(sc)
         jobs.set(0)
+        svc.load(f)
+        GraftBusBridge.waitUntilListenerBusEmpty(sc)
+        assert(jobs.get == 0, f)
         svc.fileInfo(f)
         GraftBusBridge.waitUntilListenerBusEmpty(sc)
         assert(jobs.get == 1, f)

@@ -343,7 +343,7 @@ class LlmFunctionsSpec extends AnyFunSuite {
     // recall (one side only gets its top-1 bucket) in exchange for a
     // probes-fold candidate cut — labeled probes 4→8, trained 8→20, the
     // query defaults; near-uniform embeddings at the 0.45 radius remain
-    // IVF's worst case (see Calibrate)
+    // IVF's worst case (calibration detail in NOTES_r3.md)
     for (d <- Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01")) {
       val emb = Tables.load(spark, d, "embeddings")
       val cents = Similarity.centroids(emb, "label", "embedding")

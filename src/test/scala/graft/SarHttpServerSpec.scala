@@ -112,6 +112,13 @@ class SarHttpServerSpec extends AnyFunSuite {
         get(s"$root/files/day1/data?header=CPU&limit=1")
       assert(sl == 200 && limited.contains(""""rows":1""") &&
         limited.contains(""""truncated":true"""))
+      // the largest limit answers every row, uncut (limit + 1 would wrap)
+      val (smax, unlimited, _) =
+        get(s"$root/files/day1/data?header=CPU&limit=2147483647")
+      val rowCount = """"rows":(\d+)""".r
+      assert(smax == 200 && unlimited.contains(""""truncated":false""") &&
+        rowCount.findFirstIn(unlimited) == rowCount.findFirstIn(data),
+        unlimited)
       // metric projection + CSV format
       val (s4, csvBody, ct4) =
         get(s"$root/files/day1/data?header=CPU&metrics=%25idle&format=csv")
@@ -570,6 +577,12 @@ class SarHttpServerSpec extends AnyFunSuite {
           "/files/nosuch/data?header=CPU",
           "/files/nosuch/statistics?header=CPU"))
         assert(get(root + path) == (404, notFound, "application/json"), path)
+      // a file mid-write (Spark's _temporary/ only, no _SUCCESS marker)
+      // is not stored yet
+      Files.createDirectories(java.nio.file.Paths.get(base, "alice",
+        "midwrite.parquet", "_temporary", "0"))
+      assert(get(s"$root/files/midwrite") == (404,
+        """{"detail":"no stored file 'midwrite'"}""", "application/json"))
       assert(send("POST", s"$root/charts/single",
         """{"file":"nosuch","header":"CPU"}""".getBytes("UTF-8")) ==
         (404, notFound))

@@ -84,6 +84,12 @@ class SarMcpServerSpec extends AnyFunSuite {
     assert(data.contains("""\"device\":\"all\"""") &&
       data.contains("""\"truncated\":true""") &&
       data.contains("""\"%idle\""""))
+    // the largest limit answers every row, uncut (limit + 1 would wrap)
+    val all = call(19, "get_data",
+      """{"name":"day1","header":"CPU","metric":"%idle",""" +
+        """"limit":2147483647,"username":"alice"}""")
+    assert(all.contains(""""isError":false""") &&
+      all.contains("""\"truncated\":false"""), all)
     assert(call(9, "get_statistics",
       """{"name":"day1","header":"CPU","username":"alice"}""")
       .contains("""\"50%\":"""))

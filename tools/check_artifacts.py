@@ -60,10 +60,10 @@ MAINS = {
                                               "SCALE_r?.json"],
     "src/main/scala/graft/ScaleGen.scala": ["SCALE_r*.json"],
 }
-# kept mains that produce no gated artifact: plan printer, crossover
-# calibration, correctness dump
+# kept mains that produce no gated artifact: plan printer, correctness
+# dump
 MAINS.update((f"src/main/scala/graft/{m}.scala", [])
-             for m in ("Explain", "Calibrate", "Verify"))
+             for m in ("Explain", "Verify"))
 
 
 def run(*args):

@@ -1,9 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions._
 
 import graft.Lineage
+import org.apache.spark.sql.functions._
 
 /** Byte-pair-encoding tokenizer training as a distributed Spark job —
   * the step that turns "token budget" from a whitespace proxy into the

@@ -127,18 +127,22 @@ object Bench {
     }
   }
 
-  /** Full execution without a collect (see the scaladoc): the noop sink
-    * for a batch frame, a drain to completion for a streaming one. */
+  /** Full execution without a collect (see the scaladoc): the noop
+    * sink. */
   private def drain(df: DataFrame): Unit =
-    if (df.isStreaming) {
-      val q = df.writeStream.outputMode("append").format("noop").start()
-      try q.processAllAvailable() finally q.stop()
-    } else df.write.mode("overwrite").format("noop").save()
+    df.write.mode("overwrite").format("noop").save()
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
+    // optional comma-separated name filter for local iteration; the
+    // full contract run leaves it unset
+    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
+      .map(SparkEntry.selectQueries(_).toSet)
+    val names = SparkEntry.all
+      .filter(q => only.forall(_.contains(q.name)))
+      .map(_.name)
     // the canonical GraftSession config (AQE + scale-out initial
     // partition count) so the benched plans are the shipped plans
     val spark = GraftSession.get(cpus.toInt)
@@ -148,14 +152,6 @@ object Bench {
       val fn = SparkEntry.queries(name) // lookup outside the timed region
       timer.run(s"[bench] $name")(fn(spark, sfDir))
     }
-
-    // optional comma-separated name filter (local iteration only — the
-    // driver never sets it, so the contract output is unchanged)
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").toSet)
-    val names = SparkEntry.all
-      .filter(q => only.forall(_.contains(q.name)))
-      .map(_.name)
 
     // warmup: one untimed pass, so no timed pass runs cold
     names.foreach(exec)

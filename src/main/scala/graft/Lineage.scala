@@ -8,7 +8,7 @@ import org.apache.spark.sql.Dataset
   * ledgers' `append` and `CorpusIngest.ingest` seal a frame before a
   * store mutates (the refreshByPath lesson those sites document); the
   * iterative loops (`duplicateClusters`, BPE merge batches, sharded
-  * codebook rounds) and the streaming loser set bound their lineage. */
+  * codebook rounds) bound their lineage. */
 object Lineage {
   def truncated[T](ds: Dataset[T]): Dataset[T] =
     if (ds.sparkSession.sparkContext.getCheckpointDir.isDefined)

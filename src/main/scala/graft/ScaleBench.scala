@@ -4,9 +4,6 @@ import java.nio.file.{Files, Paths}
 
 import scala.collection.immutable.ListMap
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
-
 import graft.service.Json
 
 /** Scale-stress harness (VERDICT r5 punch item #1): runs the heaviest
@@ -22,7 +19,7 @@ import graft.service.Json
   * superlinear and fails the run summary.
   *
   * Each chain is timed by Bench's one timed run ([[Bench.Timer]]: noop
-  * sink or stream drain, -1 on failure, cache reset after). On top of
+  * sink, -1 on failure, cache reset after). On top of
   * it: a per-scale warmup chain, `runs` full suite passes with order
   * reversed on alternate passes, min-of-runs reported (for a
   * scaling exponent the min is the right statistic — host-load spikes
@@ -33,7 +30,8 @@ import graft.service.Json
   *   runMain graft.ScaleBench <outJson> <dir1> <dir2> [... dirN]
   * with dirs ordered smallest → largest; row counts are read from the
   * documents table. Query set defaults to the heavy-chain list below;
-  * override with SPARK_GRAFT_SCALE_ONLY=name,name.
+  * override with SPARK_GRAFT_SCALE_ONLY=name,name (declared queries
+  * only — an unknown name fails the run).
   */
 object ScaleBench {
 
@@ -66,18 +64,6 @@ object ScaleBench {
     "q_pack_sequences",       // running-token frame packing
     "q_quality_select",       // per-group quantile selection
     "q_top_ngrams")           // boilerplate mining (df-agg)
-
-  /** Streaming faces (VERDICT r6 item 8): a corpus table (documents for
-    * the text faces, embeddings for the vector face) replayed through a
-    * file-source stream in four micro-batches, driven to completion
-    * against the noop sink — measures that the watermark-bounded state
-    * claims hold empirically (state per distinct key / per bucket with
-    * a membership cap, never per pair). Names start with `s_` and
-    * dispatch outside SparkEntry. */
-  val StreamChains: Seq[String] = Seq(
-    "s_curate_stream",        // stateless gate + watermarked exact dedup
-    "s_neardup_stream",       // per-bucket LSH state, capped membership
-    "s_vector_neardup_stream") // int8-packed per-bucket vector state
 
   /** Per-chain scale CONTRACT (VERDICT r7 item 3): scale-path chains
     * FAIL the run at alpha ≥ this bound — the old gate only flagged
@@ -124,8 +110,7 @@ object ScaleBench {
     require(dirs.size >= 2, "need at least two scale dirs")
     val runs = sys.env.getOrElse("SPARK_GRAFT_SCALE_RUNS", "2").toInt
     val names = sys.env.get("SPARK_GRAFT_SCALE_ONLY")
-      .map(_.split(",").toSeq).getOrElse(HeavyChains ++ StreamChains)
-      .filter(n => SparkEntry.queries.contains(n) || n.startsWith("s_"))
+      .map(SparkEntry.selectQueries).getOrElse(HeavyChains)
 
     val spark = GraftSession.get()
     // scale runs shuffle GBs per stage: start shuffles wide and let AQE
@@ -138,52 +123,10 @@ object ScaleBench {
     if (!spark.sparkContext.getConf.contains(initialPartitions))
       spark.conf.set(initialPartitions, 256)
 
-    /** Replay a corpus table as a bounded stream (4 micro-batches via
-      * maxFilesPerTrigger so the watermark actually advances and evicts
-      * state mid-run), for the timed run to drain: documents for the
-      * text faces, embeddings for the vector face. Event time is
-      * id-derived (100 rows/second), deterministic at any scale. */
-    def stream(name: String, dir: String): DataFrame = {
-      import graft.streaming.SarStreaming
-      val table =
-        if (name == "s_vector_neardup_stream") "embeddings" else "documents"
-      val idCol = if (table == "embeddings") "vec_id" else "doc_id"
-      val src = s"$dir/$table.parquet"
-      val schema = spark.read.parquet(src).schema
-      val files = spark.read.parquet(src).inputFiles.length
-      val rows = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", math.max(1, files / 4))
-        .parquet(src)
-        .withColumn("ts",
-          timestamp_seconds(lit(1600000000L) + col(idCol) / lit(100)))
-      name match {
-        case "s_curate_stream" =>
-          SarStreaming.curateStream(rows, "text", "ts")
-        case "s_neardup_stream" =>
-          SarStreaming.nearDupCandidates(rows, "doc_id", "text", "ts").toDF()
-        case "s_vector_neardup_stream" =>
-          // production shape: the codebook is trained once and persisted
-          // (IvfStore.codebookCached) — the stream pays routing + state,
-          // not Lloyd's. SAME cache key as the amortized SemDeDup
-          // queries (prefix + corpus dir), so a suite pass trains
-          // dupCodebook once per corpus, and TempIndexDirs' shutdown
-          // hook cleans the directory up.
-          val cents = graft.sources.IvfStore.codebookCached(spark,
-            graft.queries.TempIndexDirs.jvmScoped("graft_semdedup", dir)) {
-            graft.functions.Dedup.dupCodebook(
-              spark.read.parquet(src), "vec_id", "embedding")
-          }
-          SarStreaming.vectorNearDupCandidates(rows, "vec_id",
-            "embedding", "ts", cents, threshold = 0.45, probes = 20).toDF()
-        case other => throw new IllegalArgumentException(other)
-      }
-    }
-
     val timer = new Bench.Timer(spark)
     def exec(name: String, dir: String): Double = {
       val wall = timer.run(s"[scale] $name @ $dir")(
-        if (name.startsWith("s_")) stream(name, dir)
-        else SparkEntry.queries(name)(spark, dir)).wall
+        SparkEntry.queries(name)(spark, dir)).wall
       // finished-stage shuffle files wait for driver GC, which a large
       // heap under scale corpora runs rarely (measured: the 5M tier
       // filled a 49-GB-free disk with dead shuffle files mid-suite);

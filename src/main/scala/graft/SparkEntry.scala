@@ -30,4 +30,18 @@ object SparkEntry {
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   lazy val oracleSql: Map[String, String] =
     all.flatMap(q => q.oracle.map(sql => q.name -> sql)).toMap
+
+  /** The query names of a comma-separated selector, in its order — the
+    * one parse behind the harness mains' name filters
+    * (SPARK_GRAFT_BENCH_ONLY, Verify's third argument,
+    * SPARK_GRAFT_SCALE_ONLY). A name that is not a declared query
+    * (a typo, an empty entry) fails with every unknown name listed,
+    * instead of silently selecting less — or nothing. */
+  def selectQueries(csv: String): Seq[String] = {
+    val names = csv.split(",", -1).toSeq
+    val unknown = names.filterNot(queries.contains)
+    require(unknown.isEmpty, "unknown query name(s): " +
+      unknown.map(n => s"'$n'").mkString(", "))
+    names
+  }
 }

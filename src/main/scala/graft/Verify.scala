@@ -13,7 +13,8 @@ object Verify {
     // (the correctness gate dumps the full set); diff the subset with
     // tools/local_verify.py --no-run --only=<names>
     val only: Option[Set[String]] =
-      if (args.length > 2) Some(args(2).split(",").toSet) else None
+      if (args.length > 2) Some(SparkEntry.selectQueries(args(2)).toSet)
+      else None
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // the canonical GraftSession config, so correctness runs exercise
     // the same plans (AQE, partition scaling, SQL functions) as users

@@ -244,9 +244,8 @@ case class BucketCosineHitsInt8(left: Expression, right: Expression,
 object BucketCosineHitsInt8 {
   import org.apache.spark.sql.GraftColumnBridge
 
-  /** THE phase-1 admission decision, shared by the batch expression and
-    * the streaming face (SarStreaming.vectorNearDupCandidates) so the
-    * gate constant and the eps margin cannot drift apart: integer dot
+  /** THE phase-1 admission decision, kept in one function so the gate
+    * constant and the eps margin live in one place: integer dot
     * in element order (products ≤ 127² with a long accumulator — exact
     * at any dim), admitted iff the quantized cosine clears
     * `threshold − eps_q − eps_m − 5e-5` (see the class scaladoc for why

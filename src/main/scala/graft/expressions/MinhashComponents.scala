@@ -9,8 +9,8 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** All `k` MinHash signature components of a text, per row, in one
-  * compiled pass — the streaming form of the batch
-  * `Dedup.minhashSignature` hash family, BIT-IDENTICAL by construction:
+  * compiled pass — the `Dedup.minhashSignature` hash family,
+  * BIT-IDENTICAL by construction:
   * component i = min over the text's word n-gram shingles of
   * `md5(⌊i/4⌋ ++ ":" ++ shingle)[8·(i%4) .. 8·(i%4)+8)` (lowercase hex,
   * fixed-width — string min equals numeric min). Output is an
@@ -20,21 +20,20 @@ import org.apache.spark.unsafe.types.UTF8String
   * semantics of `Dedup.minhashComponentRow`.
   *
   * Why a custom Expression (SURVEY §7.3 preference order (b)): the
-  * streaming near-dup path must compute the signature per arriving row
-  * (a groupBy would need its own watermark), and the HOF form pays
-  * twice — higher-order functions evaluate INTERPRETED (measured ~4×
-  * slower than codegen at sf0.1), and `transform` per component
-  * recomputes the seed-s md5 for every component sharing that seed (k=8
-  * components = 8 md5 calls per shingle where 2 suffice). This
-  * expression walks the shingles once, hashes each against the
-  * ⌈k/4⌉ seeds, and folds all k minima in that single pass —
-  * `s_neardup_stream`'s dominant cost.
+  * signature is computed per row (no explode + groupBy, so no
+  * exchange), and the HOF form pays twice — higher-order functions
+  * evaluate INTERPRETED (measured ~4× slower than codegen at sf0.1),
+  * and `transform` per component recomputes the seed-s md5 for every
+  * component sharing that seed (k=8 components = 8 md5 calls per
+  * shingle where 2 suffice). This expression walks the shingles once,
+  * hashes each against the ⌈k/4⌉ seeds, and folds all k minima in that
+  * single pass.
   *
   * Tokenization contract: words = `split(text, "\\s+")` with Spark's
   * limit −1 semantics (leading/trailing empty tokens preserved),
   * shingles = consecutive n-word windows joined by single spaces —
   * mirrored from TextAnalysis.words/shingles, and pinned bit-identical
-  * to the batch family by LlmFunctionsSpec. Distinctness is skipped on
+  * to the HOF formulation by ExpressionSpec. Distinctness is skipped on
   * purpose: min over a multiset equals min over its support.
   */
 case class MinhashComponents(child: Expression, k: Int, n: Int)

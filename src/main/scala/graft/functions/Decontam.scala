@@ -73,43 +73,6 @@ object Decontam {
       .select(col(idCol), col("n_overlap"), col("n_shingles"),
         col("contamination"), col("contaminated"))
 
-  /** Streaming-safe contamination scoring: the same per-document report
-    * as [[contamination]] but computed STATELESSLY — the benchmark's
-    * distinct shingle set is collected once and shipped as a literal
-    * array, and the overlap is `array_intersect` column math per row
-    * (no join, no aggregation), so the op runs inside a streaming query
-    * with zero state and no shuffle.
-    *
-    * The literal set costs O(|bench|) per ROW (`array_intersect`
-    * rebuilds its hash set per evaluation) plus |bench| strings in
-    * every serialized plan, so the guard is deliberately tight — past
-    * `maxBenchShingles` this formulation IS the degradation, and the
-    * op refuses loudly in favor of the batch join. Row-for-row equal
-    * to [[contamination]] on keyed input (pinned by spec).
-    */
-  def contaminationStateless(corpus: DataFrame, bench: DataFrame,
-      textCol: String, idCol: String, n: Int = 3,
-      flagThreshold: Double = 0.2,
-      maxBenchShingles: Int = 100000): DataFrame = {
-    val benchSh = benchShingleSet(bench, textCol, n)
-      .limit(maxBenchShingles + 1)
-      .collect().map(_.getString(0))
-    require(benchSh.length <= maxBenchShingles,
-      s"benchmark shingle set exceeds $maxBenchShingles (per-row cost " +
-        "is O(bench)) — use the batch contamination() join instead")
-    withScore(
-      corpus
-        .select(col(idCol), TextAnalysis.words(col(textCol)).as("__w"))
-        .select(col(idCol), array_distinct(
-          TextAnalysis.shinglesFromWords(col("__w"), n)).as("__shd"))
-        .filter(size(col("__shd")) > 0)
-        .select(col(idCol),
-          size(array_intersect(col("__shd"), typedlit(benchSh.toSeq)))
-            .cast("long").as("n_overlap"),
-          size(col("__shd")).as("n_shingles")),
-      flagThreshold)
-  }
-
   /** Corpus-level boilerplate mining: the `k` word-n-grams appearing in
     * the most documents (document frequency over per-doc DISTINCT
     * shingles, so a doc repeating a template line counts once). Total

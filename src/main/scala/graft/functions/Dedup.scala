@@ -65,7 +65,7 @@ object Dedup {
     * count, matching the explode form's row set (absent ⇒ no bands)
     * without re-evaluating the expensive expression in a pushed-down
     * null filter. Bit-identity with the expression family is pinned by
-    * StreamingSpec against the independent HOF formulation. */
+    * ExpressionSpec against the independent HOF formulation. */
   def minhashSignature(df: DataFrame, textCol: String, idCol: String,
       k: Int = 8, n: Int = 3): DataFrame = {
     // ⌈k/4⌉ md5 calls per shingle run per row in the scan's map tasks —
@@ -84,14 +84,14 @@ object Dedup {
   /** One per-row MinHash component — same hash family as
     * [[minhashSignature]], bit-identical values, as a PURE built-in
     * Column tree (array_min over transform'd shingles; null when the
-    * text has fewer than n words). Every production path (batch and
-    * streaming) runs the compiled one-pass
-    * [[graft.expressions.MinhashComponents]] instead — HOFs evaluate
-    * interpreted and this form pays k md5 calls per shingle where
-    * ⌈k/4⌉ suffice. It stays because it is the INDEPENDENT derivation
-    * of the family: StreamingSpec pins expression == HOF == the
-    * explode-era formulation, so a bug in the hand-written expression
-    * cannot hide behind its own implementation. */
+    * text has fewer than n words). Every production path runs the
+    * compiled one-pass [[graft.expressions.MinhashComponents]] instead
+    * — HOFs evaluate interpreted and this form pays k md5 calls per
+    * shingle where ⌈k/4⌉ suffice. It stays because it is the
+    * INDEPENDENT derivation of the family: ExpressionSpec pins
+    * expression == HOF == [[minhashSignature]], so a bug in the
+    * hand-written expression cannot hide behind its own
+    * implementation. */
   def minhashComponentRow(textCol: org.apache.spark.sql.Column, i: Int,
       n: Int = 3): org.apache.spark.sql.Column = {
     val sh = array_distinct(TextAnalysis.shingles(textCol, n))

@@ -34,30 +34,13 @@ object Dsir {
     * zero — possible only when scoring docs outside the raw corpus),
     * and the feature totals it derives from. */
   final case class HashedRatio(table: DataFrame, defaultMicro: Long,
-      hexChars: Int, targetTotal: Long, rawTotal: Long) {
+      hexChars: Int, targetTotal: Long, rawTotal: Long)
 
-    /** Driver-side (bucket → micro-nat λ) map for the stateless scorer.
-      * Unlike a vocabulary, the bucket table is ≤ 16^hexChars rows BY
-      * CONSTRUCTION, so collecting is always bounded — the guard is a
-      * belt against a widened hexChars, not against corpus growth. */
-    def collectLambda(maxBuckets: Int = 65536): Map[String, Long] = {
-      val rows = table.limit(maxBuckets + 1).collect()
-      require(rows.length <= maxBuckets,
-        s"bucket table exceeds $maxBuckets entries; score with " +
-          "importanceWeights (the joined batch path) instead")
-      rows.map(r => r.getString(0) -> r.getLong(1)).toMap
-    }
-  }
-
-  /** Hashed bigram feature buckets of a text: word 2-grams (the
-    * published DSIR feature space) hashed to their first-`hexChars`
-    * md5 hex prefix — one of 16^hexChars buckets. */
-  def featureBuckets(text: Column, hexChars: Int): Column =
-    featureBucketsFromWords(TextAnalysis.words(text), hexChars)
-
-  /** [[featureBuckets]] over an already-split word array — batch
-    * explode sites project `words(text)` first so the regex split runs
-    * once per row (r14, TextAnalysis.shinglesFromWords). */
+  /** Hashed bigram feature buckets of an already-split word array: word
+    * 2-grams (the published DSIR feature space) hashed to their
+    * first-`hexChars` md5 hex prefix — one of 16^hexChars buckets.
+    * Callers project `words(text)` first so the regex split runs once
+    * per row (r14, TextAnalysis.shinglesFromWords). */
   def featureBucketsFromWords(w: Column, hexChars: Int): Column =
     transform(TextAnalysis.shinglesFromWords(w, 2),
       s => substring(md5(s), 1, hexChars))
@@ -138,21 +121,4 @@ object Dsir {
       .groupBy(idCol)
       .agg(sum(col("__n") * col("__lam")).as("w_micro"),
         sum("__n").as("n_feats"))
-
-  /** Zero-state scoring column for streaming: the λ table as a LITERAL
-    * map folded over the feature buckets with integer accumulation —
-    * runs inside a streaming (or any stateless) projection and returns
-    * exactly [[importanceWeights]]' `w_micro`. NULL for docs with no
-    * bigram features. The literal-map lookup is O(buckets) per feature —
-    * acceptable because the table is 16^hexChars-bounded (see
-    * [[HashedRatio.collectLambda]]); the batch path scales via the
-    * broadcast join instead. */
-  def importanceWeightStateless(text: Column, lam: Map[String, Long],
-      defaultMicro: Long, hexChars: Int): Column = {
-    val feats = featureBuckets(text, hexChars)
-    val m = typedlit(lam)
-    val w = aggregate(feats, lit(0L),
-      (acc, b) => acc + coalesce(element_at(m, b), lit(defaultMicro)))
-    when(size(feats) > 0, w)
-  }
 }

@@ -38,19 +38,7 @@ object LangModel {
     * (`token`, `nll_micro` long), the OOV penalty in micro-nats, and the
     * training totals it derives from. */
   final case class Unigram(table: DataFrame, oovMicro: Long,
-      vocab: Long, total: Long) {
-
-    /** Driver-side (token → micro-nat NLL) map for the stateless scorer.
-      * Guarded: the literal-map lookup is O(vocab) per distinct token,
-      * so this is the small-model / streaming path, not the batch path. */
-    def collectVocab(maxVocab: Int = 20000): Map[String, Long] = {
-      val rows = table.limit(maxVocab + 1).collect()
-      require(rows.length <= maxVocab,
-        s"vocabulary exceeds $maxVocab entries; score with crossEntropy " +
-          "(the joined batch path) instead of a literal map")
-      rows.map(r => r.getString(0) -> r.getLong(1)).toMap
-    }
-  }
+      vocab: Long, total: Long)
 
   /** Half-up 4-dp rounding on a non-negative double (the shared
     * [[TextAnalysis.halfUpFloor]] idiom). */
@@ -197,22 +185,5 @@ object LangModel {
         round4(col("__cem").cast("double") / 1e6 /
           col("__len").cast("double")).as(ceCol),
         col("__len").cast("int").as("n_bigrams"))
-  }
-
-  /** Zero-state scoring column for streaming: the vocabulary as a
-    * LITERAL map folded over the token array with integer
-    * accumulation — runs inside a streaming (or any stateless)
-    * projection and returns exactly [[crossEntropy]]'s value. Null for
-    * token-less text. The literal-map lookup is O(vocab) per token —
-    * the [[Unigram.collectVocab]] cap bounds it; the batch path scales
-    * instead via the vocabulary join. */
-  def crossEntropyStateless(text: Column, vocab: Map[String, Long],
-      oovMicro: Long): Column = {
-    val toks = tokens(text)
-    val m = typedlit(vocab)
-    val ce = aggregate(toks, lit(0L),
-      (acc, t) => acc + coalesce(element_at(m, t), lit(oovMicro)))
-    when(size(toks) > 0,
-      round4(ce.cast("double") / 1e6 / size(toks).cast("double")))
   }
 }

@@ -77,29 +77,26 @@ object Spread {
     * such frames spread to full session parallelism as in r13
     * (measured at sf0.1: the exact pair baseline is 0.6 s at width 24
     * and 1.6 s at width 4, while every bytes-proportional per-row map
-    * is flat-to-faster at the byte-scaled width). Streaming frames pass
-    * through untouched (foreachBatch hands callers BATCH frames, which
-    * do take the spread). Purely plan-level — runs no job. */
-  def across(df: DataFrame, perRowCorpusScaled: Boolean = false): DataFrame =
-    if (df.isStreaming) df
-    else {
-      val spark = df.sparkSession
-      val target = spark.sparkContext.defaultParallelism
-      val plan = df.queryExecution.optimizedPlan
-      val alreadyDistributed = plan.exists {
-        case _: Aggregate | _: Join | _: Window | _: Sort | _: Distinct |
-            _: RepartitionOperation | _: GlobalLimit => true
-        case _ => false
-      }
-      if (alreadyDistributed) df
-      else {
-        val maxSplit = math.max(1L,
-          spark.sessionState.conf.filesMaxPartitionBytes)
-        spreadWidth(plan.stats.sizeInBytes, maxSplit, target,
-            bytesPerSpreadPartition, perRowCorpusScaled)
-          .fold(df)(df.repartition(_))
-      }
+    * is flat-to-faster at the byte-scaled width). Purely plan-level —
+    * runs no job. */
+  def across(df: DataFrame, perRowCorpusScaled: Boolean = false): DataFrame = {
+    val spark = df.sparkSession
+    val target = spark.sparkContext.defaultParallelism
+    val plan = df.queryExecution.optimizedPlan
+    val alreadyDistributed = plan.exists {
+      case _: Aggregate | _: Join | _: Window | _: Sort | _: Distinct |
+          _: RepartitionOperation | _: GlobalLimit => true
+      case _ => false
     }
+    if (alreadyDistributed) df
+    else {
+      val maxSplit = math.max(1L,
+        spark.sessionState.conf.filesMaxPartitionBytes)
+      spreadWidth(plan.stats.sizeInBytes, maxSplit, target,
+          bytesPerSpreadPartition, perRowCorpusScaled)
+        .fold(df)(df.repartition(_))
+    }
+  }
 
   /** The width decision alone, as a pure function (unit-testable —
     * the gate cannot fire at the test suite's local[4] where

@@ -907,9 +907,9 @@ object LlmQueries extends QueryPack {
     // delta = odd; at this SF the stamped depths are exhaustive
     // (k₁ = 4 cells even at sf0.1), so the screen provably equals the
     // exact join RESTRICTED to pairs touching the delta — which is
-    // what the oracle recomputes from scratch. The streaming
-    // vectorIngestSink drives exactly this screen per epoch
-    // (StreamingSpec capstone).
+    // what the oracle recomputes from scratch. IndexLifecycleSpec pins
+    // the screen's plan shape (pruned index reads) and the screen +
+    // append loop against the exact-join keep-first oracle.
     QueryDef("q_dedup_cosine_delta", (s, dir) => {
       import graft.sources.IvfStore
       val emb = Tables.load(s, dir, "embeddings")

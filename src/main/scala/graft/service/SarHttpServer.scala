@@ -76,6 +76,12 @@ class SarHttpServer(tenants: SarTenants, port: Int = 0,
     ssoDefaultPassword: Option[String] = None,
     uiBaseUrl: String = "") {
 
+  // The JDK server writes a response's headers and body as two TCP
+  // segments and leaves Nagle on: over a keep-alive connection the body
+  // then waits for the client's delayed ACK (~40 ms on every response
+  // under 64 KB). The JDK reads this property once, when its server
+  // config loads at the first HttpServer.create of the JVM.
+  System.setProperty("sun.net.httpserver.nodelay", "true")
   private val server = HttpServer.create(new InetSocketAddress(port), 0)
   server.createContext("/", handle _)
   // small pool: the Spark driver is thread-safe for concurrent queries,

@@ -437,10 +437,10 @@ object IvfStore {
     * [[resplitShardedCells]] the targeted maintenance op. Returns the
     * appended row count. */
   def appendShardedInt8(delta: DataFrame, idCol: String, vecCol: String,
-      path: String, extraMeta: Map[String, String] = Map.empty): Long = {
+      path: String): Long = {
     val spark = delta.sparkSession
     withMaintenanceLease(spark, path) {
-      val n = stageAppend(delta, idCol, vecCol, path, extraMeta)
+      val n = stageAppend(delta, idCol, vecCol, path)
       val fs = new org.apache.hadoop.fs.Path(path)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
       publishStagedAppend(fs, path)
@@ -457,14 +457,11 @@ object IvfStore {
     * the persisted codebooks and land (rows + advanced meta + `_APPEND`
     * seal) in `data-append-tmp`, touching NOTHING live. Split out so
     * the crash-injection spec can freeze an append exactly at the
-    * sealed-but-unpublished point. `extraMeta` entries ride the staged
-    * meta and publish ATOMICALLY with the rows (r12 — the streaming
-    * face's epoch watermark commits with its epoch's append, so a
-    * replayed micro-batch can never double-append; `fingerprint` is
-    * reserved and always computed). Returns the staged row count. */
+    * sealed-but-unpublished point. The advanced fingerprint rides the
+    * staged meta and publishes ATOMICALLY with the rows. Returns the
+    * staged row count. */
   private[graft] def stageAppend(delta: DataFrame, idCol: String,
-      vecCol: String, path: String,
-      extraMeta: Map[String, String] = Map.empty): Long = {
+      vecCol: String, path: String): Long = {
     val spark = delta.sparkSession
     withMaintenanceLease(spark, path) {
     val meta = readIndexMeta(spark, path).getOrElse(throw new
@@ -502,7 +499,7 @@ object IvfStore {
       .write.mode("overwrite").partitionBy("bucket")
       .parquet(stage)
     writeMeta(spark, s"$stage/meta",
-      (meta ++ extraMeta + ("fingerprint" -> newFp)).toSeq)
+      (meta + ("fingerprint" -> newFp)).toSeq)
     val out = fs.create(
       new org.apache.hadoop.fs.Path(s"$stage/_APPEND"))
     out.writeBytes("sealed")
@@ -806,8 +803,7 @@ object IvfStore {
     * to the index's own stamped build-time value. Returns (appended
     * row count, re-split cell ids). */
   def appendOrResplit(delta: DataFrame, idCol: String, vecCol: String,
-      path: String, targetBucket: Int = -1, maxK2: Int = 1024,
-      extraMeta: Map[String, String] = Map.empty)
+      path: String, targetBucket: Int = -1, maxK2: Int = 1024)
       : (Long, Seq[Int]) = {
     val spark = delta.sparkSession
     withMaintenanceLease(spark, path) {
@@ -823,7 +819,7 @@ object IvfStore {
           "target_bucket; pass targetBucket explicitly")
         stamped
       }
-    val n = appendShardedInt8(delta, idCol, vecCol, path, extraMeta)
+    val n = appendShardedInt8(delta, idCol, vecCol, path)
     (n, resplitShardedCells(spark, path, tb, maxK2))
     }
   }

@@ -75,56 +75,15 @@ class CorpusSpec extends AnyFunSuite {
       docs(9L -> "zz yy xx ww"), "doc_id", "text", model)
       .collect()
     assert(out.length == 1 && out(0).getLong(2) == 3L)
-  }
-
-  test("dsir stateless column equals the batch join path, in-stream too") {
-    val d = graft.queries.Tables
-      .load(spark, "/root/testdata/sf0.001", "documents")
-      .filter(col("doc_id") < 150)
-    val model = Dsir.trainHashedRatio(
-      d.filter(col("lang") === "en"), d, "text")
-    val lam = model.collectLambda()
-    val batch = Dsir.importanceWeights(d, "doc_id", "text", model)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val stateless = d.select(col("doc_id"),
-        Dsir.importanceWeightStateless(col("text"), lam,
-          model.defaultMicro, model.hexChars).as("w"))
-      .filter(col("w").isNotNull)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(stateless == batch && batch.nonEmpty)
-    // the defaultMicro branch (buckets outside the trained table — the
-    // path out-of-corpus streaming docs hit) must agree between the
-    // join default and the literal-map default: a 3-bigram model makes
-    // bucket absence certain, unlike the corpus-trained model above
+    // the defaultMicro branch: a 3-bigram model makes bucket absence
+    // certain, so every one of an out-of-corpus doc's 11 bigram
+    // features takes the default λ
     val tiny = Dsir.trainHashedRatio(docs(0L -> "aa bb cc"),
       docs(1L -> "aa bb", 2L -> "dd ee"), "text")
     val oov = docs(7777L -> "zz yy xx ww vv uu tt ss rr qq pp oo")
     val oovBatch = Dsir.importanceWeights(oov, "doc_id", "text", tiny)
       .head().getLong(1)
-    val oovStateless = oov.select(
-        Dsir.importanceWeightStateless(col("text"), tiny.collectLambda(),
-          tiny.defaultMicro, tiny.hexChars))
-      .head().getLong(0)
-    assert(oovBatch == oovStateless && oovBatch == 11L * tiny.defaultMicro)
-    // and inside a real streaming query
-    import graft.streaming.SarStreaming
-    val dir = java.nio.file.Files.createTempDirectory("graft_dsir").toString
-    try {
-      d.write.mode("overwrite").parquet(s"$dir/in")
-      val stream = SarStreaming.readEvents(spark,
-        spark.read.parquet(s"$dir/in").schema, s"$dir/in")
-      val out = SarStreaming.runToMemory(
-        stream.select(col("doc_id"),
-          Dsir.importanceWeightStateless(col("text"), lam,
-            model.defaultMicro, model.hexChars).as("w"))
-          .filter(col("w").isNotNull),
-        "dsir_out", org.apache.spark.sql.streaming.OutputMode.Append())
-      val streamed = out.collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(streamed == batch)
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
-    }
+    assert(oovBatch == 11L * tiny.defaultMicro)
   }
 
   // ---- UrlOps --------------------------------------------------------
@@ -241,36 +200,6 @@ class CorpusSpec extends AnyFunSuite {
     val r1 = run(1)
     assert(r1 == run(7) && r1.nonEmpty)
     assert(r1.values.forall(s => s >= 0.0 && s <= 1.0))
-  }
-
-  test("chunkDocs and classifier score run stateless inside a " +
-      "streaming query, row-equal to batch") {
-    import graft.functions.{Curation, QualityClassifier}
-    import graft.streaming.SarStreaming
-    val m = QualityClassifier.QualityModel(
-      Seq(3.0, -0.1, -5.0, 1.5), bias = -0.5)
-    val d = graft.queries.Tables
-      .load(spark, "/root/testdata/sf0.001", "documents")
-      .filter(col("doc_id") < 80)
-    val dir = java.nio.file.Files.createTempDirectory("graft_sel").toString
-    try {
-      d.write.mode("overwrite").parquet(s"$dir/in")
-      val stream = SarStreaming.readEvents(spark,
-        spark.read.parquet(s"$dir/in").schema, s"$dir/in")
-      def shape(df: org.apache.spark.sql.DataFrame) =
-        Curation.chunkDocs(df, "doc_id", "text", 32, 8)
-          .withColumn("q", QualityClassifier.score(col("chunk_text"), m))
-      val streamed = SarStreaming.runToMemory(shape(stream), "sel_out",
-          org.apache.spark.sql.streaming.OutputMode.Append())
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(3),
-          r.getDouble(4))).toSet
-      val batch = shape(d)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(3),
-          r.getDouble(4))).toSet
-      assert(streamed == batch && batch.nonEmpty)
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
-    }
   }
 
   // ---- JsonlStore ----------------------------------------------------

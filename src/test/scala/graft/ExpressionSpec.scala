@@ -20,6 +20,31 @@ class ExpressionSpec extends AnyFunSuite {
     assert(both.filter(col("native").isNull).count() == 0)
   }
 
+  test("minhash: HOF row form == minhashSignature == compiled expression") {
+    val docs = Tables.load(spark, "/root/testdata/sf0.001", "documents")
+    // per-row signature must match the batch explode+groupBy family
+    val sigBatch = graft.functions.Dedup
+      .minhashSignature(docs, "text", "doc_id")
+      .orderBy("doc_id").collect()
+      .map(r => r.getLong(0) -> (1 to 8).map(r.getString).toSeq).toMap
+    val sigRow = (0 until 8).foldLeft(docs) { (d, i) =>
+      d.withColumn(s"mh$i", graft.functions.Dedup
+        .minhashComponentRow(col("text"), i))
+    }.filter(col("mh0").isNotNull).orderBy("doc_id").collect()
+      .map(r => r.getLong(0) ->
+        (0 until 8).map(i => r.getString(r.fieldIndex(s"mh$i"))).toSeq).toMap
+    assert(sigRow == sigBatch)
+    // the compiled one-pass expression is bit-identical to the same
+    // family
+    val sigExpr = docs.withColumn("mhs", graft.expressions
+        .MinhashComponents.minhash_components(col("text"), 8, 3))
+      .filter(element_at(col("mhs"), 1).isNotNull)
+      .orderBy("doc_id").collect()
+      .map(r => r.getLong(0) -> r.getSeq[String](r.fieldIndex("mhs")).toSeq)
+      .toMap
+    assert(sigExpr == sigBatch)
+  }
+
   test("cosine_similarity is registered for SQL via GraftExtensions") {
     spark.sparkContext.setLogLevel("ERROR")
     GraftExtensions.register(spark) // suite order may reuse a session

@@ -290,49 +290,6 @@ class GovernanceSpec extends AnyFunSuite {
     assert(got == want)
   }
 
-  // ---- stateless / streaming decontamination ------------------------
-
-  test("contaminationStateless equals the batch join version") {
-    val docs500 = Tables.load(spark, "/root/testdata/sf0.001", "documents")
-    val bench = docs500.filter($"doc_id" % 37 === 0)
-    val corpus = docs500.filter($"doc_id" % 37 =!= 0)
-    def rows(df: DataFrame) = df.orderBy("doc_id").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2),
-        r.getDouble(3), r.getInt(4))).toSeq
-    val batch = rows(Decontam.contamination(
-      corpus, bench, "text", "doc_id"))
-    val stateless = rows(Decontam.contaminationStateless(
-      corpus, bench, "text", "doc_id"))
-    assert(stateless == batch && batch.nonEmpty)
-  }
-
-  test("contaminationStateless refuses an oversized benchmark") {
-    val bench = docs(1L -> "alpha beta gamma delta epsilon")
-    intercept[IllegalArgumentException] {
-      Decontam.contaminationStateless(docs(2L -> "alpha beta gamma"),
-        bench, "text", "doc_id", maxBenchShingles = 1)
-    }
-  }
-
-  test("contaminationStateless runs inside a streaming query, stateless") {
-    import graft.streaming.SarStreaming
-    val docs500 = Tables.load(spark, "/root/testdata/sf0.001", "documents")
-    val bench = docs500.filter($"doc_id" % 37 === 0)
-    val corpus = docs500.filter($"doc_id" % 37 =!= 0)
-    val dir = java.nio.file.Files.createTempDirectory("graft_decontam")
-      .toString
-    corpus.write.mode("overwrite").parquet(s"$dir/in")
-    val stream = SarStreaming.readEvents(spark,
-      spark.read.parquet(s"$dir/in").schema, s"$dir/in")
-    val out = SarStreaming.runToMemory(
-      Decontam.contaminationStateless(stream, bench, "text", "doc_id"),
-      "decontam_out", org.apache.spark.sql.streaming.OutputMode.Append())
-    val batch = Decontam.contamination(corpus, bench, "text", "doc_id")
-    assert(out.count() == batch.count())
-    assert(out.agg(sum("n_overlap")).head().getLong(0) ==
-      batch.agg(sum("n_overlap")).head().getLong(0))
-  }
-
   // ---- normalization --------------------------------------------------
 
   test("normalizeText canonicalizes case, punctuation, and whitespace") {

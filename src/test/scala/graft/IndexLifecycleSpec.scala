@@ -736,6 +736,121 @@ class IndexLifecycleSpec extends AnyFunSuite {
       IvfStore.corpusFingerprint(union, "doc_id"))
   }
 
+  // ------------------------------------------- delta screen
+  test("delta screen: index reads are partition- or column-pruned") {
+    // Dedup.cosineDupPairsDeltaIndexInt8 (q_dedup_cosine_delta) must
+    // stay DELTA-scale against a large index: every read of the index
+    // `data` directory is partition-pruned (PartitionFilters on
+    // `bucket`) or column-pruned to the narrow probe columns — the
+    // full-index (id, embedding) scan must never appear in its plans
+    val emb = spark.range(0, 400).selectExpr("id AS vec_id").selectExpr(
+      "vec_id",
+      """transform(sequence(0, 15), d -> cast(
+          (pmod(xxhash64(vec_id, d), 2001) - 1000) / 500.0 as float))
+        AS embedding""")
+    val (base, delta) = (emb.filter(col("vec_id") % 2 === 0),
+      emb.filter(col("vec_id") % 2 === 1))
+    val (coarse, fine) = Similarity.trainShardedCodebook(base, "vec_id",
+      "embedding", targetBucket = 32)
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft_planshape_ivf").toString
+    IvfStore.writeShardedInt8(base, coarse, fine, "vec_id", "embedding",
+      dir, pCoarse = coarse.count().toInt, pFine = 8, targetBucket = 32)
+    val pairs = Dedup.cosineDupPairsDeltaIndexInt8(spark, dir, delta,
+      "vec_id", "embedding", threshold = 0.9)
+    pairs.collect() // execute so the adaptive plan is final
+    val plan = pairs.queryExecution.executedPlan.toString
+    // scan A / scan C: bucket-pruned reads of the data dir
+    assert(plan.contains("PartitionFilters") && plan.contains("bucket"),
+      s"no partition-pruned index read in the screen plan:\n$plan")
+    // scan B reads the narrow probe columns only — no plan node may
+    // scan the data dir with BOTH the embedding column and no bucket
+    // partition filter (that would be the corpus-scale read the delta
+    // screen exists to avoid). Each FileScan renders as ONE line in
+    // toString, carrying Location + PartitionFilters + ReadSchema — a
+    // single-line test, so a neighboring scan's fields cannot bleed in.
+    val dataScans = plan.linesIterator
+      .filter(l => l.contains("FileScan") && l.contains(s"$dir/data"))
+      .toSeq
+    assert(dataScans.nonEmpty, s"no index data scans found in:\n$plan")
+    val fullScan = dataScans.filter(l =>
+      l.contains("embedding") && l.contains("PartitionFilters: []"))
+    assert(fullScan.isEmpty,
+      s"unpruned full-width index scan in screen plan:\n${fullScan.mkString("\n")}")
+  }
+
+  test("delta screen + append over two batches == exact keep-first oracle") {
+    // clusters {10k, 10k+5, 10k+7, 10k+8, 10k+9} (tiny per-id jitter):
+    // 10k and 10k+8 are even -> BASE (indexed at build); the odd
+    // members alternate between d1 (id%4==1) and d2 (id%4==3) with k's
+    // parity, so the screen sees batch-vs-index, batch-vs-earlier-
+    // batch-survivor AND in-batch pairs across the two batches
+    val emb = spark.range(0, 600).selectExpr(
+        "id AS vec_id",
+        "if(id % 10 in (5, 7, 8, 9), id - id % 10, id) AS sid")
+      .selectExpr("vec_id",
+        """transform(sequence(0, 31), d -> cast(
+            (pmod(xxhash64(sid, d, 7), 2001) - 1000) / 500.0
+            + if(sid <> vec_id,
+                (pmod(xxhash64(vec_id, d, 8), 21) - 10) / 1000.0, 0.0)
+          as float)) AS embedding""")
+    val base = emb.filter(col("vec_id") % 2 === 0)
+    val d1 = emb.filter(col("vec_id") % 4 === 1)
+    val d2 = emb.filter(col("vec_id") % 4 === 3)
+    val threshold = 0.9
+    val (coarse, fine) = Similarity.trainShardedCodebook(base, "vec_id",
+      "embedding", targetBucket = 32)
+    // exhaustive depths (k1 is small on this fixture), so the screen's
+    // recall provably equals the exact join and the oracle is exact
+    val idx = java.nio.file.Files
+      .createTempDirectory("graft_ingest_ivf_b").toString
+    IvfStore.writeShardedInt8(base, coarse, fine, "vec_id",
+      "embedding", idx, pCoarse = coarse.count().toInt, pFine = 64,
+      targetBucket = 32)
+    def storedIds(d: String): Set[Long] =
+      spark.read.parquet(s"$d/data").select("vec_id").collect()
+        .map(_.getLong(0)).toSet
+    // ---- the exact-join oracle, applied with the documented loser
+    // rule: batch row loses to any qualifying indexed partner and to
+    // any smaller-id batch peer (pairs normalized a < b)
+    val exactPairs = pairs(Dedup.cosineDupPairsExact(emb, "vec_id",
+      "embedding", threshold))
+    def exactStep(indexed: Set[Long], bids: Set[Long]): Set[Long] = {
+      val losers = exactPairs.collect {
+        case (a, b) if bids(a) && indexed(b) => a
+        case (a, b) if bids(b) && (indexed(a) || bids(a)) => b
+      }
+      bids -- losers
+    }
+    val baseIds = base.collect().map(_.getLong(0)).toSet
+    val d1Ids = d1.collect().map(_.getLong(0)).toSet
+    val d2Ids = d2.collect().map(_.getLong(0)).toSet
+    val surv1 = exactStep(baseIds, d1Ids)
+    val surv2 = exactStep(baseIds ++ surv1, d2Ids)
+    assert(surv1 != d1Ids && surv2 != d2Ids,
+      "fixture must actually screen something out")
+    assert((d1Ids -- surv1).nonEmpty && (d2Ids -- surv2).nonEmpty)
+    // ---- the screen + append composition, driven batch by batch
+    // (independent reimplementation of the loser rule)
+    def batchStep(batch: org.apache.spark.sql.DataFrame): Set[Long] = {
+      val bids = batch.select("vec_id").collect().map(_.getLong(0)).toSet
+      val screened = pairs(Dedup.cosineDupPairsDeltaIndexInt8(spark, idx,
+        batch, "vec_id", "embedding", threshold))
+      val losers = screened.map { case (a, b) =>
+        if (bids(a) && !bids(b)) a else b }
+      val surv = bids -- losers
+      IvfStore.appendShardedInt8(
+        batch.filter(col("vec_id").isin(surv.toSeq: _*)),
+        "vec_id", "embedding", idx)
+      surv
+    }
+    assert(batchStep(d1) == surv1,
+      "batch screen diverged from the exact oracle on batch 1")
+    assert(batchStep(d2) == surv2,
+      "batch screen diverged from the exact oracle on batch 2")
+    assert(storedIds(idx) == baseIds ++ surv1 ++ surv2)
+  }
+
   // ------------------------------------------- r12: single-writer lease
   test("maintenance lease: a second concurrent maintenance run refuses " +
       "loudly; a crashed run's stale lease is taken over, healed, and " +

@@ -67,6 +67,32 @@ class SarHttpServerSpec extends AnyFunSuite {
     .replace("\\", "\\\\").replace("\"", "\\\"")
     .replace("\n", "\\n").replace("\r", "\\r").replace("\t", "\\t") + "\""
 
+  test("keep-alive responses are not held for the delayed ACK") {
+    // 21 sequential GETs over one HTTP/1.1 connection: median < 20 ms
+    val tenants = new SarTenants(spark,
+      Files.createTempDirectory("graft_http_nodelay").toString)
+    val server = new SarHttpServer(tenants)
+    val port = server.start()
+    try {
+      // the client svcbench drives the service with: one pooled
+      // keep-alive connection, requests strictly one after another
+      val client = java.net.http.HttpClient.newBuilder()
+        .version(java.net.http.HttpClient.Version.HTTP_1_1).build()
+      val req = java.net.http.HttpRequest.newBuilder(
+        java.net.URI.create(s"http://localhost:$port/api/v1/health")).build()
+      val ms = (1 to 21).map { _ =>
+        val t0 = System.nanoTime()
+        val resp = client.send(req,
+          java.net.http.HttpResponse.BodyHandlers.ofString())
+        assert(resp.statusCode == 200 && resp.body == """{"status":"ok"}""")
+        (System.nanoTime() - t0) / 1e6
+      }.sorted
+      // a Nagle stall costs ~40 ms a response, so it moves the median
+      // past the bound; host noise alone does not
+      assert(ms(10) < 20.0, s"median ${ms(10)} ms; sorted: $ms")
+    } finally server.stop()
+  }
+
   test("HTTP shell: files / data / statistics round-trip the service") {
     val base = Files.createTempDirectory("graft_http").toString
     val tenants = new SarTenants(spark, base)

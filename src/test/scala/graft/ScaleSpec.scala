@@ -216,4 +216,24 @@ class ScaleSpec extends AnyFunSuite {
       assert(ScaleBench.HeavyChains.contains(n), s"stale exemption: $n")
     }
   }
+
+  test("selectQueries: an unknown query name fails the run, listing it") {
+    // the one name filter behind SPARK_GRAFT_BENCH_ONLY, Verify's third
+    // argument and SPARK_GRAFT_SCALE_ONLY: declared names come back in
+    // the selector's own order
+    assert(SparkEntry.selectQueries("q_ngram_jaccard_prefix,q1_agg") ==
+      Seq("q_ngram_jaccard_prefix", "q1_agg"))
+    // a typo (or an empty entry) fails with every unknown name listed,
+    // instead of silently running less — or nothing
+    val e = intercept[IllegalArgumentException] {
+      SparkEntry.selectQueries("q_ngram_jacard,q1_agg,,q_nope")
+    }
+    assert(e.getMessage.contains("'q_ngram_jacard'") &&
+      e.getMessage.contains("''") && e.getMessage.contains("'q_nope'") &&
+      !e.getMessage.contains("'q1_agg'"), e.getMessage)
+    // ScaleBench's default set is all declared queries
+    ScaleBench.HeavyChains.foreach { n =>
+      assert(SparkEntry.queries.contains(n), s"undeclared heavy chain: $n")
+    }
+  }
 }

@@ -138,6 +138,29 @@ class SpreadSafetySpec extends AnyFunSuite {
       Dedup.simhash64Blocks(d, "text", "doc_id"))
   }
 
+  test("the spread width decision is data-scaled") {
+    // the width decision, at the bench session's shape (target = 32,
+    // 128 MB splits, 32 KB/part default — the gate cannot fire live at
+    // the suite's local[4], where scanTasks·4 >= 4 always):
+    import graft.functions.Spread.spreadWidth
+    val mb = 1L << 20
+    // a single-split 600 KB corpus spreads to ~bytes/32 KB lanes
+    assert(spreadWidth(BigInt(600 * 1024), 128 * mb, 32, 32768,
+      perRowCorpusScaled = false) == Some(18))
+    // tiny input: the 4·scanTasks floor keeps a genuine 4× spread
+    assert(spreadWidth(BigInt(10 * 1024), 128 * mb, 32, 32768,
+      perRowCorpusScaled = false) == Some(4))
+    // per-row-corpus-scaled sites (pair scans) take full parallelism
+    assert(spreadWidth(BigInt(600 * 1024), 128 * mb, 32, 32768,
+      perRowCorpusScaled = true) == Some(32))
+    // a corpus that already scans wide passes through (scale no-op)
+    assert(spreadWidth(BigInt(2L * 1024 * mb), 128 * mb, 32, 32768,
+      perRowCorpusScaled = false).isEmpty)
+    // unknown stats (huge) pass through — the conservative direction
+    assert(spreadWidth(BigInt(Long.MaxValue), 128 * mb, 32, 32768,
+      perRowCorpusScaled = false).isEmpty)
+  }
+
   test("exact cosine pairs are input-partitioning-independent") {
     val one = snap(Dedup.cosineDupPairsExact(
       vecs.repartition(1), "vec_id", "embedding", threshold = 0.2))
